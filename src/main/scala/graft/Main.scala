@@ -19,10 +19,23 @@ import graft.pipeline.Transform
   * for reuse on the next wave.
   */
 object Main {
-  def main(args: Array[String]): Unit = {
-    val opts = args.sliding(2, 2).collect { case Array(k, v) if k.startsWith("--") =>
-      k.drop(2) -> v
+  /** The documented flags, each taking one value. */
+  private val Flags = Set("input", "config", "codebook", "out", "format", "save-config")
+
+  /** `--flag value` pairs → flag map; an unknown flag, a flag without a
+    * value or a stray value fails, naming it. */
+  def parseArgs(args: Seq[String]): Map[String, String] = {
+    def flag(k: String) = k.startsWith("--") && Flags(k.drop(2))
+    args.grouped(2).map {
+      case Seq(k, v) if flag(k) && !v.startsWith("--") => k.drop(2) -> v
+      case k +: _ if flag(k) => throw new IllegalArgumentException(s"$k needs a value")
+      case k +: _ => throw new IllegalArgumentException(
+        s"unknown argument $k (flags: ${Flags.toSeq.sorted.map("--" + _).mkString(" ")})")
     }.toMap
+  }
+
+  def main(args: Array[String]): Unit = {
+    val opts = parseArgs(args.toSeq)
     val input = opts.getOrElse("input",
       sys.error("--input <file.csv|.xlsx|.parquet> is required"))
     val outDir = opts.getOrElse("out", "graft_out")

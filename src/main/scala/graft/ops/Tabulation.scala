@@ -28,15 +28,16 @@ object Tabulation {
   private def withPctOfTotal(
       counts0: DataFrame, countCol: String, pctName: String, decimals: Int): DataFrame = {
     // counts is summary-sized and read twice (total + projection):
-    // snapshot it so the full-data aggregation runs once. An eager
-    // localCheckpoint, not persist(): the blocks are released by the
-    // ContextCleaner when the frame goes out of scope, where persist()
-    // would pin one summary frame in the cache manager per call with
-    // no release path (accumulating across a long-lived session).
-    // Tradeoffs, accepted for a SUMMARY-sized frame: the snapshot is
-    // eager (building the tabulation runs its aggregation immediately)
-    // and checkpoint blocks carry no lineage (an executor loss while
-    // they're referenced fails the action — re-run the summary query).
+    // snapshot it so the full-data aggregation runs once. A
+    // localCheckpoint (the default lazy Reuse.barrier), not persist():
+    // the blocks are released by the ContextCleaner when the frame goes
+    // out of scope, where persist() would pin one summary frame in the
+    // cache manager per call with no release path (accumulating across
+    // a long-lived session). The aggregation runs at the first action
+    // that consumes the tabulation, not while it is built. Tradeoff,
+    // accepted for a SUMMARY-sized frame: checkpoint blocks carry no
+    // lineage (an executor loss while they're referenced fails the
+    // action — re-run the summary query).
     // Corpus-scale frames must use persist + an explicit release
     // (Transform.runReleasable), never this.
     val counts = counts0.reuseBarrier()

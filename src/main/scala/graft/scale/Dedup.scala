@@ -824,32 +824,30 @@ object Dedup {
     * and each round is a pair of co-partitioned shuffles. Converges when
     * no label changes; `maxIter` bounds pathological chains.
     */
-  /** @param checkEvery propagation steps per convergence check: labels
+  /** Hybrid cutover: the VERIFIED near-dup pair set is the duplicate
+    * mass post-banding/post-verify — usually dwarfed by the corpus.
+    * When it fits the [[DriverFold]] budget, components are solved with
+    * driver union-find in O(E·α(E)) and ONE broadcast join, replacing
+    * an O(cluster diameter) loop of Spark jobs whose fixed per-job cost
+    * dominates. Past the budget — or for id types with no driver
+    * ordering — the distributed min-label propagation below takes over
+    * (the 100 TB path; same labels either way: min reachable id).
+    *
+    * @param checkEvery propagation steps per convergence check: labels
     *        only shrink, so chaining a few lazy steps between count()
     *        actions trades (at most checkEvery−1) redundant cheap rounds
     *        after the fixed point for checkEvery× fewer Spark actions —
     *        the dominant cost of shallow (2–3 hop) near-dup clusters.
     *        2 measured fastest on the sf0.1 near-dup graph (one chain
     *        reaches the fixed point; 3 adds a wasted round per chain).
-    * @param maxDriverPairs hybrid cutover: the VERIFIED near-dup pair
-    *        set is the duplicate mass post-banding/post-verify — usually
-    *        dwarfed by the corpus. When it fits this budget (collected
-    *        via one limit-pushed job; default 2M pairs ≈ tens of MB),
-    *        components are solved with driver union-find in O(E·α(E))
-    *        and ONE broadcast join, replacing an O(cluster diameter)
-    *        loop of Spark jobs whose fixed per-job cost dominates.
-    *        Past the budget — or for id types with no driver ordering —
-    *        the distributed min-label propagation below takes over (the
-    *        100 TB path; same labels either way: min reachable id).
-    *        `<= 0` forces the distributed path.
     * @throws IllegalStateException when maxIter is reached with labels
     *         still changing — a silently partially-merged clustering
     *         would make downstream dedup keep duplicate representatives.
     */
   def clusters(
       ids: DataFrame, idCol: String, pairs: DataFrame, maxIter: Int = 20,
-      checkEvery: Int = 2, maxDriverPairs: Int = 2000000): DataFrame = {
-    val (labels, local) = edgeLabels(pairs, maxIter, checkEvery, maxDriverPairs)
+      checkEvery: Int = 2): DataFrame = {
+    val (labels, local) = edgeLabels(pairs, maxIter, checkEvery)
     ids.select(graft.ops.Cleaning.qcol(idCol).as("id"))
       .join(if (local) broadcast(labels) else labels, Seq("id"), "left")
       .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
@@ -1133,8 +1131,8 @@ object Dedup {
     */
   def nonRepresentatives(
       pairs: DataFrame, maxIter: Int = 20,
-      checkEvery: Int = 2, maxDriverPairs: Int = 2000000): DataFrame = {
-    val (labels, local) = edgeLabels(pairs, maxIter, checkEvery, maxDriverPairs)
+      checkEvery: Int = 2): DataFrame = {
+    val (labels, local) = edgeLabels(pairs, maxIter, checkEvery)
     val nr = labels.filter(col("id") =!= col("cluster")).select(col("id"))
     if (local) broadcast(nr) else nr
   }
@@ -1145,19 +1143,14 @@ object Dedup {
     */
   private def edgeLabels(
       pairs: DataFrame, maxIter: Int,
-      checkEvery: Int, maxDriverPairs: Int): (DataFrame, Boolean) = {
+      checkEvery: Int): (DataFrame, Boolean) = {
     require(checkEvery >= 1, s"checkEvery must be >= 1, got $checkEvery")
-    if (maxDriverPairs > 0) {
-      val idType = pairs.schema("id_a").dataType
-      if (driverOrdering(idType).isDefined) {
-        val head = pairs.select(col("id_a"), col("id_b"))
-          .limit(maxDriverPairs + 1).collect()
-        if (head.length <= maxDriverPairs)
-          return (edgeLabelsDriver(pairs.sparkSession, head, idType), true)
-        // else: fell past the budget — the rows fetched are a strict
-        // subset of the pair set, discard and run distributed below
+    val idType = pairs.schema("id_a").dataType
+    if (driverOrdering(idType).isDefined)
+      DriverFold.collect(pairs, col("id_a"), col("id_b")) match {
+        case Some(rows) => return (edgeLabelsDriver(pairs.sparkSession, rows, idType), true)
+        case None => () // over budget: run distributed below
       }
-    }
     val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
@@ -1206,17 +1199,20 @@ object Dedup {
           "components wider than maxIter hops would be left partially merged; raise maxIter")
     }
     // Cut the returned plan loose from the iteration cache: snapshot the
-    // converged labels with an eager localCheckpoint (one scan of the
+    // converged labels with an EAGER localCheckpoint (one scan of the
     // already-cached frame; blocks are lineage-free and RELEASED by the
     // ContextCleaner once unreferenced — unlike persist(), which pins
     // the frame in the cache manager until someone calls unpersist),
     // then drop both iteration caches HERE instead of leaking them to
-    // the caller. The label frame is proportional to the duplicate mass
-    // (edge-touched ids only), not the corpus. Tradeoff: checkpoint
+    // the caller. It must be eager, not the lazy Reuse.barrier: a lazy
+    // snapshot would first run at the caller's action, after the
+    // unpersist below, and recompute the whole min-label loop. The
+    // label frame is proportional to the duplicate mass (edge-touched
+    // ids only), not the corpus. Tradeoff: checkpoint
     // blocks carry no lineage, so losing an executor that holds one
     // fails the downstream action (re-run the query) — accepted over a
     // persist the caller can never release.
-    val snap = labels.reuseBarrier()
+    val snap = labels.localCheckpoint()
     if (labelsCached != null) labelsCached.unpersist()
     edges.unpersist()
     (snap, false)
@@ -1312,8 +1308,7 @@ object Dedup {
       k: Int = 5, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.7, seed: Long = 42L,
       maxBucketSize: Int = DefaultMaxBucketSize,
-      maxIter: Int = 20, checkEvery: Int = 2,
-      maxDriverPairs: Int = 2000000): DataFrame = {
+      maxIter: Int = 20, checkEvery: Int = 2): DataFrame = {
     val pairs = nearDupMinhash(df, idCol, textCol, k, numHashes, bands, threshold, seed, maxBucketSize)
     // anti-join on the DROP set (bounded by the duplicate mass, a
     // broadcast local relation in the driver-CC path) instead of a
@@ -1321,7 +1316,7 @@ object Dedup {
     // the corpus a second time inside the labels frame, doubling the
     // upstream scan at every action
     df.join(
-      nonRepresentatives(pairs, maxIter, checkEvery, maxDriverPairs)
+      nonRepresentatives(pairs, maxIter, checkEvery)
         .select(col("id").as(idCol)),
       Seq(idCol), "left_anti")
   }
@@ -1869,11 +1864,10 @@ object Dedup {
       nlist: Int = 256, threshold: Double = 0.95,
       seed: Long = 42L, maxCellSize: Int = DefaultMaxBucketSize,
       maxIter: Int = 20, checkEvery: Int = 2,
-      maxDriverPairs: Int = 2000000,
       centroids0: Option[Array[Array[Double]]] = None): DataFrame = {
     val pairs = semanticDedupPairs(df, idCol, vecCol, nlist, threshold, seed, maxCellSize, centroids0)
     df.join(
-      nonRepresentatives(pairs, maxIter, checkEvery, maxDriverPairs)
+      nonRepresentatives(pairs, maxIter, checkEvery)
         .select(col("id").as(idCol)),
       Seq(idCol), "left_anti")
   }

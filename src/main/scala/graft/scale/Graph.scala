@@ -46,35 +46,37 @@ object Graph {
     * frame (|nodes| rows of two longs) stays a minor cost. */
   val CheckpointEvery = 4
 
-  /** Hybrid cutover for the iterative operators (the [[Dedup.clusters]]
-    * `maxDriverPairs` precedent, r15): when the PREPARED edge frame
-    * (deduped, self-loop-free longs) fits this budget, the power/
-    * min-plus/mutual-recursion loops fold on the DRIVER in
-    * O(iterations·|edges|) — replacing 3–5 Spark jobs per iteration
-    * (join, aggregate, left join back, periodic checkpoint) whose fixed
-    * per-job cost dominates on any graph small enough to collect. Past
-    * the budget (the 1e10-edge crawl graph) the distributed loop below
-    * is the path, unchanged. Identical results: every step is long
-    * sums (order-free), positive-operand integer division, and
-    * multiplyExact/addExact replaying ANSI's overflow error —
-    * spec-pinned driver ≡ distributed. Override per session via
-    * `spark.graft.graph.maxDriverEdges` (`<= 0` forces distributed). */
-  private val DefaultMaxDriverEdges = 2000000L
+  /** Hybrid cutover for the iterative operators: when the PREPARED
+    * edge frame (deduped, self-loop-free longs) fits the
+    * [[DriverFold]] budget, the power/min-plus/mutual-recursion loops
+    * fold on the DRIVER in O(iterations·|edges|) — replacing 3–5 Spark
+    * jobs per iteration (join, aggregate, left join back, periodic
+    * checkpoint). Past the budget (the 1e10-edge crawl graph) the
+    * distributed loop is the path, unchanged. Identical results: every
+    * step is long sums (order-free), positive-operand integer division,
+    * and multiplyExact/addExact replaying ANSI's overflow error —
+    * spec-pinned driver ≡ distributed. Caller-supplied side frames
+    * (seeds, teleport, warm-start ranks) go through the same budget. */
+  private type NodeMap = java.util.HashMap[Long, java.lang.Long]
 
-  private def maxDriverEdges(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("spark.graft.graph.maxDriverEdges")
-      .map(_.toLong).getOrElse(DefaultMaxDriverEdges)
-
-  /** Collect a prepared long-typed edge frame when it fits the driver
-    * budget; None → caller runs the distributed loop. The limit-pushed
-    * count never scans past budget+1 rows. */
-  private def collectEdges(
-      ec: DataFrame, cols: Seq[String]): Option[Array[org.apache.spark.sql.Row]] = {
-    val budget = maxDriverEdges(ec)
-    if (budget <= 0) None
-    else if (ec.limit((budget + 1).min(Int.MaxValue.toLong).toInt).count() > budget) None
-    else Some(ec.select(cols.map(col): _*).collect())
-  }
+  /** A caller-supplied (node, value) frame as a per-node max map — the
+    * groupBy(max) + left-join semantics of the distributed prologue;
+    * Some(None) when the frame is absent, None when it is over the
+    * fold budget (→ distributed). */
+  private def nodeMaxMap(df: Option[DataFrame], valueCol: String): Option[Option[NodeMap]] =
+    df.fold[Option[Option[NodeMap]]](Some(None)) { d =>
+      DriverFold.collect(d, col("node"), col(valueCol)).map { rows =>
+        val m = new NodeMap()
+        rows.foreach { r =>
+          if (!r.isNullAt(0) && !r.isNullAt(1)) {
+            val k = r.getLong(0); val v = r.getLong(1)
+            val cur = m.get(k)
+            if (cur == null || v > cur) m.put(k, v)
+          }
+        }
+        Some(m)
+      }
+    }
 
   /** (node, rank_micro) frame from a driver fold — the distributed
     * loop's exact column set/types. */
@@ -199,7 +201,7 @@ object Graph {
     * and double-count contributions in every subsequent iteration —
     * the same hygiene the operator applies to the edge set. */
   /** Driver-side replay of the power iteration over the collected edge
-    * frame — the [[maxDriverEdges]] hybrid. The arithmetic is the EXACT
+    * frame — the [[DriverFold]] hybrid. The arithmetic is the EXACT
     * integer chain the distributed loop runs (contributions
     * `(rank·w) div outw` summed per destination, the damped teleport
     * epilogue), including the dedup/zero-fill join semantics for the
@@ -207,7 +209,11 @@ object Graph {
   private def rankFoldLocal(
       ec: DataFrame, iterations: Int, dampingPct: Int,
       teleportOpt: Option[DataFrame], initOpt: Option[DataFrame]): Option[DataFrame] =
-    collectEdges(ec, Seq("src", "dst", "w")).map { rows =>
+    for {
+      rows <- DriverFold.collect(ec, col("src"), col("dst"), col("w"))
+      tm <- nodeMaxMap(teleportOpt, "teleport_micro")
+      rm <- nodeMaxMap(initOpt, "rank_micro")
+    } yield {
       val edges = rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       val outw = new java.util.HashMap[Long, java.lang.Long]()
       val nodeSet = new java.util.LinkedHashSet[java.lang.Long]()
@@ -216,35 +222,20 @@ object Graph {
         outw.put(s2, if (cur == null) w else Math.addExact(cur, w))
         nodeSet.add(s2); nodeSet.add(d2)
       }
-      // max-deduped caller frame → per-node map (the groupBy(max) +
-      // left-join semantics of the distributed prologue)
-      def dedupMax(df: DataFrame, valueCol: String): java.util.HashMap[Long, java.lang.Long] = {
-        val m = new java.util.HashMap[Long, java.lang.Long]()
-        df.select(col("node"), col(valueCol)).collect().foreach { r =>
-          if (!r.isNullAt(0) && !r.isNullAt(1)) {
-            val k = r.getLong(0); val v = r.getLong(1)
-            val cur = m.get(k)
-            if (cur == null || v > cur) m.put(k, v)
-          }
-        }
-        m
-      }
       val t = new java.util.HashMap[Long, java.lang.Long]()
-      teleportOpt match {
+      tm match {
         case None => nodeSet.forEach(n => t.put(n, 1000000L))
-        case Some(tp) =>
-          val tm = dedupMax(tp, "teleport_micro")
+        case Some(m) =>
           nodeSet.forEach { n =>
-            val v = tm.get(n); t.put(n, if (v == null) 0L else v)
+            val v = m.get(n); t.put(n, if (v == null) 0L else v)
           }
       }
       var ranks = new java.util.HashMap[Long, java.lang.Long]()
-      initOpt match {
+      rm match {
         case None => nodeSet.forEach(n => ranks.put(n, t.get(n)))
-        case Some(r0) =>
-          val rm = dedupMax(r0, "rank_micro")
+        case Some(m) =>
           nodeSet.forEach { n =>
-            val v = rm.get(n); ranks.put(n, if (v == null) t.get(n) else v)
+            val v = m.get(n); ranks.put(n, if (v == null) t.get(n) else v)
           }
       }
       val dp = dampingPct.toLong; val kp = (100 - dampingPct).toLong
@@ -368,7 +359,7 @@ object Graph {
         col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst")).distinct()
       .reuseBarrier()
-    // driver fold when the graph fits the budget (see maxDriverEdges):
+    // driver fold when the graph fits the budget (see DriverFold):
     // the mutual recursion is 2 gathers + 2 rescales per iteration —
     // ~6 Spark jobs of fixed overhead each on a collectable graph
     hitsFoldLocal(e, iterations) match {
@@ -389,12 +380,12 @@ object Graph {
   }
 
   /** Driver-side replay of the HITS mutual recursion — the
-    * [[maxDriverEdges]] hybrid: per half-step, gather (long sums,
+    * [[DriverFold]] hybrid: per half-step, gather (long sums,
     * order-free), zero-fill over the node set, rescale by
     * `raw div (max div 1e6 + 1)` — the exact integer chain
     * [[hitsHalfStep]] runs distributed. */
   private def hitsFoldLocal(e: DataFrame, iterations: Int): Option[DataFrame] =
-    collectEdges(e, Seq("src", "dst")).map { rows =>
+    DriverFold.collect(e, col("src"), col("dst")).map { rows =>
       val edges = rows.map(r => (r.getLong(0), r.getLong(1)))
       val nodeSet = new java.util.LinkedHashSet[java.lang.Long]()
       edges.foreach { case (s2, d2) => nodeSet.add(s2); nodeSet.add(d2) }
@@ -494,17 +485,20 @@ object Graph {
     * lineage. Output is |nodes| rows.
     */
   /** Driver-side replay of the bounded-hop min-plus iteration — the
-    * [[maxDriverEdges]] hybrid; seeds outside the edge set are ignored
-    * (the distributed left-join semantics). */
+    * [[DriverFold]] hybrid (the seeds frame is collected under the same
+    * budget); seeds outside the edge set are ignored (the distributed
+    * left-join semantics). */
   private def seedDistanceFoldLocal(
       e: DataFrame, seeds: DataFrame, maxHops: Int): Option[DataFrame] =
-    collectEdges(e, Seq("src", "dst")).map { rows =>
+    for {
+      rows <- DriverFold.collect(e, col("src"), col("dst"))
+      seedRows <- DriverFold.collect(seeds, col("node").cast("long"))
+    } yield {
       val edges = rows.map(r => (r.getLong(0), r.getLong(1)))
       val nodeSet = new java.util.LinkedHashSet[java.lang.Long]()
       edges.foreach { case (s2, d2) => nodeSet.add(s2); nodeSet.add(d2) }
       val seedSet = new java.util.HashSet[java.lang.Long]()
-      seeds.select(col("node").cast("long")).collect()
-        .foreach(r => if (!r.isNullAt(0)) seedSet.add(r.getLong(0)))
+      seedRows.foreach(r => if (!r.isNullAt(0)) seedSet.add(r.getLong(0)))
       var dist = new java.util.HashMap[Long, java.lang.Long]()
       nodeSet.forEach(n => dist.put(n,
         if (seedSet.contains(n)) 0L else UnreachedHops))
@@ -542,7 +536,7 @@ object Graph {
         col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst")).distinct()
       .reuseBarrier()
-    // driver fold when the graph fits the budget (see maxDriverEdges):
+    // driver fold when the graph fits the budget (see DriverFold):
     // pure integer min-plus, exactly the distributed rounds
     seedDistanceFoldLocal(e, seeds, maxHops) match {
       case Some(done) => return done
@@ -703,13 +697,13 @@ object Graph {
     * [[CheckpointEvery]] rounds.
     */
   /** Driver-side replay of the synchronous LPA rounds — the
-    * [[maxDriverEdges]] hybrid: per round, neighbor (+optional self)
+    * [[DriverFold]] hybrid: per round, neighbor (+optional self)
     * votes then the packed argmin `(2³¹−c)·2³¹+label`, exactly the
     * distributed arithmetic; the id-range guard throws the same loud
     * failure. */
   private def lpaFoldLocal(
       sym: DataFrame, iterations: Int, selfVote: Boolean): Option[DataFrame] =
-    collectEdges(sym, Seq("a", "b")).map { rows =>
+    DriverFold.collect(sym, col("a"), col("b")).map { rows =>
       val Pack = 2147483648L
       val edges = rows.map(r => (r.getLong(0), r.getLong(1)))
       val nodeSet = new java.util.LinkedHashSet[java.lang.Long]()
@@ -759,8 +753,8 @@ object Graph {
       case Some(done) => return done
       case None => ()
     }
-    // the id-range guard rides inside the consumed init label and
-    // fires at this eager materialization
+    // the id-range guard rides inside the consumed init label: under
+    // the default lazy barrier it fires at the first consuming action
     var labels = sym.select(col("a").as("node")).distinct()
       .select(col("node"),
         when(col("node") < 0L || col("node") >= Pack,
@@ -834,12 +828,12 @@ object Graph {
     * exposed package-private so GraphSpec can observe the early exit
     * without changing the shipped key's (node, degree, in_core)
     * schema. */
-  /** Driver-side replay of the peel cascade — the [[maxDriverEdges]]
+  /** Driver-side replay of the peel cascade — the [[DriverFold]]
     * hybrid with the same early exit (a round that removes zero edges
     * certifies the fixpoint). Returns (result, rounds actually run). */
   private def kCoreFoldLocal(
       sym: DataFrame, k: Int, rounds: Int): Option[(DataFrame, Int)] =
-    collectEdges(sym, Seq("a", "b")).map { rows =>
+    DriverFold.collect(sym, col("a"), col("b")).map { rows =>
       var edges = rows.map(r => (r.getLong(0), r.getLong(1)))
       var ran = 0
       var converged = edges.isEmpty

@@ -189,18 +189,6 @@ object Pq {
     withDl.select((graft.ops.Cleaning.qcol(idCol) +: kept) ++ codeCols :+ err: _*)
   }
 
-  /** Decode: reconstruction = concatenated selected centroids. The
-    * codebook lookup is a literal nested-array index — still row-local
-    * and codegen'd. Input columns `code_0`…`code_{m-1}` as produced by
-    * [[encode]]. */
-  def decodeExpr(model: Model, codeCols: Seq[Column]): Column = {
-    val parts = (0 until model.m).map { j =>
-      element_at(
-        typedLit(model.codebooks(j).map(_.toSeq).toSeq), codeCols(j).cast("int"))
-    }
-    concat(parts: _*)
-  }
-
   /** Asymmetric-distance top-k (ADC search): each query computes its
     * per-subspace distance table to ALL centroids (one narrow map on
     * the query side — the classic ADC lookup table, k×m doubles per

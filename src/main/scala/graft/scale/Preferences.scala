@@ -163,12 +163,11 @@ object Preferences {
       .agg(sum(col("games")).as("games"), sum(col("wins_a")).as("wins_a"))
   }
 
-  /** Hybrid cutover for the MM loop — the [[Dedup.clusters]]
-    * `maxDriverPairs` precedent applied to Bradley–Terry: the
-    * corpus-sized work is the ONE [[pairStats]] aggregate, and the loop
-    * itself runs on the |pairs|-row matrix. When the directed matrix
-    * fits this budget (default 2M rows ≈ tens of MB) the MM iterations
-    * fold on the DRIVER in O(iterations·|pairs|) — replacing
+  /** Hybrid cutover for the MM loop — the [[DriverFold]] policy
+    * applied to Bradley–Terry: the corpus-sized work is the ONE
+    * [[pairStats]] aggregate, and the loop itself runs on the
+    * |pairs|-row matrix. When the directed matrix fits the budget the MM
+    * iterations fold on the DRIVER in O(iterations·|pairs|) — replacing
     * ~5 Spark jobs per iteration (two joins, an aggregate, a 1-row max,
     * a checkpoint) whose fixed per-job cost dominates at any realistic
     * item count (items are models/sources/policies — thousands, not
@@ -178,14 +177,7 @@ object Preferences {
     * matrix). Identical results either way: every step is long sums
     * (order-free), positive-operand integer division, and
     * multiplyExact/addExact replaying ANSI's overflow error —
-    * spec-pinned driver ≡ distributed. Override per session via
-    * `spark.graft.bt.maxDriverPairs` (`<= 0` forces distributed). */
-  private val DefaultMaxDriverPairs = 2000000L
-
-  private def btMaxDriverPairs(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("spark.graft.bt.maxDriverPairs")
-      .map(_.toLong).getOrElse(DefaultMaxDriverPairs)
-
+    * spec-pinned driver ≡ distributed. */
   /** Item types the driver fold accepts: driver-map equality must agree
     * with Spark join equality (integral and string keys do; decimals
     * would compare scale-sensitively on the driver). */
@@ -199,34 +191,34 @@ object Preferences {
 
   /** Driver-side replay of the MM loop over the collected directed
     * matrix. Returns None (caller falls back to the distributed loop)
-    * when the matrix exceeds the budget or the item type is not
-    * driver-safe. The arithmetic is the EXACT integer chain [[btStep]]
-    * runs distributed, including the inner-join drop semantics (an item
-    * missing from the strength map contributes no term; an item with no
-    * opponents drops from the next strength frame). `deltas(k)` is
-    * iteration k+1's max |Δstrength| over items present in consecutive
-    * frames — [[btDeltas]]'s inner-join max — None when no overlap. */
+    * when the matrix, the item totals or the warm-start `init` frame
+    * exceeds the budget, or the item type is not driver-safe. The arithmetic is the EXACT
+    * integer chain [[btStep]] runs distributed, including the
+    * inner-join drop semantics (an item missing from the strength map
+    * contributes no term; an item with no opponents drops from the next
+    * strength frame). `deltas(k)` is iteration k+1's max |Δstrength|
+    * over items present in consecutive frames — [[btDeltas]]'s
+    * inner-join max — None when no overlap. */
   private def btFoldLocal(
       directed: DataFrame, totals: DataFrame, iterations: Int,
       init: Option[DataFrame]):
       Option[(java.util.HashMap[Any, java.lang.Long],
         Array[(Any, Long, Long, Long)], Array[Option[Long]])] = {
-    val budget = btMaxDriverPairs(directed)
-    if (budget <= 0 || !btDriverSafeItemType(totals.schema("item").dataType)) None
-    else if (directed.limit((budget + 1).min(Int.MaxValue.toLong).toInt).count() > budget) None
-    else {
-      val dRows = directed.select(col("i"), col("j"), col("n")).collect()
-        .map(r => (r.get(0), r.get(1), r.getLong(2)))
-      val tRows = totals.select(col("item"), col("wins"), col("games"), col("w_smooth"))
-        .collect().map(r => (r.get(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    if (!btDriverSafeItemType(totals.schema("item").dataType)) None
+    else for {
+      matrix <- DriverFold.collect(directed, col("i"), col("j"), col("n"))
+      items <- DriverFold.collect(totals, col("item"), col("wins"), col("games"), col("w_smooth"))
+      initRows <- init.fold(Option(Array.empty[org.apache.spark.sql.Row]))(
+        DriverFold.collect(_, col("item"), col("strength_micro")))
+    } yield {
+      val dRows = matrix.map(r => (r.get(0), r.get(1), r.getLong(2)))
+      val tRows = items.map(r => (r.get(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       val initMap = new java.util.HashMap[Any, java.lang.Long]()
-      init.foreach { prev =>
-        prev.select(col("item"), col("strength_micro")).collect().foreach { r =>
-          if (!r.isNullAt(0) && !r.isNullAt(1)) {
-            val k = r.get(0); val v = r.getLong(1)
-            val cur = initMap.get(k)
-            if (cur == null || v > cur) initMap.put(k, v) // the max-dedupe
-          }
+      initRows.foreach { r =>
+        if (!r.isNullAt(0) && !r.isNullAt(1)) {
+          val k = r.get(0); val v = r.getLong(1)
+          val cur = initMap.get(k)
+          if (cur == null || v > cur) initMap.put(k, v) // the max-dedupe
         }
       }
       var s = new java.util.HashMap[Any, java.lang.Long]()
@@ -267,7 +259,7 @@ object Preferences {
         deltas(it) = if (dm >= 0) Some(dm) else None
         s = next
       }
-      Some((s, tRows, deltas))
+      (s, tRows, deltas)
     }
   }
 
@@ -293,7 +285,7 @@ object Preferences {
 
   /** Shared MM driver: init (uniform or warm), `iterations` steps,
     * final (item, wins, games, strength_micro) projection. Driver fold
-    * when the pair matrix fits [[DefaultMaxDriverPairs]]; distributed
+    * when the pair matrix fits the [[DriverFold]] budget; distributed
     * loop otherwise. */
   private def btRun(
       directed: DataFrame, totals: DataFrame, iterations: Int,

@@ -32,15 +32,18 @@ import org.apache.spark.sql.DataFrame
   *               may re-analyze more).
   *   - `none`    no barrier: every branch recomputes (the measurement
   *               escape hatch).
+  * Any other value fails loudly rather than silently picking a strategy.
   */
 private[graft] object Reuse {
   def barrier(df: DataFrame): DataFrame =
     df.sparkSession.conf.getOption("spark.graft.reuseBarrier")
       .getOrElse("lazy") match {
+      case "lazy"    => df.localCheckpoint(eager = false)
       case "eager"   => df.localCheckpoint()
       case "persist" => df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       case "none"    => df
-      case _         => df.localCheckpoint(eager = false)
+      case other     => throw new IllegalArgumentException(
+        s"spark.graft.reuseBarrier must be one of lazy|eager|persist|none, got '$other'")
     }
 
   /** `.reuseBarrier()` postfix syntax so call sites read like the

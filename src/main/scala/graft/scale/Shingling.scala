@@ -21,15 +21,6 @@ object Shingling {
           sequence(lit(0), size(tokens) - k),
           i => array_join(slice(tokens, i + 1, lit(k)), " ")))
 
-  /** Distinct shingle set as STRINGS — the readable reference form of
-    * the semantics the DuckDB oracles mirror. Production paths use
-    * `Native.hashedShingleSet` (same sets under 64-bit hashing, tight
-    * loop instead of interpreted HOFs, long-key shuffles — ~5× faster
-    * measured); prefer that unless the shingle text itself is needed.
-    */
-  def shingleSet(text: Column, k: Int): Column =
-    array_distinct(shingles(TextAnalysis.tokens(text), k))
-
   /** Exact Jaccard of two pre-distinct string arrays (reference form;
     * production pairs use `Native.jaccardSorted` on hashed sets). */
   def jaccard(a: Column, b: Column): Column = {

@@ -74,9 +74,6 @@ object Similarity {
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => acc + v)
 
-  def l2norm(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0), (acc, x) => acc + x.cast("double") * x.cast("double")))
-
   /** Cosine similarity; 0.0 when either vector has zero norm.
     * Native expression (tight loop, same accumulation order as the
     * aggregate-fold form — bit-identical results, ~100× faster than

@@ -2051,18 +2051,6 @@ object TextAnalysis {
     out.toSeq
   }
 
-  /** Learned merge table as a DataFrame — (rank, left, right,
-    * pair_count), `merges` rows (fewer on early stop). The shape
-    * [[graft.scale.Models]]-style persistence and the oracle gate
-    * consume. */
-  def bpeFitTable(df: DataFrame, textCol: String, merges: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    bpeFit(df, textCol, merges)
-      .map(m => (m.rank.toLong, m.left, m.right, m.pairCount))
-      .toDF("rank", "left", "right", "pair_count")
-  }
-
   /** Encode with an already-learned merge table and report per-document
     * unit statistics. This is the fit-once / encode-everywhere split:
     * [[bpeFit]] on a sample, `bpeEncode` on the full corpus.
@@ -2229,18 +2217,6 @@ object TextAnalysis {
       .select(id, col("pos").cast("long").as("pos"),
         element_at(typedLit(vocab), col("token")).as("token_id"))
   }
-
-  /** Convenience form of [[bpeIdsWithVocab]] that derives the
-    * vocabulary inline — costs a SECOND encode pass over the corpus
-    * for the distinct-token collect, so pipelines issuing more than
-    * one id-stream query should hold the collected vocab and call
-    * [[bpeIdsWithVocab]] directly. */
-  def bpeIds(
-      df: DataFrame, idCol: String, textCol: String,
-      merges: Seq[BpeMerge]): DataFrame =
-    bpeIdsWithVocab(df, idCol, textCol, merges,
-      bpeVocab(df, idCol, textCol, merges).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap)
 
   /** Tokenizer round-trip audit: DECODE the id stream back to text and
     * verify it reproduces the encoder's input — the e2e integrity gate

@@ -19,4 +19,11 @@ object SparkTestSession {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Run `f` with a session conf set, restoring the previous value. */
+  def withConf[A](key: String, value: String)(f: => A): A = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

@@ -117,13 +117,13 @@ class DedupSpec extends AnyFunSuite {
     assert(got == expect)
     // distributed min-label propagation path (budget forced off) must
     // produce the identical labeling
-    val gotDist = Dedup.clusters(ids, "doc_id", pairs, maxDriverPairs = 0)
-      .as[(Long, Long)].collect().toMap
+    val gotDist = SparkTestSession.withConf(DriverFold.Conf, "0")(
+      Dedup.clusters(ids, "doc_id", pairs).as[(Long, Long)].collect().toMap)
     assert(gotDist == expect)
     // budget EXCEEDED (not just disabled) must also fall through to the
     // distributed path, not truncate the pair set
-    val gotOver = Dedup.clusters(ids, "doc_id", pairs, maxDriverPairs = 1)
-      .as[(Long, Long)].collect().toMap
+    val gotOver = SparkTestSession.withConf(DriverFold.Conf, "1")(
+      Dedup.clusters(ids, "doc_id", pairs).as[(Long, Long)].collect().toMap)
     assert(gotOver == expect)
   }
 
@@ -145,8 +145,8 @@ class DedupSpec extends AnyFunSuite {
     val pairs = edges.toDF("id_a", "id_b")
     val drv = Dedup.clusters(ids, "doc_id", pairs)
       .as[(String, String)].collect().toMap
-    val dist = Dedup.clusters(ids, "doc_id", pairs, maxDriverPairs = 0)
-      .as[(String, String)].collect().toMap
+    val dist = SparkTestSession.withConf(DriverFold.Conf, "0")(
+      Dedup.clusters(ids, "doc_id", pairs).as[(String, String)].collect().toMap)
     assert(drv == dist)
     // min-label invariant: every label <= its id, every label is its own label
     assert(drv.forall { case (id, c) => c <= id && drv(c) == c })
@@ -156,10 +156,47 @@ class DedupSpec extends AnyFunSuite {
     val exotic = Seq("￿", "𐀀").toDF("doc_id")
     val ep = Seq(("￿", "𐀀")).toDF("id_a", "id_b")
     val eDrv = Dedup.clusters(exotic, "doc_id", ep).as[(String, String)].collect().toMap
-    val eDist = Dedup.clusters(exotic, "doc_id", ep, maxDriverPairs = 0)
-      .as[(String, String)].collect().toMap
+    val eDist = SparkTestSession.withConf(DriverFold.Conf, "0")(
+      Dedup.clusters(exotic, "doc_id", ep).as[(String, String)].collect().toMap)
     assert(eDrv == eDist)
     assert(eDrv.values.toSet == Set("￿")) // the UTF-8 min
+  }
+
+  test("clusters: the distributed path does not recompute its loop after returning") {
+    // two 6-node paths need several convergence rounds of min-label
+    // steps; the returned labels must be a snapshot materialized BEFORE
+    // the loop's caches are dropped, so the caller's first action reads
+    // it and runs a few stages, not the loop again
+    val ids = (1L to 12L).toDF("doc_id")
+    val pairs = (1L to 11L).filter(_ != 6L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val sc = spark.sparkContext
+    val stages = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        stages.incrementAndGet()
+    }
+    def stagesOf[A](f: => A): (A, Int) = {
+      org.apache.spark.ListenerDrain(sc)
+      val before = stages.get
+      val a = f
+      org.apache.spark.ListenerDrain(sc)
+      (a, stages.get - before)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val (got, loopStages) = stagesOf(
+        SparkTestSession.withConf(DriverFold.Conf, "0")(Dedup.clusters(ids, "doc_id", pairs)))
+      val snapshots = got.queryExecution.logical.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+      }
+      assert(snapshots.nonEmpty && snapshots.forall(_.isCheckpointed),
+        "the label snapshot must be materialized when clusters returns")
+      val (labels, actionStages) = stagesOf(got.as[(Long, Long)].collect().toMap)
+      assert(labels == (1L to 12L).map(i => i -> (if (i <= 6L) 1L else 7L)).toMap)
+      assert(actionStages * 4 < loopStages,
+        s"the first action ran $actionStages stages against the loop's $loopStages")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("minhash bucket cap drops degenerate buckets, keeps discriminative ones") {

@@ -41,19 +41,16 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("graph driver fold ≡ distributed loop: rank/weighted/personalized/refresh/hits/seeddist") {
-    // the r15 hybrid (spark.graft.graph.maxDriverEdges, the
-    // Dedup.clusters precedent): every iterative operator must produce
-    // bit-identical frames on both paths
+    // the DriverFold hybrid (spark.graft.maxDriverRows): every
+    // iterative operator must produce bit-identical frames on both paths
     import org.apache.spark.sql.DataFrame
     val edges = (0L until 300L).map(i => (i % 19, (i * 13 + 5) % 19)).toDF("src", "dst")
     val w = edges.withColumn("w", (col("src") + col("dst")) % 3 + 1)
     val seeds = (0L until 19L by 4).toDF("node")
     val tele = seeds.withColumn("teleport_micro", lit(1000000L))
     def sorted(df: DataFrame) = df.orderBy(df.columns.map(col): _*).collect().toSeq
-    def underDistributed[A](f: => A): A = {
-      spark.conf.set("spark.graft.graph.maxDriverEdges", "0")
-      try f finally spark.conf.unset("spark.graft.graph.maxDriverEdges")
-    }
+    def underDistributed[A](f: => A): A =
+      SparkTestSession.withConf(DriverFold.Conf, "0")(f)
     def both(f: => DataFrame): Unit = {
       val local = sorted(f)
       val dist = underDistributed(sorted(f))

@@ -53,8 +53,8 @@ class PreferencesSpec extends AnyFunSuite {
   }
 
   test("bt driver fold ≡ distributed loop: strengths, warm-start, and deltas bit-identical") {
-    // the r15 hybrid (spark.graft.bt.maxDriverPairs, Dedup.clusters
-    // precedent): the driver MM fold must replay the distributed
+    // the DriverFold hybrid (spark.graft.maxDriverRows): the driver MM
+    // fold must replay the distributed
     // integer chain exactly — cold fit, warm-started refresh, and the
     // convergence curve all compare collected-and-sorted
     val g = (for (a <- 1 to 9; b <- 1 to 9 if a < b; r <- 1 to (a * b) % 3 + 1)
@@ -62,10 +62,8 @@ class PreferencesSpec extends AnyFunSuite {
       .toDF("winner", "loser")
     def sorted(df: org.apache.spark.sql.DataFrame) =
       df.orderBy(df.columns.map(col): _*).collect().toSeq
-    def underDistributed[A](f: => A): A = {
-      spark.conf.set("spark.graft.bt.maxDriverPairs", "0")
-      try f finally spark.conf.unset("spark.graft.bt.maxDriverPairs")
-    }
+    def underDistributed[A](f: => A): A =
+      SparkTestSession.withConf(DriverFold.Conf, "0")(f)
     val coldD = sorted(Preferences.btStrengths(g, "winner", "loser", iterations = 4))
     val coldL = underDistributed(
       sorted(Preferences.btStrengths(g, "winner", "loser", iterations = 4)))
