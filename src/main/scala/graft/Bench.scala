@@ -4,20 +4,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val wall0 = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // s19's bucketed-ingest roundtrip saveAsTable's a managed table
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    val spark = GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // warmup: JVM/codegen/parquet-footer costs land here, not on the
     // first measured query. A tiny crosstab + window exercise the
     // Janino/codegen paths (hash agg, pivot, broadcast, window exec)
@@ -43,9 +30,14 @@ object Bench {
     // key off; COLD is kept alongside as the one-shot model/codegen
     // cost. `queries` (and the summary total) report warm; the full
     // BENCH_FULL.jsonl line carries both maps.
-    def timeOnce(fn: (SparkSession, String) => DataFrame): Double = {
+    // A sample whose query throws is None: the key is listed under
+    // "failed" and reported with no timing, never as a fast one.
+    def timeOnce(name: String, fn: (SparkSession, String) => DataFrame): Option[Double] = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      val ok = try { fn(spark, sfDir).count(); true } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        false
+      }
       val dt = (System.nanoTime() - t0) / 1e9
       // between samples (outside the timed span): drop any stray cache
       // entries and nudge the ContextCleaner (localCheckpoint blocks are
@@ -54,7 +46,7 @@ object Bench {
       // repeated same-JVM runs must measure like fresh JVMs.
       spark.catalog.clearCache()
       System.gc()
-      dt
+      if (ok) Some(dt) else None
     }
     // local probe filter (the Verify third-arg convention): a comma
     // list of query names restricts the run — the driver never sets
@@ -64,12 +56,14 @@ object Bench {
     val both = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
-      val cold = timeOnce(fn)
-      val warm = timeOnce(fn)
+      val cold = timeOnce(name, fn)
+      val warm = timeOnce(name, fn)
       (name, cold, warm)
     }
-    val results = both.map { case (n, _, w) => n -> w }
-    val colds = both.map { case (n, c, _) => n -> c }
+    val (timed, failedRuns) = both.partition { case (_, c, w) => c.isDefined && w.isDefined }
+    val results = timed.map { case (n, _, w) => n -> w.get }
+    val colds = timed.map { case (n, c, _) => n -> c.get }
+    val failed = failedRuns.map { case (n, _, _) => "\"" + n + "\"" }.mkString("[", ",", "]")
     // ONE JSON line, but field-ordered for the harness' stdout TAIL
     // window (last ~2000 chars survive): per-query map FIRST, summary
     // fields LAST, times at millisecond precision (sub-ms digits are
@@ -85,8 +79,11 @@ object Bench {
     // "timing":"warm" marks the semantics change (round 9): `queries`
     // and `value` are the per-query WARM (second-in-JVM) samples; the
     // cold samples ride only in the full-precision BENCH_FULL line.
+    // `failed` lists the keys that threw in either sample; they are in
+    // neither map, the total nor n_queries.
     val summary = s""""metric":"total","value":${r3(total)},"unit":"sec",""" +
-      s""""timing":"warm","n_queries":${results.length},"wall":${r3(wall)},"sf":"$sfDir""""
+      s""""timing":"warm","n_queries":${results.length},"wall":${r3(wall)},"sf":"$sfDir",""" +
+      s""""failed":$failed"""
     println(s"""{"queries":$qs,$summary}""")
     // a SECOND compact line with no queries map: the harness keeps only
     // the stdout tail, and at ~300 keys the full line overflows it

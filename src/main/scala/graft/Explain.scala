@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.Explain [sfDir] [queryName...]
   */
 object Explain {
-  /** Register graft's SQL functions on `spark` (as the other mains do),
-    * then print each named query's formatted plan. */
+  /** Register graft's SQL functions on `spark` (a caller's session may
+    * not come from `GraftSession`), then print each named query's
+    * formatted plan. */
   def run(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
     graft.functions.GraftFunctions.register(spark)
     names.foreach { n =>
@@ -22,14 +23,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(4)
     run(spark, sfDir, names)
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.config.{AutoDetect, MappingConfig}
 import graft.io.{Sinks, Sources}
 import graft.pipeline.Transform
@@ -41,17 +40,8 @@ object Main {
     val outDir = opts.getOrElse("out", "graft_out")
     val format = opts.getOrElse("format", "parquet")
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    val spark = GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      Some(sys.env.getOrElse("SPARK_MASTER", "local[*]")))
 
     val raw = Sources.readTable(spark, input)
     val cfg = opts.get("config").map(MappingConfig.load)

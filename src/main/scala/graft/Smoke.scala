@@ -1,21 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI smoke: exercises the driver's `SparkEntry.entry` contract the
   * same way the round driver does (flagship pipeline on sf0.001,
   * expects rows > 0).
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(4)
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,22 +10,7 @@ object Verify {
     // oracle_sql.json to just those keys
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); Spark only reads it as
-      // long nanos (converted back in Sources.table)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the bucketed-ingest roundtrip (s19) saveAsTable's a managed
-      // table; point the warehouse at a throwaway dir
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    val spark = GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // an oracle entry without a matching query would silently zero the
     // round's correctness for that name
     val orphans = SparkEntry.oracleSql.keySet.diff(SparkEntry.queries.keySet)

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.scale.Reuse.BarrierOps
 import org.apache.spark.sql.expressions.Window
 
 /** A4 — multi-dimensional tabulation (`multi_dim_tabulation`,
@@ -32,7 +31,7 @@ object MultiDim {
     // localCheckpoint (ContextCleaner-released) instead of persist()
     // so repeated calls don't pin frames in the cache manager
     val grp =
-      if (percentBy == "total") grp0.reuseBarrier()
+      if (percentBy == "total") grp0.localCheckpoint(eager = false)
       else grp0
 
     if (percentBy == "total") {

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.scale.Reuse.BarrierOps
 
 /** Summary statistics (describe-style) for a numeric column — a natural
   * extension of the reference's KPI surface (beyond-reference, like the
@@ -2152,7 +2151,7 @@ object Stats {
         col("x"), col("__h"), ms.toArray, ts.toArray).as("__bs"))
     val agg = base.groupBy(col("grp"))
       .agg(aggCols.head, aggCols.tail: _*)
-      .reuseBarrier() // |groups| rows, read by totals AND the melt
+      .localCheckpoint(eager = false) // |groups| rows, read by totals AND the melt
     val reps = (0 until replicas).map(r =>
       struct(lit(r.toLong).as("r"),
         element_at(col("__bs"), 2 * r + 1).as("s"),
@@ -2772,7 +2771,7 @@ object Stats {
         graft.functions.PortableHash.kmvHash31(key.cast("string")).as("__h"))
       .groupBy(col("s"))
       .agg(graft.functions.Aggregates.kmvSketch(col("__h"), k).as("sk"))
-      .reuseBarrier() // |slices| rows, read by both join sides
+      .localCheckpoint(eager = false) // |slices| rows, read by both join sides
     val pairs = sk.select(col("s").as("slice_a"), col("sk").as("sa"))
       .join(sk.select(col("s").as("slice_b"), col("sk").as("sb")),
         col("slice_a") < col("slice_b"))

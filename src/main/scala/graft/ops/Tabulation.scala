@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.scale.Reuse.BarrierOps
 import org.apache.spark.sql.expressions.Window
 
 /** Frequency / tabulation operators (SURVEY.md §2.3: A1, A2, A5, A6, A10).
@@ -29,7 +28,7 @@ object Tabulation {
       counts0: DataFrame, countCol: String, pctName: String, decimals: Int): DataFrame = {
     // counts is summary-sized and read twice (total + projection):
     // snapshot it so the full-data aggregation runs once. A
-    // localCheckpoint (the default lazy Reuse.barrier), not persist():
+    // lazy localCheckpoint, not persist():
     // the blocks are released by the ContextCleaner when the frame goes
     // out of scope, where persist() would pin one summary frame in the
     // cache manager per call with no release path (accumulating across
@@ -40,7 +39,7 @@ object Tabulation {
     // action — re-run the summary query).
     // Corpus-scale frames must use persist + an explicit release
     // (Transform.runReleasable), never this.
-    val counts = counts0.reuseBarrier()
+    val counts = counts0.localCheckpoint(eager = false)
     val total = counts.agg(sum(col(countCol)).as("__total__"))
     counts
       .crossJoin(broadcast(total))

@@ -2,7 +2,6 @@ package graft.scale
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.scale.Reuse.BarrierOps
 
 /** Deduplication operators for training-data pipelines (SURVEY.md §7.4):
   * exact, MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine.
@@ -150,7 +149,7 @@ object Dedup {
         .agg(min(id).as("__rep__"), collect_list(id).as("__mem__"))
       val groups = (if (maxBucketSize <= 0) groups0
         else groups0.filter(size(col("__mem__")) <= maxBucketSize))
-        .reuseBarrier()
+        .localCheckpoint(eager = false)
       val repSigs = groups.select(col("__rep__"),
         graft.functions.Native.minhashFromHashes(
           col("shingles"), fam.coeffs.map(_._1), fam.coeffs.map(_._2)).as("sig"))
@@ -159,7 +158,7 @@ object Dedup {
       // (three longs per row) so the per-rep signature pass runs once
       val buckets = capBuckets(bandBuckets(repSigs, "__rep__", bands, rowsPerBand),
         Seq("band", "bucket"), maxBucketSize)
-        .reuseBarrier()
+        .localCheckpoint(eager = false)
       val a = buckets.select(col("band"), col("bucket"), col("__rep__").as("id_a"))
       val b = buckets.select(col("band"), col("bucket"), col("__rep__").as("id_b"))
       val candidates = a.join(b, Seq("band", "bucket"))
@@ -201,7 +200,7 @@ object Dedup {
       // (numHashes longs per doc, no text) instead of re-running the
       // tokenize+shingle+minhash pass per branch
       val sigs = minhashSignatures(df, idCol, textCol, k, numHashes, seed)
-        .reuseBarrier()
+        .localCheckpoint(eager = false)
       val buckets0 = bandBuckets(sigs, idCol, bands, rowsPerBand)
 
       // Same LSH skew guard as nearDupSimhash: a band bucket shared by a
@@ -222,7 +221,7 @@ object Dedup {
       // merge-walk (hash collisions at 64 bits are negligible).
       // Both verify sides read the set table — materialize it once
       // (r14; hashes only, no text) instead of re-shingling per side.
-      val setsC = sets.reuseBarrier()
+      val setsC = sets.localCheckpoint(eager = false)
       candidates
         .join(setsC.select(id.as("id_a"), col("shingles").as("sh_a")), "id_a")
         .join(setsC.select(id.as("id_b"), col("shingles").as("sh_b")), "id_b")
@@ -327,7 +326,7 @@ object Dedup {
       .select(least(col("__sa"), col("__sb")).as("split_a"),
         greatest(col("__sa"), col("__sb")).as("split_b"),
         col("id_a"), col("id_b"))
-      .reuseBarrier() // reused: the pair count AND the distinct-doc count
+      .localCheckpoint(eager = false) // reused: the pair count AND the distinct-doc count
     val nPairs = cells.groupBy(col("split_a"), col("split_b"))
       .agg(count(lit(1)).as("n_pairs"))
     val nDocs = cells
@@ -426,7 +425,7 @@ object Dedup {
       licStr.as("license"), rank.as("license_rank"))
     val joined = assignment.select(col("id"), col("cluster"))
       .join(lic, Seq("id"))
-      .reuseBarrier() // reused: the per-cluster max AND the final join
+      .localCheckpoint(eager = false) // reused: the per-cluster max AND the final join
     val eff = joined.groupBy(col("cluster"))
       .agg(max(struct(col("license_rank"), col("license"))).as("__e"))
       .select(col("cluster"), col("__e.license_rank").as("effective_rank"),
@@ -504,7 +503,7 @@ object Dedup {
     // materialize the proxy once (hashes, no text) instead of
     // re-shingling the corpus per branch
     val sets = hashedShingleTable(df, idCol, textCol, k)
-      .reuseBarrier()
+      .localCheckpoint(eager = false)
 
     def epilogue(pairs: DataFrame): DataFrame = pairs
       .withColumn("cont_a", col("n_shared").cast("double") / col("n_a"))
@@ -517,7 +516,7 @@ object Dedup {
       val groups = sets.groupBy(col("shingles"))
         .agg(min(id).as("__rep__"), collect_list(id).as("__mem__"),
           count(lit(1)).as("__gsz__"))
-        .reuseBarrier()
+        .localCheckpoint(eager = false)
       val repInv0 = groups.select(col("__rep__"), col("__gsz__"),
         explode(col("shingles")).as("__sh"))
       val repInv =
@@ -637,11 +636,11 @@ object Dedup {
     // signature frame is materialized too so the cap's sizing pass and
     // the candidate join never re-run the per-doc hash loop.
     val setsB0 = hashedShingleTable(batch, idCol, textCol, k)
-      .reuseBarrier()
+      .localCheckpoint(eager = false)
     val bSigs = setsB0.select(id,
       graft.functions.Native.minhashFromHashes(
         col("shingles"), fam.coeffs.map(_._1), fam.coeffs.map(_._2)).as("sig"))
-      .reuseBarrier()
+      .localCheckpoint(eager = false)
     val bBuckets = capBuckets(
       bandBuckets(bSigs, idCol, bands, numHashes / bands),
       Seq("band", "bucket"), maxBucketSize)
@@ -653,7 +652,7 @@ object Dedup {
     // id) rows once — three longs per row, never text; uncapped the
     // frame is consumed once, so the barrier is skipped.
     val iBuckets = capBuckets(
-      if (maxBucketSize > 0) Reuse.barrier(indexBuckets) else indexBuckets,
+      if (maxBucketSize > 0) indexBuckets.localCheckpoint(eager = false) else indexBuckets,
       Seq("band", "bucket"), maxBucketSize)
     val candidates = bBuckets
       .select(col("band"), col("bucket"), graft.ops.Cleaning.qcol(idCol).as("id_a"))
@@ -769,7 +768,7 @@ object Dedup {
     // re-read it. Same rows, same pairs; the oracle is untouched.
     val sets0 = df.select(id, block.as("block"),
       graft.functions.Native.hashedShingleSet(toks, k).as("shingles"))
-      .reuseBarrier()
+      .localCheckpoint(eager = false)
     val sets = capBuckets(sets0, Seq("block"), maxBlockSize)
 
     if (collapseIdentical) {
@@ -777,7 +776,7 @@ object Dedup {
       // both member expansions, the intra emitter) — one shuffle, not five
       val groups = sets.groupBy(col("block"), col("shingles"))
         .agg(min(id).as("__rep__"), collect_list(id).as("__mem__"))
-        .reuseBarrier()
+        .localCheckpoint(eager = false)
       val a = groups.select(col("block"), col("__rep__").as("id_a"), col("shingles").as("sh_a"))
       val b = groups.select(col("block"), col("__rep__").as("id_b"), col("shingles").as("sh_b"))
       val verified = a.join(b, "block")
@@ -929,11 +928,11 @@ object Dedup {
     // collapse path, both member expansions and the intra emitter)
     // re-ran the cap's counting pass and the collapse groupBy per
     // branch — materialize the reused frame once; identical pairs out.
-    if (!collapseIdentical) verifiedPairs(keyed.reuseBarrier())
+    if (!collapseIdentical) verifiedPairs(keyed.localCheckpoint(eager = false))
     else {
       val groups = keyed.groupBy(col("block"), col("__t"))
         .agg(min(col("__id")).as("__rep__"), collect_list(col("__id")).as("__mem__"))
-        .reuseBarrier()
+        .localCheckpoint(eager = false)
       val reps = groups.select(col("block"), col("__rep__").as("__id"), col("__t"))
       val repPairs = verifiedPairs(reps)
       val mem = groups.select(col("__rep__"), col("__mem__"))
@@ -1047,7 +1046,7 @@ object Dedup {
       .distinct()
       // r14: both self-join sides read the distinct (source, fp) frame —
       // materialize it once instead of fingerprinting the corpus twice
-      .reuseBarrier()
+      .localCheckpoint(eager = false)
     fps.select(col("__src").as("source_a"), col("__fp"))
       .join(fps.select(col("__src").as("source_b"), col("__fp")), Seq("__fp"))
       .filter(col("source_a") < col("source_b"))
@@ -1151,18 +1150,16 @@ object Dedup {
         case Some(rows) => return (edgeLabelsDriver(pairs.sparkSession, rows, idType), true)
         case None => () // over budget: run distributed below
       }
-    val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .distinct()
-      .persist(disk)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Only nodes that appear in some edge can ever change label; the rest
     // are singletons (cluster = id), attached with one left join at the
     // end. At 100 TB this keeps the iteration cost proportional to the
     // duplicate mass, not the corpus size.
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("cluster", col("id"))
-    var labelsCached: DataFrame = null
     // one min-label propagation step: carry the previous label through
     // the union (null for neighbor candidates; min ignores nulls, and
     // each id contributes exactly one non-null `old`)
@@ -1184,36 +1181,34 @@ object Dedup {
         merged = step(l)
         l = merged.select(col("id"), col("cluster"))
       }
-      val mat = merged.persist(disk)
+      // Each step reads the previous labels twice, so an uncut plan
+      // doubles per step. The lazy localCheckpoint cuts it here, and the
+      // convergence count below materializes it (one job per check).
+      val mat = merged.localCheckpoint(eager = false)
       // the LAST step unchanged ⇒ fixed point (earlier steps irrelevant)
       converged = mat.filter(col("cluster") =!= col("old")).count() == 0
-      if (labelsCached != null) labelsCached.unpersist()
-      labelsCached = mat
       labels = mat.select(col("id"), col("cluster"))
       iter += steps
     }
     if (!converged) {
-      edges.unpersist(); if (labelsCached != null) labelsCached.unpersist()
+      edges.unpersist()
       throw new IllegalStateException(
         s"Dedup.clusters did not converge within maxIter=$maxIter rounds — " +
           "components wider than maxIter hops would be left partially merged; raise maxIter")
     }
-    // Cut the returned plan loose from the iteration cache: snapshot the
-    // converged labels with an EAGER localCheckpoint (one scan of the
-    // already-cached frame; blocks are lineage-free and RELEASED by the
-    // ContextCleaner once unreferenced — unlike persist(), which pins
-    // the frame in the cache manager until someone calls unpersist),
-    // then drop both iteration caches HERE instead of leaking them to
-    // the caller. It must be eager, not the lazy Reuse.barrier: a lazy
-    // snapshot would first run at the caller's action, after the
-    // unpersist below, and recompute the whole min-label loop. The
-    // label frame is proportional to the duplicate mass (edge-touched
-    // ids only), not the corpus. Tradeoff: checkpoint
+    // Snapshot the converged labels with an EAGER localCheckpoint (one
+    // scan of the already-checkpointed frame; blocks are lineage-free
+    // and RELEASED by the ContextCleaner once unreferenced — unlike
+    // persist(), which pins the frame in the cache manager until someone
+    // calls unpersist), then drop the edge cache HERE instead of leaking
+    // it to the caller. Eager, so the snapshot exists before the
+    // unpersist below and the caller's first action never reaches back
+    // into the loop. The label frame is proportional to the duplicate
+    // mass (edge-touched ids only), not the corpus. Tradeoff: checkpoint
     // blocks carry no lineage, so losing an executor that holds one
     // fails the downstream action (re-run the query) — accepted over a
     // persist the caller can never release.
     val snap = labels.localCheckpoint()
-    if (labelsCached != null) labelsCached.unpersist()
     edges.unpersist()
     (snap, false)
   }
@@ -1434,7 +1429,7 @@ object Dedup {
     // count, the Bloom build, the exact join's broadcast) — materialize
     // the eval-sized distinct frame once
     val benchSh = benchmark.select(explode(shingles(benchmark)).as("__sh")).distinct()
-      .reuseBarrier()
+      .localCheckpoint(eager = false)
     val bf = benchSh.stat.bloomFilter("__sh", math.max(benchSh.count(), 1L), fpp)
     val bos = new java.io.ByteArrayOutputStream()
     bf.writeTo(bos)
@@ -1448,7 +1443,7 @@ object Dedup {
       // the scaladoc's "persist the shingled frame between the two
       // passes" (r14): candidate and clean branches each re-shingled
       // the corpus AND re-scanned the Bloom filter without it
-      .reuseBarrier()
+      .localCheckpoint(eager = false)
     val isCandidate = exists(col("__shs"), h => mightContain(h))
     val candStats = withSets.filter(isCandidate)
       .select(id, explode(col("__shs")).as("__sh"))
@@ -1889,10 +1884,11 @@ object Dedup {
     // r15: both self-join sides read the keyed frame — materialize it
     // once (three narrow columns) so the tables×bits hyperplane pass
     // over the vectors runs once, not twice (guide §2.4)
-    val keyed = Reuse.barrier(Similarity.withLshKeys(
+    val keyed = Similarity.withLshKeys(
         df.select(graft.ops.Cleaning.qcol(idCol), graft.ops.Cleaning.qcol(vecCol)),
         vecCol, bits, tables, seed, dim)
-      .select(col("table"), col("lsh_key"), graft.ops.Cleaning.qcol(idCol)))
+      .select(col("table"), col("lsh_key"), graft.ops.Cleaning.qcol(idCol))
+      .localCheckpoint(eager = false)
     val a = keyed.select(col("table"), col("lsh_key"), graft.ops.Cleaning.qcol(idCol).as("id_a"))
     val b = keyed.select(col("table"), col("lsh_key"), graft.ops.Cleaning.qcol(idCol).as("id_b"))
     val pairs = a.join(b, Seq("table", "lsh_key"))

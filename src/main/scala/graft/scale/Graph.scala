@@ -2,7 +2,6 @@ package graft.scale
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.scale.Reuse.BarrierOps
 
 /** Link-graph quality ranking — the standard crawl-quality signal a
   * pretraining pipeline feeds into its mixture/quality-floor operators
@@ -273,13 +272,13 @@ object Graph {
     // iteration — only the rank frame was checkpointed before. The
     // edge frame materializes at |edges| rows of three longs; outw and
     // the node set are node-sized.
-    val ec = e.reuseBarrier()
+    val ec = e.localCheckpoint(eager = false)
     rankFoldLocal(ec, iterations, dampingPct, teleportOpt, initOpt) match {
       case Some(done) => return done
       case None => ()
     }
     val outw = ec.groupBy(col("src")).agg(sum(col("w")).as("outw"))
-      .reuseBarrier()
+      .localCheckpoint(eager = false)
     val nodes0 = ec.select(col("src").as("node"))
       .union(ec.select(col("dst").as("node"))).distinct()
     // nodes carries each node's teleport mass so the per-iteration
@@ -291,7 +290,7 @@ object Graph {
         nodes0.join(t1, Seq("node"), "left")
           .select(col("node"),
             coalesce(col("teleport_micro"), lit(0L)).as("t_micro"))
-    }).reuseBarrier()
+    }).localCheckpoint(eager = false)
     var ranks = initOpt match {
       case None => nodes.select(col("node"), col("t_micro").as("rank_micro"))
       case Some(r0) =>
@@ -315,7 +314,7 @@ object Graph {
             expr(s"($dampingPct * coalesce(in_sum, 0L)) div 100"))
             .as("rank_micro"))
       if (i % CheckpointEvery == 0 && i < iterations)
-        ranks = ranks.reuseBarrier()
+        ranks = ranks.localCheckpoint(eager = false)
     }
     ranks
   }
@@ -358,7 +357,7 @@ object Graph {
     val e = edges.select(
         col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst")).distinct()
-      .reuseBarrier()
+      .localCheckpoint(eager = false)
     // driver fold when the graph fits the budget (see DriverFold):
     // the mutual recursion is 2 gathers + 2 rescales per iteration —
     // ~6 Spark jobs of fixed overhead each on a collectable graph
@@ -368,7 +367,7 @@ object Graph {
     }
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-      .reuseBarrier()
+      .localCheckpoint(eager = false)
     var hub = nodes.select(col("node"), lit(1000000L).as("score"))
     var auth = hub
     for (i <- 1 to iterations) {
@@ -450,7 +449,7 @@ object Graph {
       .groupBy(col(toCol).as("node")).agg(sum(col("score")).as("raw"))
     val full = nodes.join(raw, Seq("node"), "left")
       .select(col("node"), coalesce(col("raw"), lit(0L)).as("raw"))
-      .reuseBarrier()
+      .localCheckpoint(eager = false)
     val mx = full.agg(max(col("raw")).as("__m"))
     full.crossJoin(broadcast(mx))
       .select(col("node"), expr("raw div (__m div 1000000 + 1)").as("score"))
@@ -535,7 +534,7 @@ object Graph {
     val e = edges.select(
         col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst")).distinct()
-      .reuseBarrier()
+      .localCheckpoint(eager = false)
     // driver fold when the graph fits the budget (see DriverFold):
     // pure integer min-plus, exactly the distributed rounds
     seedDistanceFoldLocal(e, seeds, maxHops) match {
@@ -556,7 +555,7 @@ object Graph {
       dist = dist.join(gather, Seq("node"), "left")
         .select(col("node"),
           least(col("hops"), coalesce(col("__g"), lit(UnreachedHops))).as("hops"))
-      if (i % CheckpointEvery == 0 && i < maxHops) dist = dist.reuseBarrier()
+      if (i % CheckpointEvery == 0 && i < maxHops) dist = dist.localCheckpoint(eager = false)
     }
     dist.select(col("node"),
       when(col("hops") >= UnreachedHops, lit(null).cast("long"))
@@ -748,7 +747,7 @@ object Graph {
     val e0 = edges.select(q(srcCol).cast("long").as("a"), q(dstCol).cast("long").as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
     val sym = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-      .distinct().reuseBarrier()
+      .distinct().localCheckpoint(eager = false)
     lpaFoldLocal(sym, iterations, selfVote) match {
       case Some(done) => return done
       case None => ()
@@ -761,7 +760,7 @@ object Graph {
           raise_error(concat(lit("labelPropagation: node id outside [0, 2^31): "),
             col("node").cast("string"))).cast("long"))
           .otherwise(col("node")).as("label"))
-      .reuseBarrier()
+      .localCheckpoint(eager = false)
     for (i <- 1 to iterations) {
       val neigh = sym
         .join(labels.withColumnRenamed("node", "b"), "b")
@@ -777,7 +776,7 @@ object Graph {
         .agg(min((lit(Pack) - col("__c")) * Pack + col("label")).as("__pk"))
         .select(col("a").as("node"), pmod(col("__pk"), lit(Pack)).as("label"))
       if (i % CheckpointEvery == 0 && i < iterations)
-        labels = labels.reuseBarrier()
+        labels = labels.localCheckpoint(eager = false)
     }
     labels
   }
@@ -876,7 +875,7 @@ object Graph {
     val e0 = edges.select(q(srcCol).cast("long").as("a"), q(dstCol).cast("long").as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
     var e = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-      .distinct().reuseBarrier()
+      .distinct().localCheckpoint(eager = false)
     kCoreFoldLocal(e, k, rounds) match {
       case Some(done) => return done
       case None => ()
@@ -891,7 +890,7 @@ object Graph {
       e = e.join(keep, Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("a", "b"), Seq("b"), "left_semi")
         .select(col("a"), col("b"))
-        .reuseBarrier()
+        .localCheckpoint(eager = false)
       val after = e.count()
       // zero edges removed ⟹ every degree is unchanged ⟹ fixpoint
       converged = after == remaining
@@ -947,7 +946,7 @@ object Graph {
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
     val und = e0
       .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
-      .distinct().reuseBarrier()
+      .distinct().localCheckpoint(eager = false)
     // undirected degree; the id-range guard rides the consumed degree
     // column so it fires on first materialization
     val deg = und.select(explode(array(col("u"), col("v"))).as("node"))
@@ -959,7 +958,7 @@ object Graph {
             col("node").cast("string"))).cast("long"))
           .otherwise(col("node")).as("node"),
         col("degree"))
-      .reuseBarrier()
+      .localCheckpoint(eager = false)
     val key = deg.select(col("node"), (col("degree") * Pack + col("node")).as("__k"))
     // orient each undirected edge lower-order -> higher-order
     val oriented = und
@@ -969,7 +968,7 @@ object Graph {
         when(col("__ku") < col("__kv"), col("u")).otherwise(col("v")).as("lo"),
         when(col("__ku") < col("__kv"), col("v")).otherwise(col("u")).as("hi"),
         greatest(col("__ku"), col("__kv")).as("__khi"))
-      .reuseBarrier()
+      .localCheckpoint(eager = false)
     // wedges at the lowest-order corner, then close against the
     // oriented list on the (b, c) composite key
     val wedges = oriented.select(col("lo"), col("hi").as("b"), col("__khi").as("__kb"))

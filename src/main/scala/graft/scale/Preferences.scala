@@ -2,7 +2,6 @@ package graft.scale
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.scale.Reuse.BarrierOps
 
 /** Preference-data operators — the RLHF/eval side of a training-data
   * pipeline: a stream of pairwise outcomes (winner item, loser item)
@@ -312,7 +311,7 @@ object Preferences {
           .join(p, Seq("item"), "left")
           .select(col("item"),
             coalesce(col("__s0"), lit(1000000L)).as("s_micro"))
-          .reuseBarrier()
+          .localCheckpoint(eager = false)
     }
 
   /** The shared MM inputs, MATERIALIZED once: the lazy forms would
@@ -333,13 +332,13 @@ object Preferences {
         col("item_a").as("i"), col("item_b").as("j"), col("games").as("n"))
       .union(pairs.select(
         col("item_b").as("i"), col("item_a").as("j"), col("games").as("n")))
-      .reuseBarrier()
+      .localCheckpoint(eager = false)
     val totals = itemStats(
       games.filter(col(winnerCol) =!= col(loserCol)),
       winnerCol, loserCol)
       .select(col("item"), col("wins"), col("games"))
       .withColumn("w_smooth", greatest(expr(s"wins div ${countDiv}L"), lit(0L)) + lit(1L))
-      .reuseBarrier()
+      .localCheckpoint(eager = false)
     (directed, totals)
   }
 
@@ -353,14 +352,14 @@ object Preferences {
     val p = pairs.select(col("item_a"), col("item_b"),
         col("games").cast("long").as("games"),
         col("wins_a").cast("long").as("wins_a"))
-      .reuseBarrier()
+      .localCheckpoint(eager = false)
     val capped = p.withColumn("games",
       greatest(expr(s"games div ${countDiv}L"), lit(1L)))
     val directed = capped.select(
         col("item_a").as("i"), col("item_b").as("j"), col("games").as("n"))
       .union(capped.select(
         col("item_b").as("i"), col("item_a").as("j"), col("games").as("n")))
-      .reuseBarrier()
+      .localCheckpoint(eager = false)
     val totals = p.select(
         col("item_a").as("item"), col("wins_a").as("w"), col("games").as("g"))
       .union(p.select(col("item_b").as("item"),
@@ -368,7 +367,7 @@ object Preferences {
       .groupBy(col("item"))
       .agg(sum(col("w")).as("wins"), sum(col("g")).as("games"))
       .withColumn("w_smooth", greatest(expr(s"wins div ${countDiv}L"), lit(0L)) + lit(1L))
-      .reuseBarrier()
+      .localCheckpoint(eager = false)
     (directed, totals)
   }
 
@@ -505,12 +504,12 @@ object Preferences {
     val nik = collapseRatings(ratings, itemCol, raterCol, labelCol)
       .groupBy(col("item"), col("label"))
       .agg(count(lit(1)).as("nik"))
-      .reuseBarrier() // reused by the per-item pass AND the marginals
+      .localCheckpoint(eager = false) // reused by the per-item pass AND the marginals
     val byItem = nik.groupBy(col("item"))
       .agg(sum(col("nik")).as("ni"), sum(col("nik") * col("nik")).as("sq"))
       .filter(col("ni") >= 2L)
       .withColumn("pi_micro", expr("((sq - ni) * 1000000L) div (ni * (ni - 1L))"))
-      .reuseBarrier() // reused: the top-line aggregate + the kept-item filter
+      .localCheckpoint(eager = false) // reused: the top-line aggregate + the kept-item filter
     val top = byItem.agg(
       count(lit(1)).as("n_items"),
       coalesce(sum(col("ni")), lit(0L)).as("n_ratings"),
@@ -565,13 +564,13 @@ object Preferences {
     val nik = collapseRatings(ratings, itemCol, raterCol, labelCol)
       .groupBy(col("item"), col("label"))
       .agg(count(lit(1)).as("nik"))
-      .reuseBarrier() // reused by the per-item pass AND the marginals
+      .localCheckpoint(eager = false) // reused by the per-item pass AND the marginals
     val byItem = nik.groupBy(col("item"))
       .agg(sum(col("nik")).as("ni"),
         sum(col("nik") * (col("nik") - 1L)).as("agr"))
       .filter(col("ni") >= 2L)
       .withColumn("okk_micro", expr("(agr * 1000000L) div (ni - 1L)"))
-      .reuseBarrier() // reused: the top-line aggregate + the kept-item filter
+      .localCheckpoint(eager = false) // reused: the top-line aggregate + the kept-item filter
     val top = byItem.agg(
       count(lit(1)).as("n_items"),
       coalesce(sum(col("ni")), lit(0L)).as("n_ratings"),
@@ -731,7 +730,7 @@ object Preferences {
             .cast(one0.schema("rater").dataType))
           .otherwise(col("rater")))
     } else one0)
-      .reuseBarrier() // both sides of the self-join
+      .localCheckpoint(eager = false) // both sides of the self-join
     one.select(col("item"), col("rater").as("rater_a"), col("label").as("__la"))
       .join(one.select(col("item"), col("rater").as("rater_b"),
         col("label").as("__lb")), Seq("item"))
@@ -806,7 +805,7 @@ object Preferences {
     val nik = collapseRatings(ratings, itemCol, raterCol, labelCol)
       .groupBy(col("item"), col("label"))
       .agg(count(lit(1)).as("votes"))
-      .reuseBarrier() // reused: the per-item totals AND the winner filter
+      .localCheckpoint(eager = false) // reused: the per-item totals AND the winner filter
     val byItem = nik.groupBy(col("item"))
       .agg(sum(col("votes")).as("n_ratings"), max(col("votes")).as("__top"))
     nik.join(byItem, Seq("item"))
@@ -880,7 +879,7 @@ object Preferences {
     val b = one.filter(col("rater") === raterB)
       .select(col("wave"), col("item"), col("label").as("lb"))
     // reused by the agreement aggregate AND both marginals — one scan
-    val both = a.join(b, Seq("wave", "item")).reuseBarrier()
+    val both = a.join(b, Seq("wave", "item")).localCheckpoint(eager = false)
     val agg = both.groupBy(col("wave")).agg(
       count(lit(1)).as("n_items"),
       coalesce(sum(when(col("la") === col("lb"), 1L)), lit(0L)).as("n_agree"))
@@ -900,7 +899,7 @@ object Preferences {
       .withColumn("kappa_micro",
         when(col("pe_micro") < 1000000L,
           expr("((po_micro - pe_micro) * 1000000L) div (1000000L - pe_micro)")))
-      .reuseBarrier() // summary frame, referenced by the self-join below
+      .localCheckpoint(eager = false) // summary frame, referenced by the self-join below
     val prevWave = k.select(col("wave")).as("c")
       .join(k.select(col("wave").as("__w2")).as("p"), col("__w2") < col("wave"))
       .groupBy(col("wave")).agg(max(col("__w2")).as("__prev_wave"))
@@ -943,7 +942,7 @@ object Preferences {
     raw.crossJoin(broadcast(mx))
       .select(col("item"),
         expr("greatest((s_raw * 1000000L) div mx, 1L)").as("s_micro"))
-      .reuseBarrier()
+      .localCheckpoint(eager = false)
   }
 
   /** Per-iteration convergence audit of [[btStrengths]] — the measured

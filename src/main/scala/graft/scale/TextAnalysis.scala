@@ -2,7 +2,6 @@ package graft.scale
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.scale.Reuse.BarrierOps
 
 /** Text-analysis operators for a training-data pipeline (SURVEY.md §7.4):
   * tokenization, language-ID heuristic, quality scoring, document
@@ -677,7 +676,7 @@ object TextAnalysis {
     val toks = df.select(id, explode(tokens(graft.ops.Cleaning.qcol(textCol))).as("__tok"))
       .join(broadcast(qt.select(col("__tok")).distinct()), Seq("__tok"), "left_semi")
     val tf = toks.groupBy(id, col("__tok")).agg(count(lit(1)).as("__tf"))
-      .reuseBarrier() // reused: df counts + the scoring join
+      .localCheckpoint(eager = false) // reused: df counts + the scoring join
     val dfreq = tf.groupBy("__tok").agg(count(lit(1)).as("__df"))
     val stats = df.agg(
       count(lit(1)).as("__nd"),
@@ -690,7 +689,7 @@ object TextAnalysis {
       .crossJoin(broadcast(stats))
     // candidate-sized (matched query-token × doc rows); materialized
     // only when several parameterizations reprice it
-    val joined = if (params.length > 1) Reuse.barrier(joined0) else joined0
+    val joined = if (params.length > 1) joined0.localCheckpoint(eager = false) else joined0
     params.map { case (k1, b) =>
       val byDoc = joined
         .withColumn("__contrib",

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** PageRank scale probe: the oracle graph is 64 nodes (cost there is
@@ -16,13 +15,7 @@ import org.apache.spark.sql.functions._
 object GraphProbe {
   def main(args: Array[String]): Unit = {
     val maxM = args.headOption.map(_.toInt).getOrElse(20)
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(16)
 
     for (millions <- Seq(1, 5, 20).filter(_ <= maxM)) {
       val edges = millions.toLong * 1000000L

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Materialize an N× key-shifted copy of an sf directory (SCALE.md §6d):
@@ -35,14 +35,7 @@ object MakeScaled {
     val src = args(0)
     val dst = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(32)
     keyCols.foreach { case (name, keys) =>
       val base = spark.read.parquet(s"$src/$name.parquet")
       // Copies must occupy disjoint key ranges — a source key >= Shift

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Many-slice probe for [[graft.ops.Stats.quantileNormalize]] — the
@@ -18,14 +17,7 @@ object QnormProbe {
     val sliceCounts =
       if (args.length > 1) args.tail.map(_.toInt).toSeq
       else Seq(1000, 10000, 100000)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(32)
     def run(slices: Int): (Long, Double) = {
       // `slices` slices x 16 rows each over a shared nValues-point
       // value domain (distinct pooled values stay under the cap)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Panel-width probe for
@@ -19,14 +18,7 @@ object RaterProbe {
     val panels =
       if (args.length > 1) args.tail.map(_.toInt).toSeq
       else Seq(5, 100, 1000)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(32)
     def run(panel: Int): (Long, Double) = {
       val ratings = spark.range(items.toLong * panel)
         .select((col("id") % items).as("item"),

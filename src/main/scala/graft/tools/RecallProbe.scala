@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measures the recall of the approximate ANN configurations that the
@@ -28,14 +28,7 @@ object RecallProbe {
         java.nio.file.StandardOpenOption.APPEND)
       catch { case _: Throwable => () }
     }
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(16)
 
     def recall(approx: DataFrame, exact: DataFrame): Double = {
       val a = approx.select(col("query_id"), col("vec_id"))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Wide-cardinality probe for [[graft.ops.Stats.spearmanCorr]] — the
@@ -17,15 +16,7 @@ import org.apache.spark.sql.functions._
 object SpearmanProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(32)
     val o = graft.io.Sources.table(spark, sfDir, "orders")
       .select(floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"),
         col("o_orderkey").cast("long").as("k"))

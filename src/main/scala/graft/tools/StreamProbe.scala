@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Streaming throughput probe (round-9 verdict #8; windowed-agg path +
@@ -28,13 +27,7 @@ object StreamProbe {
   def main(args: Array[String]): Unit = {
     val rate = args.headOption.map(_.toInt).getOrElse(20000)
     val secs = args.drop(1).headOption.map(_.toInt).getOrElse(30)
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(16)
     import spark.implicits._
 
     def rateEvents = spark.readStream.format("rate")

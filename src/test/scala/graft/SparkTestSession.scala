@@ -2,23 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole test JVM. */
+/** One shared local session for the whole test JVM, built by the same
+  * factory as the shipped entry points. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // managed tables (bucketing specs) land in tmp, not the repo
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession(4)
 
   /** Run `f` with a session conf set, restoring the previous value. */
   def withConf[A](key: String, value: String)(f: => A): A = {

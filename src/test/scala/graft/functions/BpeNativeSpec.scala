@@ -129,7 +129,6 @@ class BpeNativeSpec extends AnyFunSuite {
   }
 
   test("SQL surface: bpe_stats / bpe_tokens with literal merge arrays") {
-    GraftFunctions.register(spark)
     val row = spark.sql(
       """SELECT bpe_stats('the the x', array('t','th'), array('h','e')) AS s,
         |       bpe_tokens('the the x', array('t','th'), array('h','e')) AS t""".stripMargin)

@@ -7,7 +7,6 @@ class GraftSqlSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
   test("native functions callable from plain SQL after registration") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT
         |  cosine_sim(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS cs,
@@ -26,7 +25,6 @@ class GraftSqlSpec extends AnyFunSuite {
   }
 
   test("custom aggregates and l2_normalize callable from plain SQL") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     Seq(("a", 1L, 10L), ("a", 2L, 30L), ("a", 3L, 20L), ("b", 9L, 7L))
       .toDF("g", "v", "w").createOrReplaceTempView("gvw")
@@ -67,7 +65,6 @@ class GraftSqlSpec extends AnyFunSuite {
   }
 
   test("SQL function matches the Column API") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val df = Seq((Array(0.5f, 1.5f), Array(1.0f, -0.5f))).toDF("a", "b")

@@ -199,6 +199,19 @@ class DedupSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  test("clusters: a 16-node path converges distributed to the driver fold's labels") {
+    // each min-label step reads the previous labels twice: unless the
+    // loop cuts the plan at every check, it doubles per step, and a path
+    // this long (15 hops to the min) exhausts the heap while Spark
+    // builds the plan
+    val ids = (1L to 20L).toDF("doc_id")
+    val pairs = (1L until 16L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    def labels = Dedup.clusters(ids, "doc_id", pairs).as[(Long, Long)].collect().toMap
+    val drv = labels
+    assert(drv == (1L to 20L).map(i => i -> (if (i <= 16L) 1L else i)).toMap)
+    assert(SparkTestSession.withConf(DriverFold.Conf, "0")(labels) == drv)
+  }
+
   test("minhash bucket cap drops degenerate buckets, keeps discriminative ones") {
     // 30 identical boilerplate docs (every band bucket has 30 members) +
     // one planted near-dup pair with distinct text

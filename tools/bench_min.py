@@ -54,6 +54,11 @@ def main():
     rows = [r for r in rows if r.get("sf") == sf_dir]
     if len(rows) < n:
         sys.exit(f"[bench_min] expected {n} new rows for {sf_dir}, found {len(rows)}")
+    # a throwing query has no timing (graft.Bench lists it under
+    # "failed"); a minimum over the remaining samples would hide it
+    failed = sorted({k for r in rows for k in r.get("failed", [])})
+    if failed:
+        sys.exit(f"[bench_min] queries failed, no minimum taken: {', '.join(failed)}")
     keys = set(rows[0]["queries"])
     for r in rows[1:]:
         if set(r["queries"]) != keys:
