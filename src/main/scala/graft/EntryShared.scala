@@ -1,14 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.config.MappingConfig
 import graft.io.Sources
-import graft.ops.{AsOf, Cleaning, Crosstab, MultiDim, Rounding, Stats, Tabulation}
-import graft.bht.{Builders, Kpis, Raking}
-import graft.pipeline.Transform
-import graft.scale.{Dedup, Multimodal, Sampling, Similarity, TextAnalysis}
-import graft.streaming.Streams
+import graft.ops.Rounding
+import graft.scale.{Dedup, TextAnalysis}
 
 /** Shared fixtures, fit-once caches, and oracle-SQL CTE builders used
   * by the per-family Queries* objects composing [[SparkEntry]]. Moved
@@ -435,37 +431,17 @@ private[graft] object EntryShared {
   val GraphTierCuts = Seq(800000L, 1000000L, 1200000L)
 
   /** Recall gate shared by the approximate-ANN queries: one summary row
-    * (k, n_queries, recall_min, recall_ok) where recall_ok pins
-    * |approx ∩ exact| / |exact| >= threshold. Both inputs are
+    * (k, n_queries, recall_min, calibrated, recall_ok) where recall_ok
+    * pins |approx ∩ exact| / |exact| >= threshold. Both inputs are
     * deterministic, so the boolean hash-gates the approximate config
     * against its exact baseline — the quantitative form of "this ANN
     * path still finds its neighbors" that a rows-only check can't give.
-    */
-  def recallGate(
-      approx: DataFrame, exact: DataFrame, k: Int, threshold: Double): DataFrame = {
-    // ONE pass over the exact baseline (the expensive side): a left
-    // join marks hits, a single aggregate counts totals, hits and
-    // distinct queries — two independent subtrees would re-run the
-    // exact scan once per branch
-    // distinct() makes the gate duplicate-proof: a future approx path
-    // emitting a candidate twice must not double-count hits AND totals
-    // (which would bias recall upward past the floor)
-    val a = approx.select(col("query_id"), col("vec_id")).distinct()
-      .withColumn("__hit", lit(1))
-    exact.select(col("query_id"), col("vec_id"))
-      .join(a, Seq("query_id", "vec_id"), "left")
-      .agg(count(lit(1)).as("__n"),
-        sum(coalesce(col("__hit"), lit(0))).as("__hits"),
-        countDistinct(col("query_id")).as("n_queries"))
-      .select(
-        lit(k).cast("int").as("k"),
-        col("n_queries"),
-        lit(threshold).as("recall_min"),
-        (col("__hits").cast("double") / col("__n") >= threshold).as("recall_ok"))
-  }
-
-  /** [[recallGate]] with an in-band CALIBRATION audit for fitted-config
-    * floors. A recall floor pinned on natural data shapes does not
+    * ONE pass over the exact baseline (the expensive side); distinct()
+    * on the approx side keeps a candidate emitted twice from
+    * double-counting hits and totals.
+    *
+    * The in-band CALIBRATION audit is for fitted-config floors. A
+    * recall floor pinned on natural data shapes does not
     * transfer to a dup-degenerate corpus (e.g. a synthetic 10x-duplicated
     * scale dir): mass duplication re-shapes the kmeans fit and the exact
     * top-k tie structure, so a floor miss there measures the fixture,
@@ -473,7 +449,7 @@ private[graft] object EntryShared {
     * The gate measures degeneracy directly — distinct vectors >= 90% of
     * rows — and emits it as `calibrated`; `recall_ok` enforces the floor
     * ONLY on calibrated corpora, so on the driver's dirs (no dups,
-    * calibrated = true) the gate is exactly [[recallGate]], while an
+    * calibrated = true) the gate is the plain recall floor, while an
     * out-of-calibration dir declares the skip in the result row instead
     * of failing a floor it never pinned. The oracle replays `calibrated`
     * from the same exact distinct count. */

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession factory: every main, tool and the test suite
@@ -12,7 +11,8 @@ import org.apache.spark.sql.SparkSession
   *     oracle compares against exactly this reading.
   *   - graft's native SQL functions (`cosine_sim`, ...) registered.
   *   - Adaptive execution on, the UI off, and a throwaway warehouse dir
-  *     (the bucketed-ingest roundtrip saveAsTable's a managed table).
+  *     (the bucketed-ingest roundtrip saveAsTable's a managed table),
+  *     removed at JVM exit.
   * Callers choose only the parallelism: `local[cpus]` with `cpus`
   * shuffle partitions, or a deployment `master` with `cpus` partitions.
   * Any other conf comes in as a `-Dspark.<key>=<value>` JVM property,
@@ -28,7 +28,7 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", Files.createTempDirectory("graft-warehouse").toString)
+      .config("spark.sql.warehouse.dir", graft.scale.Models.tempArtifactDir("graft-warehouse"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftFunctions.register(spark)

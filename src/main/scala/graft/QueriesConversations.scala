@@ -1,14 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.config.MappingConfig
-import graft.io.Sources
-import graft.ops.{AsOf, Cleaning, Crosstab, MultiDim, Rounding, Stats, Tabulation}
-import graft.bht.{Builders, Kpis, Raking}
-import graft.pipeline.Transform
-import graft.scale.{Dedup, Multimodal, Sampling, Similarity, TextAnalysis}
-import graft.streaming.Streams
 import EntryShared._
 
 /** [[SparkEntry]] slice: conversation/SFT data operators.

@@ -1,14 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.config.MappingConfig
 import graft.io.Sources
 import graft.ops.{AsOf, Cleaning, Crosstab, MultiDim, Rounding, Stats, Tabulation}
-import graft.bht.{Builders, Kpis, Raking}
-import graft.pipeline.Transform
-import graft.scale.{Dedup, Multimodal, Sampling, Similarity, TextAnalysis}
-import graft.streaming.Streams
+import graft.bht.{Kpis, Raking}
+import graft.scale.{Sampling, TextAnalysis}
 import EntryShared._
 
 /** [[SparkEntry]] slice: reference-surface queries (aggregations, transforms, IO roundtrips, joins, sampling/stats).
@@ -156,9 +153,10 @@ private[graft] object QueriesCore {
     // graft's own sink, reads it back through graft's own source, and
     // the DuckDB oracle computes the same result straight from parquet —
     // so header handling, quoting, escaping, and type inference are all
-    // on the hash-checked path (temp files under java.io.tmpdir).
+    // on the hash-checked path (temp files under java.io.tmpdir, removed
+    // at JVM exit).
     "s11_csv_roundtrip" -> ((s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_s11").toString
+      val dir = graft.scale.Models.tempArtifactDir("graft_s11")
       graft.io.Sinks.writeCsv(Map("nation" -> T(s, d, "nation")), dir)
       val part = new java.io.File(s"$dir/nation").listFiles()
         .map(_.getPath).find(_.endsWith(".csv"))
@@ -169,8 +167,7 @@ private[graft] object QueriesCore {
     }),
 
     "s12_excel_roundtrip" -> ((s, d) => {
-      val path = java.nio.file.Files.createTempDirectory("graft_s12")
-        .resolve("wb.xlsx").toString
+      val path = s"${graft.scale.Models.tempArtifactDir("graft_s12")}/wb.xlsx"
       graft.io.Sinks.writeExcel(Map("nation" -> T(s, d, "nation")), path)
       Sources.readTable(s, path)
     }),
@@ -220,8 +217,7 @@ private[graft] object QueriesCore {
     }),
 
     "s14_xls_roundtrip" -> ((s, d) => {
-      val path = java.nio.file.Files.createTempDirectory("graft_s14")
-        .resolve("wb.xls").toString
+      val path = s"${graft.scale.Models.tempArtifactDir("graft_s14")}/wb.xls"
       graft.io.Xls.write("nation", T(s, d, "nation"), path)
       Sources.readTable(s, path)
     }),
@@ -232,7 +228,7 @@ private[graft] object QueriesCore {
     // reader — the parquet-sourced oracle checks the full roundtrip
     // instead, which is the stronger contract anyway).
     "s18_orc_roundtrip" -> ((s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_s18").toString
+      val dir = graft.scale.Models.tempArtifactDir("graft_s18")
       graft.io.Sinks.writeOrc(Map("nation" -> T(s, d, "nation")), dir)
       Sources.readTable(s, s"$dir/nation.orc")
         .groupBy(col("n_regionkey"))
@@ -244,7 +240,7 @@ private[graft] object QueriesCore {
     // parquet-sourced oracle checks the full writer/reader pair — the
     // stronger contract
     "s33_avro_roundtrip" -> ((s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_s33").toString
+      val dir = graft.scale.Models.tempArtifactDir("graft_s33")
       graft.io.Avro.writeAvro(T(s, d, "nation"), dir)
       graft.io.Avro.readAvro(s, dir)
         .groupBy(col("n_regionkey"))
@@ -264,8 +260,7 @@ private[graft] object QueriesCore {
     }),
 
     "s13_json_bundle" -> ((s, d) => {
-      val path = java.nio.file.Files.createTempDirectory("graft_s13")
-        .resolve("bundle.json").toString
+      val path = s"${graft.scale.Models.tempArtifactDir("graft_s13")}/bundle.json"
       graft.io.Sinks.writeJsonBundle(
         Map("region" -> T(s, d, "region"), "nation" -> T(s, d, "nation")), path)
       s.read.option("multiLine", "true").json(path)
@@ -455,8 +450,7 @@ private[graft] object QueriesCore {
     // collapse) before the recode — a mis-parse there breaks the hash,
     // unlike t5 which feeds applyCodebook a literal map.
     "t5b_codebook_file" -> ((s, d) => {
-      val path = java.nio.file.Files.createTempDirectory("graft_t5b")
-        .resolve("codebook.csv")
+      val path = java.nio.file.Paths.get(graft.scale.Models.tempArtifactDir("graft_t5b"), "codebook.csv")
       java.nio.file.Files.writeString(path,
         "column,value,label\n" +
           "n_regionkey,0,AFRICA\nn_regionkey,1,AMERICA\nn_regionkey,2,ASIA\n")

@@ -1,14 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.config.MappingConfig
-import graft.io.Sources
-import graft.ops.{AsOf, Cleaning, Crosstab, MultiDim, Rounding, Stats, Tabulation}
-import graft.bht.{Builders, Kpis, Raking}
-import graft.pipeline.Transform
-import graft.scale.{Dedup, Multimodal, Sampling, Similarity, TextAnalysis}
-import graft.streaming.Streams
+import graft.ops.Rounding
+import graft.scale.{Dedup, Sampling, TextAnalysis}
 import EntryShared._
 
 /** [[SparkEntry]] slice: exact/near deduplication, incremental indexes, decontamination.
@@ -176,7 +171,7 @@ private[graft] object QueriesDedup {
       // made this gate vacuous on shipped data)
       val accepted = emb.filter(col("vec_id") % 10 >= 3)
       val batch = emb.filter(col("vec_id") % 10 < 3)
-      val dir = java.nio.file.Files.createTempDirectory("graft-sem-model").toString
+      val dir = graft.scale.Models.tempArtifactDir("graft-sem-model")
       graft.scale.Models.saveCentroids(s,
         graft.scale.Similarity.fitIvfCentroids(accepted, "vec_id", "embedding", nlist = 1), dir)
       val cents = graft.scale.Models.loadCentroids(s, dir)

@@ -1,14 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.config.MappingConfig
-import graft.io.Sources
-import graft.ops.{AsOf, Cleaning, Crosstab, MultiDim, Rounding, Stats, Tabulation}
-import graft.bht.{Builders, Kpis, Raking}
-import graft.pipeline.Transform
-import graft.scale.{Dedup, Multimodal, Sampling, Similarity, TextAnalysis}
-import graft.streaming.Streams
+import graft.ops.Rounding
+import graft.scale.Similarity
 import EntryShared._
 
 /** [[SparkEntry]] slice: similarity search and embedding operators (kNN, LSH, IVF, PQ, quantization).
@@ -244,7 +239,7 @@ private[graft] object QueriesSimilarity {
     // so the oracle is the same generated SQL as x_emb_pq — any
     // precision or ordering loss in the persistence layer hash-fails
     "x_emb_pq_saved" -> ((s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft-pq-model").toString
+      val dir = graft.scale.Models.tempArtifactDir("graft-pq-model")
       graft.scale.Models.savePq(s, pqOracleModel, dir)
       val loaded = graft.scale.Models.loadPq(s, dir)
       graft.scale.Pq.encode(T(s, d, "embeddings"), "vec_id", "embedding", loaded)
@@ -258,7 +253,7 @@ private[graft] object QueriesSimilarity {
     // the gates can't mask each other)
     "x_emb_ivfpq_saved" -> ((s, d) => {
       val emb = T(s, d, "embeddings")
-      val dir = java.nio.file.Files.createTempDirectory("graft-ivf-model").toString
+      val dir = graft.scale.Models.tempArtifactDir("graft-ivf-model")
       val fitted = graft.scale.Similarity.fitIvfCentroids(
         emb, "vec_id", "embedding", nlist = 8, normalize = false, dim = 64)
       graft.scale.Models.saveCentroids(s, fitted, dir)

@@ -1,14 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.config.MappingConfig
-import graft.io.Sources
-import graft.ops.{AsOf, Cleaning, Crosstab, MultiDim, Rounding, Stats, Tabulation}
-import graft.bht.{Builders, Kpis, Raking}
-import graft.pipeline.Transform
-import graft.scale.{Dedup, Multimodal, Sampling, Similarity, TextAnalysis}
-import graft.streaming.Streams
+import graft.ops.Rounding
+import graft.scale.TextAnalysis
 import EntryShared._
 
 /** [[SparkEntry]] slice: text-analysis operators (tokens, BPE, lang-ID, quality, retrieval, redaction).
@@ -224,7 +219,7 @@ private[graft] object QueriesText {
       val labeled = docs.withColumn("__lab",
         coalesce(col("lang"), lit("")) === "en")
       val model = TextAnalysis.hashedClassifierFit(labeled, "text", "__lab", buckets = 512)
-      val dir = java.nio.file.Files.createTempDirectory("graft-hashclf-model").toString
+      val dir = graft.scale.Models.tempArtifactDir("graft-hashclf-model")
       graft.scale.Models.saveHashedClassifier(model, dir)
       val loaded = graft.scale.Models.loadHashedClassifier(s, dir)
       TextAnalysis.hashedClassifierScore(docs, "doc_id", "text", loaded, buckets = 512)

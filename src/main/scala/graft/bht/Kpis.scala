@@ -1,6 +1,6 @@
 package graft.bht
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.Cleaning
 
@@ -24,8 +24,6 @@ object Kpis {
     * n: non-null count.
     */
   def csatSummary(df: DataFrame, csatCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
     val s = Cleaning.toNumeric(Cleaning.qcol(csatCol))
     val maxRow = df.agg(max(s).as("mx")).collect()(0)
     val agged =

@@ -1,6 +1,6 @@
 package graft.io
 
-import java.io.{BufferedOutputStream, ByteArrayOutputStream, FileOutputStream}
+import java.io.{BufferedOutputStream, FileOutputStream}
 import java.util.zip.{ZipEntry, ZipFile, ZipOutputStream}
 import scala.collection.mutable
 import scala.xml.XML

@@ -19,31 +19,6 @@ object Sinks {
       df.write.mode("overwrite").parquet(s"$outDir/${sheetName(name)}")
     }
 
-  /** Hive-style partitioned Parquet: one directory per partition value —
-    * the layout that makes downstream partition PRUNING work (a reader
-    * filtering on a partition column touches only its directories).
-    * Optionally sort within partitions for row-group min/max skipping.
-    */
-  def writePartitioned(
-      df: DataFrame, outDir: String, partitionCols: Seq[String],
-      sortCols: Seq[String] = Nil): Unit = {
-    // prefix with the partition columns: the file writer requires rows
-    // clustered by partition value and would otherwise insert its own
-    // sort on partitionCols alone, destroying the sortCols ordering
-    val sorted =
-      if (sortCols.isEmpty) df
-      else df.sortWithinPartitions((partitionCols ++ sortCols).map(graft.ops.Cleaning.qcol): _*)
-    sorted.write.mode("overwrite")
-      .partitionBy(partitionCols: _*)
-      .parquet(outDir)
-  }
-
-  /** JSONL export (one JSON object per line, splittable) — the
-    * interchange format for training-data consumers.
-    */
-  def writeJsonl(df: DataFrame, outDir: String): Unit =
-    df.write.mode("overwrite").json(outDir)
-
   /** WET sink — emit (url, date, text) rows as WARC/1.0 "conversion"
     * records ([[Warc]] documents the format): each row renders to one
     * record string via narrow codegen'd expressions, and the text
@@ -129,7 +104,7 @@ object Sinks {
     * exports: the reference materializes them fully in pandas, and so
     * do we — but a misdirected 100 TB table must fail fast with a clear
     * message instead of OOMing the driver. Distributed exports (CSV,
-    * JSONL, parquet, ORC) have no cap.
+    * parquet, ORC) have no cap.
     */
   val MaxDriverExportRows: Int = 1000000
 
@@ -144,7 +119,7 @@ object Sinks {
     require(rows.length <= cap,
       s"$what is a driver-side whole-file export capped at $cap rows; " +
         "this table exceeds the cap — aggregate it first, or use a " +
-        "distributed sink (writeJsonl / writeCsv / parquet / ORC)")
+        "distributed sink (writeCsv / writeParquet / writeOrc)")
     rows
   }
 

@@ -377,10 +377,6 @@ object Xls {
     val useMini = stream.length < cutoff
     val out = new java.io.ByteArrayOutputStream()
 
-    def sector(bytes: Array[Byte]): Array[Byte] = java.util.Arrays.copyOf(bytes, secSize)
-    def le32(v: Int): Array[Byte] =
-      ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN).putInt(v).array()
-
     // layout: [0]=dir, [1]=miniFAT (if mini), [2..]=payload, [last]=FAT
     val nMini = if (useMini) (stream.length + miniSize - 1) / miniSize else 0
     val miniBytes = nMini * miniSize

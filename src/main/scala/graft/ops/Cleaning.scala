@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
   *    NOTE the reference lowercases the UN-trimmed string, so " 0 "
   *    (with spaces) IS selected; we reproduce that exactly.
   *  - T8 stringify-for-grouping (app.py:110,521): pandas `astype(str)`
-  *    turns null into the literal string "nan"; `strAsPandas` reproduces
-  *    it for oracle parity, `strClean` keeps SQL nulls.
+  *    turns null into the literal string "nan"; `strAsPandasTyped`
+  *    reproduces it for oracle parity, `strClean` keeps SQL nulls.
   */
 object Cleaning {
 
@@ -61,20 +61,16 @@ object Cleaning {
     c.isNotNull && trim(s) =!= "" && lower(s) =!= "0"
   }
 
-  /** T8 — pandas `astype(str).str.strip()` on a column: null becomes the
-    * literal string "nan" (app.py:110,521). Use where bit-exact pandas
-    * parity is required (full tabulation, freq_table grouping).
-    */
-  def strAsPandas(c: Column): Column =
-    trim(coalesce(c.cast("string"), lit("nan")))
-
   /** T8 variant — stringify + trim but keep SQL null as null. */
   def strClean(c: Column): Column = trim(c.cast("string"))
 
-  /** Schema-aware `strAsPandas`: pandas `str(True)` is "True"/"False"
-    * (capitalized) while Spark casts booleans to "true"/"false" — for
-    * boolean columns the stringification is capitalized to keep the
-    * pandas-parity contract.
+  /** T8 — pandas `astype(str).str.strip()` on a column: null becomes the
+    * literal string "nan" (app.py:110,521). Use where bit-exact pandas
+    * parity is required (full tabulation, freq_table grouping).
+    * Schema-aware: pandas `str(True)` is "True"/"False" (capitalized)
+    * while Spark casts booleans to "true"/"false" — for boolean columns
+    * the stringification is capitalized to keep the pandas-parity
+    * contract.
     */
   def strAsPandasTyped(df: DataFrame, colName: String): Column = {
     import org.apache.spark.sql.types.{BooleanType, TimestampType}

@@ -51,7 +51,8 @@ object Cohorts {
     * (cohort, offset)-keyed distinct-count — months × months groups,
     * summary-sized. For month counts beyond exact-distinct comfort,
     * swap the epilogue's `countDistinct` for the gated HLL
-    * ([[Stats.approxDistinct]]) — same frame, sketch state.
+    * (`approx_count_distinct`, see [[Stats.approxDistinctGate]]) —
+    * same frame, sketch state.
     */
   /** SCD-2 interval build — collapse an event stream into the
     * slowly-changing-dimension form a warehouse serves: one row per

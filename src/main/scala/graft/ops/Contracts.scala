@@ -190,55 +190,6 @@ object Contracts {
           .otherwise(col("n_dst") === 0L))
   }
 
-  /** Schema-drift audit between two deliveries — the contract a feed
-    * breaks FIRST (a renamed column fails every downstream select
-    * before any value test runs): one row per drifted column with
-    * `status` in added/removed/type_changed and both type strings
-    * (catalog DDL form). Columns compare by name (case-sensitive —
-    * Spark's resolution may be lax, but a contract is not); an
-    * identical schema yields zero rows.
-    *
-    * Driver-side by nature (schemas are metadata, not data — the S4/S7
-    * class: spec-verified, no oracle needed); the output is a
-    * DataFrame so it unions into the delivery report like every other
-    * audit.
-    */
-  def schemaDriftAudit(
-      before: DataFrame, after: DataFrame, rule: String): DataFrame = {
-    val spark = before.sparkSession
-    import spark.implicits._
-    // Duplicate field names are legal in Spark schemas (post-join
-    // frames) but make a name->type map silently keep only the last
-    // entry, so drift on a duplicated column could be missed or
-    // misreported. Surface each offending name as its own "duplicate"
-    // row (type fields carry the comma-joined type list on the side(s)
-    // that duplicate it) and exclude it from the add/remove/change
-    // comparison — the contract verdict on an ambiguous name is
-    // "fix the duplication first", not a guess between its types.
-    def types(df: DataFrame): Map[String, Seq[String]] =
-      df.schema.fields.groupBy(_.name)
-        .map { case (n, fs) => n -> fs.map(_.dataType.sql).toSeq }
-    val a = types(before)
-    val b = types(after)
-    val dup = (a.filter(_._2.length > 1).keySet ++
-      b.filter(_._2.length > 1).keySet)
-    def one(m: Map[String, Seq[String]], c: String): String = m.get(c) match {
-      case Some(ts) => ts.mkString(",")
-      case None => null
-    }
-    val rows =
-      dup.toSeq.sorted.map(c => (rule, c, "duplicate", one(a, c), one(b, c))) ++
-      (b.keySet -- a.keySet -- dup).toSeq.sorted.map(c =>
-        (rule, c, "added", null.asInstanceOf[String], b(c).head)) ++
-      (a.keySet -- b.keySet -- dup).toSeq.sorted.map(c =>
-        (rule, c, "removed", a(c).head, null.asInstanceOf[String])) ++
-      ((a.keySet & b.keySet) -- dup).toSeq.sorted.collect {
-        case c if a(c).head != b(c).head =>
-          (rule, c, "type_changed", a(c).head, b(c).head)
-      }
-    rows.toDF("rule", "column", "status", "type_before", "type_after")
-  }
-
   def sequenceGapAudit(df: DataFrame, idCol: String, rule: String): DataFrame =
     df.filter(qcol(idCol).isNotNull)
       .agg(

@@ -74,27 +74,6 @@ object Layout {
         min(col("__y")).as(s"min_$yCol"), max(col("__y")).as(s"max_$yCol"))
   }
 
-  /** Per-file min/max audit of a WRITTEN dataset — reads back exactly
-    * the statistics a pruning scan uses: one row per physical file with
-    * its row count and each requested column's [min, max]. Run it after
-    * a [[zOrdered]] (or any) write to SEE the rectangles instead of
-    * trusting the layout: tight per-file ranges on every audited column
-    * mean two-sided predicates skip files; a full-width column means
-    * that dimension never prunes. One scan of the audited columns +
-    * one |files|-group aggregate.
-    */
-  def fileStatsAudit(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      cols: Seq[String]): DataFrame = {
-    require(cols.nonEmpty, "need at least one column to audit")
-    val df = spark.read.parquet(path)
-    df.select(input_file_name().as("file") +: cols.map(Cleaning.qcol): _*)
-      .groupBy(col("file"))
-      .agg(count(lit(1)).as("n"),
-        cols.flatMap(c => Seq(min(Cleaning.qcol(c)).as(s"min_$c"),
-          max(Cleaning.qcol(c)).as(s"max_$c"))): _*)
-  }
-
   /** Small-file compaction plan — the other half of layout hygiene at
     * 100 TB: streaming/CDC ingest leaves millions of KB-sized files
     * whose per-file open/footer cost dominates scans, and the fix is a
@@ -149,23 +128,4 @@ object Layout {
       .groupBy(col("dir"), col("group_id"))
       .agg(count(lit(1)).as("n_files"), sum(col("bytes")).as("bytes"),
         min(col("path")).as("first_path"), max(col("path")).as("last_path"))
-
-  /** Write-side composition: range-partition by the Morton key and
-    * sort within partitions, so each output file covers one tight
-    * Z-range (the rectangles [[zOrderLayoutAudit]] measures). Returns
-    * the re-laid-out frame for the caller's `.write` — layout is a
-    * plan property, not a sink property, so it composes with any
-    * format. `numFiles` is the target file count: at 100 TB pick
-    * data-size / target-file-size (e.g. ~1 GB files).
-    */
-  def zOrdered(
-      df: DataFrame, xCol: String, yCol: String,
-      numFiles: Int, bits: Int = 16): DataFrame = {
-    require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
-    val z = mortonKey(Cleaning.qcol(xCol), Cleaning.qcol(yCol), bits)
-    df.withColumn("__z", z)
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-  }
 }

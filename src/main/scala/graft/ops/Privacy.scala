@@ -33,31 +33,14 @@ object Privacy {
         coalesce(sum(when(col("n") < k, col("n"))), lit(0L)).as("rows_at_risk"),
         min(col("n")).as("min_cell"))
 
-  /** Distinct-l-diversity risk — k-anonymity's blind spot: a cell can
-    * hold 30 rows (k-safe) where every row shares the SAME sensitive
+  /** One-row distinct-l-diversity release audit (the
+    * [[kAnonymitySummary]] companion) — k-anonymity's blind spot: a cell
+    * can hold 30 rows (k-safe) where every row shares the SAME sensitive
     * value, so membership alone discloses it. A quasi-identifier combo
     * is risky when its sensitive attribute takes fewer than `l`
-    * distinct non-null values (a cell of only-null sensitive values has
-    * diversity 0 — nothing released, nothing disclosed, but it still
-    * flags as risky so the review sees it). Output: the risky combos
-    * with their row count and diversity.
-    *
-    * Scale: one hash aggregate on (quasi-tuple) carrying both counts —
-    * same shape as [[kAnonymityRisk]].
-    */
-  def lDiversityRisk(
-      df: DataFrame, quasiCols: Seq[String], sensitiveCol: String,
-      l: Long): DataFrame = {
-    require(quasiCols.nonEmpty && l > 0, "need quasi columns and l > 0")
-    df.groupBy(quasiCols.map(Cleaning.qcol): _*)
-      .agg(count(lit(1)).as("n"),
-        countDistinct(Cleaning.qcol(sensitiveCol)).as("l_distinct"))
-      .filter(col("l_distinct") < l)
-  }
-
-  /** One-row l-diversity release audit (the [[kAnonymitySummary]]
-    * companion): total combos, low-diversity combos, rows at risk, and
-    * the smallest diversity seen. */
+    * distinct non-null values (an only-null cell has diversity 0 and
+    * still flags). Output: total combos, low-diversity combos, rows at
+    * risk, and the smallest diversity seen. */
   def lDiversitySummary(
       df: DataFrame, quasiCols: Seq[String], sensitiveCol: String,
       l: Long): DataFrame =

@@ -87,26 +87,6 @@ object Stats {
       .drop("__s", "__ss", "__n")
   }
 
-  /** Min-max scaling to [0,1] (same one-aggregate shape; constant
-    * columns map to null). */
-  def minMaxScale(
-      df: DataFrame, column: String, groupCols: Seq[String] = Nil,
-      outCol: String = "scaled"): DataFrame = {
-    val x = Cleaning.qcol(column).cast("double")
-    val aggs = Seq(min(Cleaning.qcol(column)).as("__mn"), max(Cleaning.qcol(column)).as("__mx"))
-    val stats =
-      if (groupCols.isEmpty) df.agg(aggs.head, aggs.tail: _*)
-      else df.groupBy(groupCols.map(Cleaning.qcol): _*).agg(aggs.head, aggs.tail: _*)
-    val joined =
-      if (groupCols.isEmpty) df.crossJoin(broadcast(stats))
-      else df.join(stats, groupCols)
-    joined
-      .withColumn(outCol,
-        when(col("__mx") > col("__mn"),
-          (x - col("__mn").cast("double")) / (col("__mx").cast("double") - col("__mn"))))
-      .drop("__mn", "__mx")
-  }
-
   /** Pairwise Pearson correlation matrix over integral columns in ONE
     * hash aggregate — the feature-audit step before model training
     * (find collinear/degenerate features). Output long format:
@@ -241,39 +221,15 @@ object Stats {
           - col("n_null_a").cast("double") / col("n_rows_a"))
   }
 
-  def describeApprox(df: DataFrame, column: String, accuracy: Int = 10000): DataFrame = {
-    val c = Cleaning.toNumeric(Cleaning.qcol(column))
-    val agged = df.agg(
-      count(c).cast("double").as("count"),
-      avg(c).as("mean"),
-      min(c).as("min"),
-      approx_percentile(c, lit(0.25), lit(accuracy)).as("p25"),
-      approx_percentile(c, lit(0.5), lit(accuracy)).as("p50"),
-      approx_percentile(c, lit(0.75), lit(accuracy)).as("p75"),
-      max(c).as("max"))
-    val metrics = Seq("count", "mean", "min", "p25", "p50", "p75", "max")
-    val pairs = metrics.map(m => struct(lit(m).as("metric"), col(m).cast("double").as("value")))
-    agged.select(explode(array(pairs: _*)).as("kv"))
-      .select(col("kv.metric").as("metric"), col("kv.value").as("value"))
-  }
-
-  /** Approximate distinct count per group (HyperLogLog++): constant
-    * memory per group vs countDistinct's expand+dedup — the scale path
-    * for high-cardinality distincts.
-    */
-  def approxDistinct(df: DataFrame, countCol: String, groupCols: Seq[String],
-      rsd: Double = 0.02): DataFrame =
-    df.groupBy(groupCols.map(Cleaning.qcol): _*)
-      .agg(approx_count_distinct(Cleaning.qcol(countCol), rsd).as("n_approx"))
-
-  /** Verdict frame gating [[approxDistinct]] against the exact count —
+  /** Verdict frame gating an HLL++ distinct count
+    * (`approx_count_distinct`) against the exact count —
     * the same contract as the ANN recall gates: the sketch value
     * itself is engine-specific (HLL++ register layout), so the output
     * carries the EXACT count plus a `within_tol` boolean the oracle
     * pins to TRUE. HLL++ is deterministic for a given multiset (merges
     * take per-register max — order-invariant), so the verdict is
     * re-run- and partitioning-stable. Production callers use
-    * [[approxDistinct]] alone: constant memory per group and a
+    * `approx_count_distinct` alone: constant memory per group and a
     * map-side-mergeable register blob vs countDistinct's full
     * key-expand shuffle — at 100 TB the difference between shuffling
     * registers and shuffling every key occurrence.

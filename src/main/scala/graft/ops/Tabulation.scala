@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Frequency / tabulation operators (SURVEY.md §2.3: A1, A2, A5, A6, A10).
   *

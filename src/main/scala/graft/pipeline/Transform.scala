@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.config.MappingConfig
 import graft.bht.{Builders, Kpis}

@@ -3,7 +3,7 @@ package graft.scale
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The curation pipeline's last mile as ONE call: clean → mix → split →
+/** The curation pipeline's last mile: clean → mix → split →
   * shard-packed manifest. Each stage is an already-verified operator
   * ([[TextAnalysis.cleanCorpus]], [[Sampling.sampleByTemperature]],
   * [[Sampling.splitAssign]], [[TextAnalysis.packSequences]]); this is
@@ -34,39 +34,11 @@ import org.apache.spark.sql.functions._
   */
 object Curation {
 
-  /** @param materializeClean snapshot the cleaned corpus once
-    *        (`localCheckpoint`) before the mixing stage. The
-    *        temperature fit COLLECTS per-source masses — an action —
-    *        and the returned manifest plan scans the cleaned corpus
-    *        again, so without a snapshot the clean filters run twice
-    *        (at 100 TB: a second full corpus scan). The snapshot is
-    *        lineage-free and GC-released (no session-lifetime persist
-    *        to leak); results are identical either way — production
-    *        pipelines that materialize `clean` to storage between
-    *        stages get the same effect and can leave this off.
-    */
-  def curate(
-      docs: DataFrame, idCol: String, textCol: String, sourceCol: String,
-      allowedLangs: Seq[String],
-      alpha: Double, totalBudget: Long,
-      splits: Seq[(String, Double)],
-      packBudget: Int = 512, shards: Int = 8,
-      metaCols: Seq[String] = Nil,
-      k: Int = 3, threshold: Double = 0.2,
-      maxBlockSize: Int = Dedup.DefaultMaxBucketSize,
-      materializeClean: Boolean = false): DataFrame = {
-    val clean0 = TextAnalysis.cleanCorpus(docs, idCol, textCol, allowedLangs, k, threshold, maxBlockSize)
-    val clean = if (materializeClean) clean0.localCheckpoint() else clean0
-    curateCleaned(clean, idCol, textCol, sourceCol, alpha, totalBudget,
-      splits, packBudget, shards, metaCols)
-  }
-
-  /** The post-clean stages of [[curate]] (mix → split → pack) on an
-    * ALREADY-cleaned corpus — the entry point for pipelines that
+  /** The post-clean stages (mix → split → pack) on an ALREADY-cleaned
+    * corpus ([[TextAnalysis.cleanCorpus]] output) — pipelines
     * materialize the cleaned snapshot to storage between stages (the
     * production shape: clean once, consume many times; see
-    * SparkEntry's fit-once snapshot cache). `curate` == `cleanCorpus`
-    * then `curateCleaned`, by construction.
+    * SparkEntry's fit-once snapshot cache).
     */
   def curateCleaned(
       clean: DataFrame, idCol: String, textCol: String, sourceCol: String,

@@ -672,44 +672,6 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** Survivors of a wave probed against PREBUILT index frames: batch
-    * rows with no verified near-dup in the accepted set. This is the
-    * per-micro-batch body of a STREAMING incremental dedup
-    * (`foreachBatch` hands each micro-batch here as a plain batch
-    * frame against the persisted parquet index — see StreamsSpec's
-    * incremental case); the same call serves batch waves that already
-    * keep the index materialized.
-    */
-  def dedupAgainstBandIndex(
-      batch: DataFrame, indexBuckets: DataFrame, indexShingles: DataFrame,
-      idCol: String, textCol: String,
-      k: Int = 5, numHashes: Int = 64, bands: Int = 16,
-      threshold: Double = 0.7, seed: Long = 42L,
-      maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    val pairs = nearDupMinhashAgainstIndex(
-      batch, indexBuckets, indexShingles,
-      idCol, textCol, k, numHashes, bands, threshold, seed, maxBucketSize)
-    batch.join(pairs.select(col("id_a").as(idCol)).distinct(),
-      Seq(idCol), "left_anti")
-  }
-
-  /** One-call incremental near-dedup: build the index frames from an
-    * accepted corpus inline (production persists them — see
-    * [[minhashBandIndex]]) and return the batch rows with no near-dup
-    * in the accepted set. The MinHash analogue of
-    * [[dedupAgainstIndex]]'s exact fingerprint anti-join.
-    */
-  def dedupIncrementalMinhash(
-      batch: DataFrame, accepted: DataFrame, idCol: String, textCol: String,
-      k: Int = 5, numHashes: Int = 64, bands: Int = 16,
-      threshold: Double = 0.7, seed: Long = 42L,
-      maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
-    dedupAgainstBandIndex(
-      batch,
-      minhashBandIndex(accepted, idCol, textCol, k, numHashes, bands, seed),
-      hashedShingleTable(accepted, idCol, textCol, k),
-      idCol, textCol, k, numHashes, bands, threshold, seed, maxBucketSize)
-
   /** Exact n-gram Jaccard over ALL same-bucket pairs where the bucket is
     * a cheap blocking key (here: doc length band + first token), i.e. a
     * bounded quadratic within tiny blocks. For unblocked exactness use
@@ -1126,7 +1088,7 @@ object Dedup {
     * [[clusters]] — this needs no join against the corpus at all: the
     * result is bounded by the duplicate mass, and in the driver path it
     * is a broadcastable local relation, so the caller's anti-join never
-    * shuffles the corpus. [[cleanCorpus]]/[[deduplicate]] build on this.
+    * shuffles the corpus. [[TextAnalysis.cleanCorpus]] builds on this.
     */
   def nonRepresentatives(
       pairs: DataFrame, maxIter: Int = 20,
@@ -1286,34 +1248,6 @@ object Dedup {
       org.apache.spark.sql.types.StructField("id", idType),
       org.apache.spark.sql.types.StructField("cluster", idType)))
     spark.createDataFrame(labelRows, schema)
-  }
-
-  /** End-to-end near-dedup: MinHash+LSH candidate pairs → Jaccard verify
-    * → connected components → keep only cluster representatives (the min
-    * id of each near-dup cluster). The one-call form of the full
-    * training-data dedup pipeline; returns the deduplicated DataFrame
-    * with all original columns.
-    */
-  /** @param maxIter / checkEvery forwarded to [[clusters]] — a corpus
-    *        whose near-dup chains exceed `maxIter` hops makes clusters()
-    *        throw (by design), so the one-call form must give callers
-    *        the same recourse. */
-  def deduplicate(
-      df: DataFrame, idCol: String, textCol: String,
-      k: Int = 5, numHashes: Int = 64, bands: Int = 16,
-      threshold: Double = 0.7, seed: Long = 42L,
-      maxBucketSize: Int = DefaultMaxBucketSize,
-      maxIter: Int = 20, checkEvery: Int = 2): DataFrame = {
-    val pairs = nearDupMinhash(df, idCol, textCol, k, numHashes, bands, threshold, seed, maxBucketSize)
-    // anti-join on the DROP set (bounded by the duplicate mass, a
-    // broadcast local relation in the driver-CC path) instead of a
-    // semi-join on representatives through clusters(): the latter embeds
-    // the corpus a second time inside the labels frame, doubling the
-    // upstream scan at every action
-    df.join(
-      nonRepresentatives(pairs, maxIter, checkEvery)
-        .select(col("id").as(idCol)),
-      Seq(idCol), "left_anti")
   }
 
   /** Cross-document duplicated n-gram statistics — the repetition /
@@ -1497,15 +1431,13 @@ object Dedup {
     * side is a pre-distinct'd fingerprint table — bytes per historical
     * doc, not the document itself.
     */
-  /** The ONE content fingerprint both incremental exact-dedup paths
-    * (anti-join and Bloom probe) key on — xxhash64 of the normalized
-    * token stream, NULL-guarded: Spark's xxhash64 SKIPS null inputs
-    * (returns the seed hash), which would silently collapse every
-    * null-text row into ONE shared fingerprint and drop null-text
-    * batch rows as "duplicates" of any null-text index row. A null
-    * fingerprint matches nothing (anti-join) / tests false (Bloom), so
-    * guarded rows are kept as novel. Shared so the two paths can never
-    * diverge on what counts as a duplicate.
+  /** The content fingerprint incremental exact dedup keys on —
+    * xxhash64 of the normalized token stream, NULL-guarded: Spark's
+    * xxhash64 SKIPS null inputs (returns the seed hash), which would
+    * silently collapse every null-text row into ONE shared fingerprint
+    * and drop null-text batch rows as "duplicates" of any null-text
+    * index row. A null fingerprint matches nothing in the anti-join,
+    * so guarded rows are kept as novel.
     */
   private def tokenFingerprint(t: Column): Column =
     when(t.isNotNull, xxhash64(array_join(TextAnalysis.tokens(t), " ")))
@@ -1517,63 +1449,6 @@ object Dedup {
     batch.withColumn("__fp__", tokenFingerprint(graft.ops.Cleaning.qcol(textCol)))
       .join(indexFps, Seq("__fp__"), "left_anti")
       .drop("__fp__")
-  }
-
-  /** Incremental exact dedup via a BLOOM membership probe — the
-    * zero-join variant of [[dedupAgainstIndex]] for when even the
-    * co-partitioned anti-join is too much: the accepted corpus'
-    * fingerprint set is folded into one Bloom filter, and the batch is
-    * filtered by a pure narrow `might_contain` — NO shuffle of either
-    * side at probe time. The filter ships as a literal (built once,
-    * `numBits/8` bytes: ~12 MB at 10⁷ items / 1% fpp — the same
-    * driver-sized-model class as the PQ codebooks; past ~10⁹ items the
-    * literal outgrows the driver and the anti-join form is the right
-    * tool again, or shard the index into per-range blooms).
-    *
-    * Build: a `treeAggregate` of sketch-library partials (each task
-    * folds its partition into a local filter; filters OR together up
-    * the tree). Spark's own `BloomFilterAggregate` is deliberately NOT
-    * used: it silently clamps sizing to the session's runtime-filter
-    * caps (default 4M items / 8 MB) via `Math.min` — at the 10⁷-item
-    * default that clamp degrades the effective fpp to ~10% without a
-    * word — and working around it by raising the confs would mutate
-    * SESSION-GLOBAL state, racing with concurrent queries on the same
-    * session. The self-built sketch is exactly sized, conf-free, and
-    * thread-safe; its wire format is the same sketch-library one
-    * `BloomFilterMightContain` deserializes, so the probe side stays a
-    * native codegen'd expression.
-    *
-    * Semantics: NO false negatives — every true duplicate is dropped,
-    * guaranteed; a false positive (rate `fpp`) drops a NOVEL document.
-    * That asymmetry is the right one for dedup (losing 1% of novel
-    * docs is noise; keeping duplicates is the failure mode), but it is
-    * approximate-by-nature and hash-dependent — spec-graded, not
-    * oracle-keyed (cf. [[dedupAgainstIndex]] for the exact form).
-    * Null-text batch rows are kept, matching the anti-join (a null
-    * never matches the index; null fingerprints are dropped before the
-    * build, matching `BloomFilterAggregate`'s null-skipping update).
-    */
-  def dedupAgainstIndexBloom(
-      batch: DataFrame, index: DataFrame, idCol: String, textCol: String,
-      expectedItems: Long = 10000000L, fpp: Double = 0.01): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.util.sketch.BloomFilter
-    val bloom = index
-      .select(tokenFingerprint(graft.ops.Cleaning.qcol(textCol)).as("__fp__"))
-      .filter(col("__fp__").isNotNull)
-      .as(org.apache.spark.sql.Encoders.scalaLong)
-      .rdd
-      .treeAggregate(BloomFilter.create(expectedItems, fpp))(
-        (bf, v) => { bf.putLong(v); bf },
-        (a, b) => { a.mergeInPlace(b); a })
-    val bos = new java.io.ByteArrayOutputStream()
-    bloom.writeTo(bos)
-    val might = GraftBridge.column(BloomFilterMightContain(
-      Literal.create(bos.toByteArray,
-        org.apache.spark.sql.types.BinaryType),
-      GraftBridge.expr(tokenFingerprint(graft.ops.Cleaning.qcol(textCol)))))
-    batch.filter(!coalesce(might, lit(false)))
   }
 
   /** Content-defined chunk table: one row per CDC chunk of each
@@ -1832,39 +1707,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         Similarity.cosine(col("__v_a__"), col("__v_b__")).as("cosine"))
       .filter(col("cosine") >= threshold)
-  }
-
-  /** Survivors of a wave probed against the semantic index: batch rows
-    * with no verified semantic duplicate in the accepted set — the
-    * per-micro-batch body of a streaming semantic-dedup accept loop
-    * (foreachBatch probes, survivors' [[semanticCellIndex]] rows append
-    * to the persisted index; the centroids NEVER refit mid-stream).
-    */
-  def dedupAgainstSemanticIndex(
-      batch: DataFrame, index: DataFrame, idCol: String, vecCol: String,
-      centroids: Array[Array[Double]], threshold: Double = 0.95,
-      maxCellSize: Int = DefaultMaxBucketSize): DataFrame = {
-    val pairs = semanticDedupPairsAgainstIndex(
-      batch, index, idCol, vecCol, centroids, threshold, maxCellSize)
-    batch.join(pairs.select(col("id_a").as(idCol)).distinct(),
-      Seq(idCol), "left_anti")
-  }
-
-  /** One-call semantic dedup: keep the min-id representative of every
-    * semantic-duplicate component (connected components over
-    * [[semanticDedupPairs]], same hybrid CC as [[deduplicate]]).
-    */
-  def semanticDedup(
-      df: DataFrame, idCol: String, vecCol: String,
-      nlist: Int = 256, threshold: Double = 0.95,
-      seed: Long = 42L, maxCellSize: Int = DefaultMaxBucketSize,
-      maxIter: Int = 20, checkEvery: Int = 2,
-      centroids0: Option[Array[Array[Double]]] = None): DataFrame = {
-    val pairs = semanticDedupPairs(df, idCol, vecCol, nlist, threshold, seed, maxCellSize, centroids0)
-    df.join(
-      nonRepresentatives(pairs, maxIter, checkEvery)
-        .select(col("id").as(idCol)),
-      Seq(idCol), "left_anti")
   }
 
   /** Embedding-cosine near-dup pairs via random-hyperplane LSH buckets +

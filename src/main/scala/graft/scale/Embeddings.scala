@@ -29,9 +29,9 @@ object Embeddings {
     * cross-engine comparison of the already-engine-exact doubles.
     *
     * The quantized codes themselves are a row-local `transform` away
-    * (see `quantize` below) — this table form emits the scalar columns
-    * the driver's oracle can hash (array columns are not hashable by
-    * the compare harness).
+    * (the clamp inside [[quantizeRecon]]) — this table form emits the
+    * scalar columns the driver's oracle can hash (array columns are not
+    * hashable by the compare harness).
     */
   /** Embedding hygiene audit per label — run BEFORE any cosine-based
     * pipeline stage: zero-norm vectors poison cosine (the library's
@@ -138,13 +138,6 @@ object Embeddings {
           array_max(zip_with(col("__v"), col("__recon"),
             (a, b) => abs(a.cast("double") - b))), 6).as("max_abs_err"))
   }
-
-  /** Quantized int8 codes as an array column (for writers that persist
-    * the compressed form alongside `qscale`). */
-  def quantize(v: Column, scale: Column): Column =
-    transform(v, x =>
-      least(greatest(halfUp(x.cast("double") / scale), lit(-127.0)), lit(127.0))
-        .cast("int"))
 
   /** Dequantized reconstruction v'_i = q_i * scale (as doubles). */
   def quantizeRecon(v: Column, scale: Column): Column =

@@ -123,25 +123,6 @@ object Models {
     rows.map(_.getSeq[Double](1).toArray)
   }
 
-  /** Persist a [[Embeddings.groupCentroids]] frame — the class-centroid
-    * model for [[Embeddings.assignToCentroids]]: fit once on a labeled
-    * wave, reuse on every later delivery. Plain parquet (doubles are
-    * IEEE-lossless there), one file — the frame is driver-sized by the
-    * [[Embeddings.MaxCentroidModelRows]] contract.
-    */
-  def saveGroupCentroids(cents: DataFrame, path: String): Unit =
-    cents.repartition(1).write.mode("overwrite").parquet(path)
-
-  /** Load a model saved by [[saveGroupCentroids]]; fails loudly on a
-    * path that is not a groupCentroids artifact. */
-  def loadGroupCentroids(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.parquet(path)
-    val missing = Seq("pos", "centroid").filterNot(df.columns.contains)
-    require(missing.isEmpty,
-      s"loadGroupCentroids: $path is not a groupCentroids artifact (missing ${missing.mkString(", ")})")
-    df
-  }
-
   /** Persist a fitted PQ model: one row per (subspace, code) centroid
     * plus the (dim, m, k) shape on every row (m×k rows — self-describing
     * without a sidecar file).
@@ -185,9 +166,8 @@ object Models {
 
   /** Persist a [[TextAnalysis.hashedClassifierFit]] model — the
     * fit-once / score-every-wave reuse path of the quality-filter
-    * family (same contract as [[saveGroupCentroids]]): plain parquet,
-    * one file (the model is `buckets` rows by construction; longs are
-    * lossless there).
+    * family: plain parquet, one file (the model is `buckets` rows by
+    * construction; longs are lossless there).
     */
   def saveHashedClassifier(model: DataFrame, path: String): Unit = {
     val missing = HashClfCols.filterNot(model.columns.contains)
@@ -243,39 +223,5 @@ object Models {
     require(missing.isEmpty,
       s"loadBtStrengths: $path is not a saveBtModel artifact (missing ${missing.mkString(", ")})")
     df
-  }
-
-  /** Persist a learned BPE merge table ([[TextAnalysis.bpeFit]]) — the
-    * tokenizer artifact a pipeline fits once on a sample and applies
-    * to every delivery ([[TextAnalysis.bpeEncode]]). Plain parquet,
-    * one file: `merges` rows, rank-ordered.
-    */
-  def saveBpeMerges(
-      spark: SparkSession, merges: Seq[TextAnalysis.BpeMerge], path: String): Unit = {
-    require(merges.nonEmpty, "saveBpeMerges: empty merge table")
-    require(merges.map(_.rank) == merges.indices,
-      "saveBpeMerges: ranks must be contiguous from 0 in order")
-    import spark.implicits._
-    merges.map(m => (m.rank.toLong, m.left, m.right, m.pairCount))
-      .toDF("rank", "left", "right", "pair_count")
-      .repartition(1).write.mode("overwrite").parquet(path)
-  }
-
-  /** Load a merge table saved by [[saveBpeMerges]], rank-ordered;
-    * fails loudly on a path that is not such an artifact. */
-  def loadBpeMerges(spark: SparkSession, path: String): Seq[TextAnalysis.BpeMerge] = {
-    val df = spark.read.parquet(path)
-    val missing = Seq("rank", "left", "right", "pair_count")
-      .filterNot(df.columns.contains)
-    require(missing.isEmpty,
-      s"loadBpeMerges: $path is not a saveBpeMerges artifact (missing ${missing.mkString(", ")})")
-    val rows = df.select(col("rank"), col("left"), col("right"), col("pair_count"))
-      .orderBy(col("rank")).collect()
-    require(rows.nonEmpty, s"loadBpeMerges: empty model at $path")
-    val merges = rows.map(r => TextAnalysis.BpeMerge(
-      r.getLong(0).toInt, r.getString(1), r.getString(2), r.getLong(3))).toSeq
-    require(merges.map(_.rank) == merges.indices,
-      s"loadBpeMerges: non-contiguous ranks at $path — not a saveBpeMerges artifact")
-    merges
   }
 }

@@ -1,7 +1,6 @@
 package graft.scale
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing (SURVEY.md §7.4): treat image/audio/video

@@ -964,28 +964,12 @@ object Preferences {
     require(iterations >= 1, "btConvergence: need at least one iteration")
     require(countDiv >= 1, "btConvergence: countDiv must be >= 1")
     val (directed, totals) = btSetup(games, winnerCol, loserCol, countDiv)
-    btDeltas(directed, totals, iterations, None)
-  }
-
-  /** [[btConvergence]] over an existing pair matrix, optionally
-    * warm-started — the evidence row behind a refresh's iteration
-    * budget: a near-converged init's first-iteration max delta sits
-    * orders below the cold start's (PreferencesSpec pins it), which is
-    * exactly why [[btStrengthsFromPairs]] defaults to 2 iterations
-    * where the cold fit needs 4+. */
-  def btConvergenceFromPairs(
-      pairs: DataFrame, iterations: Int = 4, countDiv: Long = 1L,
-      init: Option[DataFrame] = None): DataFrame = {
-    require(iterations >= 1, "btConvergenceFromPairs: need at least one iteration")
-    require(countDiv >= 1, "btConvergenceFromPairs: countDiv must be >= 1")
-    val (directed, totals) = btSetupFromPairs(pairs, countDiv)
-    btDeltas(directed, totals, iterations, init)
+    btDeltas(directed, totals, iterations)
   }
 
   private def btDeltas(
-      directed: DataFrame, totals: DataFrame, iterations: Int,
-      init: Option[DataFrame]): DataFrame =
-    btFoldLocal(directed, totals, iterations, init) match {
+      directed: DataFrame, totals: DataFrame, iterations: Int): DataFrame =
+    btFoldLocal(directed, totals, iterations, None) match {
       case Some((_, _, localDeltas)) =>
         import org.apache.spark.sql.types._
         import scala.jdk.CollectionConverters._
@@ -998,7 +982,7 @@ object Preferences {
           StructField("max_delta_micro", LongType)))
         totals.sparkSession.createDataFrame(rows, schema)
       case None =>
-        var s = btInit(totals, init)
+        var s = btInit(totals, None)
         val deltas = (1 to iterations).map { i =>
           val next = btStep(directed, totals, s)
           val row = s.select(col("item"), col("s_micro").as("__prev"))

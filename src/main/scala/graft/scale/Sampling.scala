@@ -17,27 +17,6 @@ import graft.functions.PortableHash
   */
 object Sampling {
 
-  /** Systematic sampling: keep rows where `key % mod == hit`.
-    * Exactly reproducible anywhere; use when the key is uniformly
-    * distributed across the modulus (e.g. a dense surrogate id).
-    */
-  def systematic(df: DataFrame, keyCol: String, mod: Long, hit: Long = 0L): DataFrame = {
-    require(mod > 0 && hit >= 0 && hit < mod, s"need 0 <= hit < mod, got $hit % $mod")
-    df.filter(pmod(graft.ops.Cleaning.qcol(keyCol).cast("long"), lit(mod)) === hit)
-  }
-
-  /** Hash-based sampling: keep ~fraction of rows by hashing the key —
-    * robust to non-uniform / clustered keys (the production default;
-    * xxhash64 is not mirrored by the DuckDB oracle, so tests cover it
-    * via invariance properties instead).
-    */
-  def byHash(df: DataFrame, keyCol: String, fraction: Double, seed: Long = 42L): DataFrame = {
-    require(fraction >= 0 && fraction <= 1, s"fraction must be in [0,1], got $fraction")
-    val buckets = 1000000L
-    val cut = (fraction * buckets).toLong
-    df.filter(pmod(xxhash64(graft.ops.Cleaning.qcol(keyCol), lit(seed)), lit(buckets)) < cut)
-  }
-
   /** Weighted (importance) sampling: inclusion probability proportional
     * to a weight column at a target overall rate —
     * P(keep) = min(1, targetFrac · w / mean(w)). The curation move
@@ -137,7 +116,7 @@ object Sampling {
     val tok = coalesce(
       TextAnalysis.tokenCount(graft.ops.Cleaning.qcol(textCol)).cast("long"), lit(0L))
     val observed = df.groupBy(g.as("group")).agg(sum(tok).as("tokens"))
-    val joined = observed.join(broadcast(lattice), Seq("group"), "full_outer")
+    val joined = observed.join(lattice, Seq("group"), "full_outer")
       .select(col("group"),
         coalesce(col("tokens"), lit(0L)).as("tokens"),
         coalesce(col("target_micro"), lit(0L)).as("target_micro"))

@@ -21,14 +21,6 @@ object Shingling {
           sequence(lit(0), size(tokens) - k),
           i => array_join(slice(tokens, i + 1, lit(k)), " ")))
 
-  /** Exact Jaccard of two pre-distinct string arrays (reference form;
-    * production pairs use `Native.jaccardSorted` on hashed sets). */
-  def jaccard(a: Column, b: Column): Column = {
-    val inter = size(array_intersect(a, b))
-    val union = size(a) + size(b) - inter
-    when(union > 0, inter.cast("double") / union).otherwise(lit(0.0))
-  }
-
   /** Deterministic universal-hash family over xxhash64 output:
     * h_i(x) = (a_i * x + b_i) mod p, folded to non-negative long.
     * Coefficients derive from a fixed seed so every run/JVM agrees.

@@ -1818,8 +1818,8 @@ object TextAnalysis {
   /** Span-frequency index over an accepted corpus: (span_hash, n) —
     * the persisted state of the incremental span-dedup loop (same
     * probe-and-grow pattern as the MinHash band index,
-    * [[graft.scale.Dedup.minhashBandIndex]]). Merge waves with
-    * [[mergeSpanIndexes]].
+    * [[graft.scale.Dedup.minhashBandIndex]]). A wave grows it by
+    * union with the wave's own index, summing `n` per `span_hash`.
     */
   def spanIndex(
       df: DataFrame, idCol: String, textCol: String, w: Int = 8): DataFrame = {
@@ -1829,13 +1829,6 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n"))
       .select(col("span_hash"), col("n"))
   }
-
-  /** Union two span indexes, summing counts — the index-growth step
-    * after a wave is accepted. */
-  def mergeSpanIndexes(a: DataFrame, b: DataFrame): DataFrame =
-    a.select(col("span_hash"), col("n"))
-      .unionByName(b.select(col("span_hash"), col("n")))
-      .groupBy(col("span_hash")).agg(sum(col("n")).as("n"))
 
   /** Incremental [[maskRepeatedSpans]]: a new delivery is masked
     * against the combined span frequency of the batch itself AND a

@@ -1,7 +1,6 @@
 package graft.scale
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
 
 /** REAL video-container decode — RIFF/AVI with raw DIB (uncompressed
   * BGR24) frames, completing the modality triple beside the round-11

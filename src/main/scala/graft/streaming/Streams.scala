@@ -15,19 +15,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 object Streams {
 
   /** Tumbling-window aggregation: per (window, event_type) count +
-    * value sum. On a streaming input, couple with `withWatermark` (see
-    * `windowedStream`). `window_start` is emitted as epoch seconds for
-    * engine-portable comparison.
-    */
-  def windowedCounts(events: DataFrame, windowLen: String = "1 hour"): DataFrame =
-    events
-      .groupBy(window(col("ts"), windowLen).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("value_sum"))
-      .select(
-        unix_timestamp(col("w.start")).as("window_start"),
-        col("event_type"), col("n_events"), col("value_sum"))
-
-  /** The streaming form: watermarked, append-mode-compatible. */
+    * value sum, watermarked and append-mode-compatible on a stream (on
+    * a batch frame the watermark is a no-op). */
   def windowedStream(events: DataFrame, windowLen: String = "1 hour",
       watermark: String = "2 hours"): DataFrame =
     events
@@ -137,7 +126,6 @@ object Streams {
     */
   def funnel(events: DataFrame, steps: Seq[String]): DataFrame = {
     require(steps.nonEmpty, "funnel needs at least one step")
-    val spark = events.sparkSession
     val e = events.select(col("user_id"), col("event_type"), col("ts"))
     // fold: times(i) = per-user min ts of step i events AFTER times(i-1)
     val stageTimes: Seq[DataFrame] = steps.zipWithIndex.foldLeft(Seq.empty[DataFrame]) {
@@ -274,46 +262,6 @@ object Streams {
         sum(col("credit_micro")).as("credit_sum_micro"),
         max(col("n_touches")).as("max_touches"))
 
-  /** Streaming form: both sides watermarked, so the join state the
-    * runtime buffers is bounded by watermark + gap (left rows older
-    * than the horizon can never match a new right row and are evicted).
-    * Same operators as the batch form — `attributionJoin` is its oracle.
-    */
-  def attributionJoinStream(
-      events: DataFrame, fromType: String, toType: String,
-      gapMinutes: Int = 30, watermark: String = "2 hours"): DataFrame = {
-    val l = events.withWatermark("ts", watermark)
-      .filter(col("event_type") === fromType)
-      .select(col("user_id"), col("ts").as("from_ts"))
-    val r = events.withWatermark("ts", watermark)
-      .filter(col("event_type") === toType)
-      .select(col("user_id").as("__r_uid__"), col("ts").as("to_ts"))
-    l.join(r,
-        col("user_id") === col("__r_uid__") &&
-          col("to_ts") > col("from_ts") &&
-          col("to_ts") <= col("from_ts") + expr(s"INTERVAL $gapMinutes MINUTES"))
-      .select(col("user_id"), col("from_ts"), col("to_ts"))
-  }
-
-  /** Streaming corpus curation: the row-local quality filter composes
-    * unchanged onto a stream (narrow maps are trivially incremental);
-    * exact content dedup keys on the normalized-token fingerprint with
-    * state bounded by the watermark horizon. The streaming counterpart
-    * of `TextAnalysis.cleanCorpus`'s filter+exact-dedup stages (near-dup
-    * clustering stays a batch compaction — it needs the pair graph).
-    */
-  def curateStream(
-      docs: DataFrame, textCol: String, tsCol: String,
-      watermark: String = "1 hour"): DataFrame = {
-    val t = graft.ops.Cleaning.qcol(textCol)
-    docs.filter(graft.scale.TextAnalysis.qualityKeep(t))
-      .withColumn("__fp__",
-        xxhash64(array_join(graft.scale.TextAnalysis.tokens(t), " ")))
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark("__fp__")
-      .drop("__fp__")
-  }
-
   case class SessionEvent(user_id: Long, ts: java.sql.Timestamp, value: Double)
   case class SessionState(start: Long, last: Long, n: Long, sum: Double)
   case class SessionOut(user_id: Long, session_start: Long, session_end: Long,
@@ -352,62 +300,6 @@ object Streams {
             }
           }
           state.update(sessions)
-          out.iterator
-      }
-  }
-
-  case class TsEvent(user_id: Long, ts: java.sql.Timestamp, event_id: Long, value: Double)
-  case class DevOut(key: Long, id: Long, vm: Long, roll_n: Long,
-      roll_sum: Option[Long], roll_abs_sum: Option[Long], dev100: Option[Long],
-      is_anomaly: Boolean)
-
-  /** Streaming rolling relative-deviation flag — the stateful twin of
-    * [[graft.ops.TimeSeries.rollingDeviation]]: per key, keep the last
-    * `rollN` micro-values as state and test each arriving event
-    * against the divisionless inequality `|v·n − Σv|·100 > pct·Σ|v|`
-    * over its strictly-preceding frame. With per-key in-order arrival
-    * the output is ROW-IDENTICAL to the batch operator (spec-pinned);
-    * out-of-order arrivals evaluate against the frame as of arrival —
-    * the usual streaming/batch disorder caveat the disorder audit
-    * sizes.
-    *
-    * Scale/state: exactly `rollN` longs per key, forever — no
-    * watermark needed because the state never grows with time, only
-    * with key cardinality (the sessionization family's bound).
-    */
-  def rollingDeviationStream(
-      events: Dataset[TsEvent], rollN: Int = 5, thresholdPct: Int = 200,
-      minObs: Int = 3): Dataset[DevOut] = {
-    require(rollN >= 1 && minObs >= 1 && minObs <= rollN && thresholdPct > 0,
-      "rollingDeviationStream: need rollN >= minObs >= 1 and a positive threshold")
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Vector[Long], DevOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (userId: Long, it: Iterator[TsEvent], state: GroupState[Vector[Long]]) =>
-          // same order key as the batch window: (ts, event_id)
-          val sorted = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-          var buf = state.getOption.getOrElse(Vector.empty[Long])
-          val out = scala.collection.mutable.ListBuffer[DevOut]()
-          sorted.foreach { e =>
-            // the batch microVal formula, bit for bit
-            val vm = math.floor(e.value * 1000000.0 + 0.5).toLong
-            val n = buf.size.toLong
-            if (n == 0) {
-              out += DevOut(userId, e.event_id, vm, 0L, None, None, None,
-                is_anomaly = false)
-            } else {
-              val s = buf.sum
-              val as = buf.map(math.abs).sum
-              val dev = math.abs(vm * n - s) * 100L
-              out += DevOut(userId, e.event_id, vm, n, Some(s), Some(as),
-                Some(dev), is_anomaly = n >= minObs && dev > thresholdPct * as)
-            }
-            buf = (buf :+ vm).takeRight(rollN)
-          }
-          state.update(buf)
           out.iterator
       }
   }

@@ -38,8 +38,8 @@ class CleaningSpec extends AnyFunSuite {
   }
 
   test("T8 pandas stringify: null becomes literal 'nan'") {
-    val got = Seq[(java.lang.Integer, String)]((1, "x"), (null, "y")).toDF("c", "k")
-      .select(Cleaning.strAsPandas(col("c"))).collect().map(_.getString(0))
+    val df = Seq[(java.lang.Integer, String)]((1, "x"), (null, "y")).toDF("c", "k")
+    val got = df.select(Cleaning.strAsPandasTyped(df, "c")).collect().map(_.getString(0))
     assert(got.toSeq == Seq("1", "nan"))
   }
 

@@ -80,41 +80,6 @@ class ContractsSpec extends AnyFunSuite {
     assert((r.getLong(5), r.getLong(6)) === ((1L, 100L)))
   }
 
-  test("schemaDriftAudit: added/removed/type_changed rows, empty on identity") {
-    val before = Seq((1L, "a", 1.0)).toDF("id", "name", "score")
-    val after = Seq((1L, 1, true)).toDF("id", "name", "fresh")
-    val got = Contracts.schemaDriftAudit(before, after, "docs.v2")
-      .collect().map(r => (r.getString(1), r.getString(2),
-        Option(r.getString(3)), Option(r.getString(4)))).toSet
-    assert(got === Set(
-      ("fresh", "added", None, Some("BOOLEAN")),
-      ("score", "removed", Some("DOUBLE"), None),
-      ("name", "type_changed", Some("STRING"), Some("INT"))))
-    assert(Contracts.schemaDriftAudit(before, before, "same").count() === 0L)
-  }
-
-  test("schemaDriftAudit: duplicate column names surface as their own rows, never a silent last-wins") {
-    // duplicate names are legal post-join; a name->type map would keep
-    // only the last entry and could report the duplicated column as
-    // clean. The audit must flag the name itself and keep the verdict
-    // on unambiguous columns untouched.
-    val l = Seq((1L, "a")).toDF("id", "v")
-    val r = Seq((1L, 2.0)).toDF("id", "v")
-    val dupAfter = l.join(r, "id") // columns: id, v (STRING), v (DOUBLE)
-    val before = Seq((1L, "a")).toDF("id", "v")
-    val got = Contracts.schemaDriftAudit(before, dupAfter, "joined")
-      .collect().map(r => (r.getString(1), r.getString(2),
-        Option(r.getString(3)), Option(r.getString(4)))).toSet
-    assert(got === Set(
-      ("v", "duplicate", Some("STRING"), Some("STRING,DOUBLE"))))
-    // duplicated on the before side only: same dedicated row, sides swapped
-    val got2 = Contracts.schemaDriftAudit(dupAfter, before, "unjoined")
-      .collect().map(r => (r.getString(1), r.getString(2),
-        Option(r.getString(3)), Option(r.getString(4)))).toSet
-    assert(got2 === Set(
-      ("v", "duplicate", Some("STRING,DOUBLE"), Some("STRING"))))
-  }
-
   test("freshnessAudit: lag vs a passed-in as-of; empty delivery is stale") {
     val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     val df = Seq((1L, ts)).toDF("id", "ts")

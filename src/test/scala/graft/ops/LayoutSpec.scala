@@ -40,34 +40,6 @@ class LayoutSpec extends AnyFunSuite {
     assert(z.forall { case (xe, ye) => xe <= 7L && ye <= 7L })
   }
 
-  test("fileStatsAudit: z-ordered files carry tight rectangles on BOTH keys") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-zorder").toString
-    // 64x64 grid, payload per cell
-    val grid = (for (x <- 0L until 64L; y <- 0L until 64L) yield (x, y, x * 64 + y))
-      .toDF("x", "y", "payload")
-    grid.repartition(16).write.mode("overwrite").parquet(s"$dir/plain")
-    Layout.zOrdered(grid, "x", "y", numFiles = 16, bits = 6)
-      .write.mode("overwrite").parquet(s"$dir/zorder")
-    def meanArea(path: String): Double = {
-      val rows = Layout.fileStatsAudit(spark, path, Seq("x", "y"))
-        .collect().map(r => (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
-      rows.map { case (nx, xx, ny, xy) =>
-        (xx - nx + 1).toDouble * (xy - ny + 1).toDouble }.sum / rows.length
-    }
-    val (plain, z) = (meanArea(s"$dir/plain"), meanArea(s"$dir/zorder"))
-    // hash-random files cover ~the whole 64x64 space; z-files cover
-    // ~1/16 of it — require at least a 4x win to be robust to range cuts
-    assert(z * 4 <= plain, s"z-order rectangles not tighter: z=$z plain=$plain")
-  }
-
-  test("zOrdered: row-preserving relayout") {
-    val df = (0L until 100L).map(i => (i % 10, i / 10, i)).toDF("x", "y", "payload")
-    val out = Layout.zOrdered(df, "x", "y", numFiles = 4, bits = 4)
-    assert(out.columns.toSeq == Seq("x", "y", "payload"))
-    assert(out.select(sum(col("payload"))).head.getLong(0) == (0L until 100L).sum)
-    assert(out.count() == 100L)
-  }
-
   test("compactionPlan: contiguous start-offset binning per directory") {
     val man = Seq(
       ("a", "p0", 100L), ("a", "p1", 100L), ("a", "p2", 300L), ("a", "p3", 50L),

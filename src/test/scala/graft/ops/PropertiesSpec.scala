@@ -119,13 +119,6 @@ class PropertiesSpec extends AnyFunSuite {
     }
   }
 
-  test("hash sampling: cut monotone in fraction (smaller sample is a subset)") {
-    val ids = (0L until 400L).toDF("k")
-    val small = graft.scale.Sampling.byHash(ids, "k", 0.1).collect().map(_.getLong(0)).toSet
-    val big = graft.scale.Sampling.byHash(ids, "k", 0.3).collect().map(_.getLong(0)).toSet
-    assert(small.subsetOf(big))
-  }
-
   test("packSequences: token mass is conserved and packs never start past the budget") {
     val docGen = Gen.listOfN(60, Gen.choose(0, 40))
     samples(docGen, 5).foreach { lens =>

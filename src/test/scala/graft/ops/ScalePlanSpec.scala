@@ -238,8 +238,9 @@ class ScalePlanSpec extends AnyFunSuite {
     val docs = (0L until 40L).map(i =>
       (i, s"the u${i}a a u${i}b of u${i}c and u${i}d is u${i}e", s"s${i % 2}"))
       .toDF("doc_id", "text", "source")
-    val plan = graft.scale.Curation.curate(docs, "doc_id", "text", "source",
-      allowedLangs = Seq("en"), alpha = 0.5, totalBudget = 100L,
+    val plan = graft.scale.Curation.curateCleaned(
+      graft.scale.TextAnalysis.cleanCorpus(docs, "doc_id", "text", allowedLangs = Seq("en")),
+      "doc_id", "text", "source", alpha = 0.5, totalBudget = 100L,
       splits = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
       packBudget = 32, shards = 2)
     assert(unpartitionedWindows(plan).isEmpty,

@@ -76,14 +76,6 @@ class SkewProfileSpec extends AnyFunSuite {
     assert(math.abs(out(1.5) + 1.0) < 1e-12 && math.abs(out(3.5) - 1.0) < 1e-12)
   }
 
-  test("minMaxScale maps to [0,1], null for constant columns") {
-    val df = Seq(10L, 20L, 30L).toDF("v")
-    val got = Stats.minMaxScale(df, "v").select("scaled").collect().map(_.getDouble(0)).sorted
-    assert(got.toSeq == Seq(0.0, 0.5, 1.0))
-    val const = Seq(5L, 5L).toDF("v")
-    assert(Stats.minMaxScale(const, "v").collect().forall(_.isNullAt(1)))
-  }
-
   test("profile counts rows, nulls, and distincts per column") {
     val df = Seq(
       (Some("a"), Some(1)), (Some("a"), None),

@@ -139,16 +139,6 @@ class CurationSpec extends AnyFunSuite {
     assert(rows(1L).isNullAt(1) && rows(1L).isNullAt(2))
   }
 
-  test("quantize codes clamp to [-127, 127] and roundtrip via recon") {
-    val d = Seq((0L, Array(10.0f, -127.5f, 0.1f))).toDF("vec_id", "embedding")
-    val q = d.select(
-      Embeddings.quantize(col("embedding"),
-        array_max(transform(col("embedding"), x => abs(x.cast("double")))) / 127.0).as("q"))
-      .head().getSeq[Int](0)
-    assert(q.forall(v => v >= -127 && v <= 127))
-    assert(q(1) == -127)
-  }
-
   test("sampleByTokenBudget caps over-budget groups, keeps others whole") {
     val d = (0L until 300L).map { i =>
       val src = if (i < 200) "big" else "small"
@@ -269,8 +259,9 @@ class CurationSpec extends AnyFunSuite {
       val src = s"s${i % 3}"
       (i, s"the u${i}a a u${i}b of u${i}c and u${i}d is u${i}e to u${i}f", src)
     }.toDF("doc_id", "text", "source")
-    val out = Curation.curate(d, "doc_id", "text", "source",
-      allowedLangs = Seq("en"), alpha = 0.5, totalBudget = 750L,
+    val out = Curation.curateCleaned(
+      TextAnalysis.cleanCorpus(d, "doc_id", "text", allowedLangs = Seq("en")),
+      "doc_id", "text", "source", alpha = 0.5, totalBudget = 750L,
       splits = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
       packBudget = 64, shards = 4, metaCols = Seq("source"))
     val rows = out.collect()
@@ -291,8 +282,9 @@ class CurationSpec extends AnyFunSuite {
       }
     }
     // deterministic + partitioning-invariant end to end
-    val again = Curation.curate(d.repartition(13), "doc_id", "text", "source",
-      allowedLangs = Seq("en"), alpha = 0.5, totalBudget = 750L,
+    val again = Curation.curateCleaned(
+      TextAnalysis.cleanCorpus(d.repartition(13), "doc_id", "text", allowedLangs = Seq("en")),
+      "doc_id", "text", "source", alpha = 0.5, totalBudget = 750L,
       splits = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
       packBudget = 64, shards = 4, metaCols = Seq("source")).collect()
     assert(rows.map(_.toSeq).toSet == again.map(_.toSeq).toSet)

@@ -54,9 +54,12 @@ class DedupSpec extends AnyFunSuite {
     assert(pairs.forall { case (a, b) => a >= 10L && b < 10L })
     assert(!pairs.exists(_._2 == 3L))
 
-    // the one-call form drops exactly the near-dup batch rows
-    val kept = Dedup.dedupIncrementalMinhash(batch, accepted, "doc_id", "text",
-      k = 3, numHashes = 64, bands = 64, threshold = 0.5)
+    // anti-joining the probe's pairs drops exactly the near-dup batch rows
+    val kept = batch.join(
+        Dedup.nearDupMinhashAgainstIndex(batch, idx, sets,
+          "doc_id", "text", k = 3, numHashes = 64, bands = 64, threshold = 0.5)
+          .select(col("id_a").as("doc_id")),
+        Seq("doc_id"), "left_anti")
       .select("doc_id").as[Long].collect().toSet
     assert(kept == Set(12L))
 
@@ -99,8 +102,11 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("deduplicate: end-to-end keeps one representative per near-dup cluster") {
-    val out = Dedup.deduplicate(docs, "doc_id", "text",
+    val pairs = Dedup.nearDupMinhash(docs, "doc_id", "text",
       k = 3, numHashes = 64, bands = 16, threshold = 0.5)
+    val out = docs.join(
+        Dedup.nonRepresentatives(pairs).select(col("id").as("doc_id")),
+        Seq("doc_id"), "left_anti")
       .select("doc_id").as[Long].collect().toSet
     // docs 1,2,4 form one near-dup cluster (1 kept); 3 is unrelated
     assert(out == Set(1L, 3L))
@@ -325,41 +331,6 @@ class DedupSpec extends AnyFunSuite {
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
   }
 
-  test("bloom index probe: every true dup dropped, novel docs survive, anti-join agrees") {
-    val accepted = (0L until 500L).map(i => (i, s"accepted document number $i with stable content"))
-      .toDF("doc_id", "text")
-    val batch = Seq(
-      (1000L, "accepted document number 7 with stable content"),   // true dup (norm-equal)
-      (1001L, "Accepted  DOCUMENT number 7 with stable content"),  // dup after normalization
-      (1002L, "a genuinely novel delivery document nothing matches"),
-      (1003L, "another brand new document from the latest crawl wave")
-    ).toDF("doc_id", "text")
-    val kept = Dedup.dedupAgainstIndexBloom(batch, accepted, "doc_id", "text",
-      expectedItems = 1000L, fpp = 0.01)
-      .select("doc_id").as[Long].collect().toSet
-    // no false negatives ever; these two novels survive (deterministic
-    // given the hash family — pinned, not probabilistic, once written)
-    assert(kept == Set(1002L, 1003L))
-    // bloom survivors are a subset of the exact anti-join's survivors
-    val exact = Dedup.dedupAgainstIndex(batch, accepted, "doc_id", "text")
-      .select("doc_id").as[Long].collect().toSet
-    assert(kept.subsetOf(exact))
-    // empty index drops nothing
-    val none = Dedup.dedupAgainstIndexBloom(batch, accepted.limit(0), "doc_id", "text")
-      .select("doc_id").as[Long].collect().toSet
-    assert(none == Set(1000L, 1001L, 1002L, 1003L))
-    // the DEFAULT sizing (10M items) exceeds Spark's silent runtime
-    // bloom caps (4M items / 8 MB): the build must raise the session
-    // confs so the documented fpp holds, and restore them afterwards
-    val itemsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
-    val bitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
-    val before = (spark.conf.get(itemsKey), spark.conf.get(bitsKey))
-    val keptDefault = Dedup.dedupAgainstIndexBloom(batch, accepted, "doc_id", "text")
-      .select("doc_id").as[Long].collect().toSet
-    assert(keptDefault == Set(1002L, 1003L))
-    assert((spark.conf.get(itemsKey), spark.conf.get(bitsKey)) == before)
-  }
-
   test("semanticDedupPairsAgainstIndex: batch probes accepted cells only; cap drops hot cell") {
     // accepted corpus: two directions; batch: one near-dup of each + a novel
     val accepted = Seq(
@@ -376,8 +347,11 @@ class DedupSpec extends AnyFunSuite {
       batch, idx, "vec_id", "embedding", cents, threshold = 0.9)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs == Set((10L, 1L), (11L, 2L)))
-    val kept = Dedup.dedupAgainstSemanticIndex(
-      batch, idx, "vec_id", "embedding", cents, threshold = 0.9)
+    val kept = batch.join(
+        Dedup.semanticDedupPairsAgainstIndex(
+          batch, idx, "vec_id", "embedding", cents, threshold = 0.9)
+          .select(col("id_a").as("vec_id")),
+        Seq("vec_id"), "left_anti")
       .select("vec_id").as[Long].collect().toSet
     assert(kept == Set(12L))
     // a hot cell past the cap is dropped on BOTH sides: cap=1 suppresses
@@ -409,8 +383,10 @@ class DedupSpec extends AnyFunSuite {
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((0L, 1L)) && pairs.contains((10L, 11L)))
     assert(!pairs.exists(p => p._1 == 20L || p._2 == 20L))
-    val kept = Dedup.semanticDedup(df, "vec_id", "embedding",
-      nlist = 2, threshold = 0.99)
+    val kept = df.join(
+        Dedup.nonRepresentatives(Dedup.semanticDedupPairs(df, "vec_id", "embedding",
+          nlist = 2, threshold = 0.99)).select(col("id").as("vec_id")),
+        Seq("vec_id"), "left_anti")
       .select("vec_id").as[Long].collect().toSet
     // min-id representative per component; 2 survives the 0.99 bar
     assert(kept == Set(0L, 2L, 10L, 20L))

@@ -94,33 +94,6 @@ class ModelsSpec extends AnyFunSuite {
     assert(ivf == flat)
   }
 
-  test("group-centroid model: save/load roundtrip, wave-2 assignment identical, loud non-artifact error") {
-    val labeled = (0 until 60).map { i =>
-      (i.toLong, Array.tabulate(4)(j => (math.cos(i % 3 * 10 + j) * 2).toFloat), i % 3)
-    }.toDF("vec_id", "embedding", "label")
-    val cents = Embeddings.groupCentroids(labeled, "label", "embedding")
-    val dir = tmp("models-group-centroids")
-    Models.saveGroupCentroids(cents, dir)
-    val loaded = Models.loadGroupCentroids(spark, dir)
-    // bit-exact roundtrip (parquet doubles are lossless)
-    assert(loaded.orderBy("label", "pos").collect().toSeq ==
-      cents.orderBy("label", "pos").collect().toSeq)
-    // wave 2 tags with the LOADED wave-1 model — no drift vs in-memory
-    val wave2 = (100 until 130).map { i =>
-      (i.toLong, Array.tabulate(4)(j => (math.cos(i % 3 * 10 + j) * 2 + 0.01).toFloat))
-    }.toDF("vec_id", "embedding")
-    val viaLoaded = Embeddings.assignToCentroids(wave2, "embedding", loaded, "label")
-      .orderBy("vec_id").collect().toSeq
-    val viaMemory = Embeddings.assignToCentroids(wave2, "embedding", cents, "label")
-      .orderBy("vec_id").collect().toSeq
-    assert(viaLoaded == viaMemory)
-    val pqDir = tmp("models-notcentroids")
-    Models.savePq(spark, Pq.syntheticModel(dim = 8, m = 2, k = 4), pqDir)
-    assertThrows[IllegalArgumentException] {
-      Models.loadGroupCentroids(spark, pqDir) // a PQ artifact, not centroids
-    }
-  }
-
   test("hashed-classifier model: save/load roundtrip scores identically, wrong artifact rejected") {
     import spark.implicits._
     val train = Seq(
@@ -145,32 +118,6 @@ class ModelsSpec extends AnyFunSuite {
     Models.savePq(spark, Pq.syntheticModel(dim = 8, m = 2, k = 4), pqDir2)
     assertThrows[IllegalArgumentException] {
       Models.loadHashedClassifier(spark, pqDir2)
-    }
-  }
-
-  test("BPE merge table: save/load roundtrip, encode parity, wrong artifact rejected") {
-    import spark.implicits._
-    val docs = Seq((1L, "ab ab ab cd cd"), (2L, "abc abc")).toDF("doc_id", "text")
-    val merges = TextAnalysis.bpeFit(docs, "text", merges = 5)
-    assert(merges.nonEmpty)
-    val dir = tmp("models-bpe")
-    Models.saveBpeMerges(spark, merges, dir)
-    val loaded = Models.loadBpeMerges(spark, dir)
-    assert(loaded == merges)
-    // the wave-reuse contract: encoding with the LOADED table is
-    // identical to encoding with the in-memory fit
-    val direct = TextAnalysis.bpeEncode(docs, "doc_id", "text", merges)
-      .orderBy("doc_id").collect().toSeq
-    val viaDisk = TextAnalysis.bpeEncode(docs, "doc_id", "text", loaded)
-      .orderBy("doc_id").collect().toSeq
-    assert(direct == viaDisk)
-    val pqDir = tmp("models-notbpe")
-    Models.savePq(spark, Pq.syntheticModel(dim = 8, m = 2, k = 4), pqDir)
-    assertThrows[IllegalArgumentException] {
-      Models.loadBpeMerges(spark, pqDir)
-    }
-    assertThrows[IllegalArgumentException] {
-      Models.saveBpeMerges(spark, Nil, tmp("models-bpe-empty"))
     }
   }
 

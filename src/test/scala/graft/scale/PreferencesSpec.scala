@@ -216,17 +216,6 @@ class PreferencesSpec extends AnyFunSuite {
       "an item new in wave 2 must enter the refreshed model")
   }
 
-  test("warm convergence: the near-converged init's first delta sits far below the cold start's") {
-    val pairs = Preferences.pairStats(games, "winner", "loser")
-    val prev = Preferences.btStrengths(games, "winner", "loser", iterations = 6)
-    val cold1 = Preferences.btConvergenceFromPairs(pairs, iterations = 1)
-      .collect().head.getLong(1)
-    val warm1 = Preferences.btConvergenceFromPairs(pairs, iterations = 1,
-      init = Some(prev)).collect().head.getLong(1)
-    assert(warm1 * 5 < cold1,
-      s"warm first-iteration max delta ($warm1) must be <20% of cold ($cold1)")
-  }
-
   // 3-rater panel: item 1 unanimous, item 2 majority, item 3 three-way
   // split, item 4 single-rated (excluded: no pairable agreement)
   private def panel = Seq(

@@ -9,22 +9,6 @@ class SamplingSpec extends AnyFunSuite {
 
   private def keys = (0L until 1000L).toDF("k")
 
-  test("systematic keeps exactly key % mod == hit") {
-    val out = Sampling.systematic(keys, "k", 10L, 3L).collect().map(_.getLong(0))
-    assert(out.length == 100 && out.forall(_ % 10 == 3))
-  }
-
-  test("hash sampling is deterministic and near the target fraction") {
-    val a = Sampling.byHash(keys, "k", 0.2).collect().map(_.getLong(0)).toSet
-    val b = Sampling.byHash(keys, "k", 0.2).collect().map(_.getLong(0)).toSet
-    assert(a == b) // reproducible across runs
-    assert(a.size > 120 && a.size < 280) // ~200 expected
-    // repartitioning must not change membership (unlike df.sample)
-    val c = Sampling.byHash(keys.repartition(7), "k", 0.2)
-      .collect().map(_.getLong(0)).toSet
-    assert(c == a)
-  }
-
   test("temperature sampling: alpha < 1 up-weights small sources, deterministic, budget-capped") {
     import org.apache.spark.sql.functions._
     // big source: 900 docs x 10 tokens; small: 100 docs x 10 tokens

@@ -63,7 +63,7 @@ class StreamsSpec extends AnyFunSuite {
   }
 
   test("windowed counts: tumbling hour per event_type") {
-    val got = Streams.windowedCounts(events, "1 hour")
+    val got = Streams.windowedStream(events, "1 hour")
       .select("event_type", "n_events", "value_sum")
       .as[(String, Long, Double)].collect().toSet
     assert(got == Set(("click", 3L, 11.0), ("view", 1L, 4.0)))
@@ -109,7 +109,7 @@ class StreamsSpec extends AnyFunSuite {
       val got = spark.table("fileout")
         .select("event_type", "n_events", "value_sum")
         .as[(String, Long, Double)].collect().toSet
-      val batch = Streams.windowedCounts(events, "1 hour")
+      val batch = Streams.windowedStream(events, "1 hour")
         .select("event_type", "n_events", "value_sum")
         .as[(String, Long, Double)].collect().toSet
       assert(got == batch)
@@ -167,7 +167,7 @@ class StreamsSpec extends AnyFunSuite {
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[(Long, Timestamp, String, Double)]
     val df = mem.toDF().toDF("user_id", "ts", "event_type", "value")
-    val q = Streams.attributionJoinStream(df, "click", "purchase", 30, "2 hours")
+    val q = Streams.attributionJoin(df.withWatermark("ts", "2 hours"), "click", "purchase", 30)
       .writeStream.outputMode("append").format("memory").queryName("attrout").start()
     try {
       val rows = ev.as[(Long, Timestamp, String, Double)].collect()
@@ -188,74 +188,6 @@ class StreamsSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("curateStream: quality filter + watermarked content dedup on a stream") {
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[(Long, Timestamp, String)]
-    val df = mem.toDF().toDF("doc_id", "ts", "text")
-    val q = Streams.curateStream(df, "text", "ts", "1 hour")
-      .writeStream.outputMode("append").format("memory").queryName("curout").start()
-    try {
-      val good = "plain clean sentence with enough tokens here"
-      mem.addData(
-        (1L, ts(0), good),
-        (2L, ts(1), "Plain  clean sentence WITH enough tokens here"), // same normalized content
-        (3L, ts(2), "!!! ??? ***"),                                   // fails quality
-        (4L, ts(3), "short"))                                         // < 5 tokens
-      q.processAllAvailable()
-      // batch 2: a LATE duplicate of doc 1 (event-time before doc 4,
-      // within the 1h watermark) must be dropped against batch-1 STATE,
-      // plus a genuinely new document that must survive
-      mem.addData(
-        (6L, ts(2), good),                                            // late cross-batch duplicate
-        (5L, ts(4), "a different clean document with many tokens"))
-      q.processAllAvailable()
-      val ids = spark.table("curout").select("doc_id").as[Long].collect().toSet
-      // docs 2 and 6 deduped against 1 (same token stream), 3-4 filtered
-      assert(ids == Set(1L, 5L))
-    } finally q.stop()
-  }
-
-  test("curateStream e2e: file source + checkpoint restart, exactly-once, state survives") {
-    // the full production shape: files arrive in waves, the query dies
-    // between waves, and the restart must (a) not re-emit wave-1 output
-    // (file-sink exactly-once off the checkpoint's commit log) and
-    // (b) still dedup wave-2 content against wave-1 STATE (the
-    // dropDuplicatesWithinWatermark store restored from checkpoint)
-    val root = java.nio.file.Files.createTempDirectory("graft-curate-e2e").toString
-    val (srcDir, ckDir, outDir) = (s"$root/src", s"$root/ck", s"$root/out")
-    val good = "plain clean sentence with enough tokens here"
-    Seq((1L, ts(0), good),
-      (2L, ts(1), "Plain  clean sentence WITH enough tokens here"), // same normalized content
-      (3L, ts(2), "!!! ??? ***"))                                   // fails quality
-      .toDF("doc_id", "ts", "text").write.parquet(srcDir)
-
-    def runOnce(): Unit = {
-      val src = spark.readStream
-        .schema("doc_id LONG, ts TIMESTAMP, text STRING")
-        .parquet(srcDir)
-      val q = Streams.curateStream(src, "text", "ts", "1 hour")
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckDir)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    runOnce() // wave 1, then the query stops (a deploy, a crash)
-
-    Seq((6L, ts(2), good),                                          // late cross-restart duplicate
-      (5L, ts(4), "a different clean document with many tokens"))
-      .toDF("doc_id", "ts", "text").write.mode("append").parquet(srcDir)
-    runOnce() // restart from the same checkpoint picks up wave 2 only
-
-    val out = spark.read.parquet(outDir).select("doc_id").as[Long].collect().toSeq
-    // one representative of the {1,2} content group (file-source
-    // partition order picks which — dropDuplicatesWithinWatermark keeps
-    // the first PROCESSED, unlike the deterministic batch keeper), the
-    // novel doc, nothing else, nothing twice, and crucially no doc 6:
-    // its dup was only ever visible to wave-1 state THROUGH the restart
-    assert(out.size == 2 && out.toSet.subsetOf(Set(1L, 2L, 5L)) && out.contains(5L),
-      s"restart must neither re-emit wave 1 nor pass the cross-restart dup: $out")
-  }
-
   test("streaming incremental near-dedup: foreachBatch probes and grows the band index") {
     implicit val sc = spark.sqlContext
     import graft.scale.Dedup
@@ -274,8 +206,9 @@ class StreamsSpec extends AnyFunSuite {
     val q = mem.toDF().toDF("doc_id", "text").writeStream
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val keep = Dedup.dedupAgainstBandIndex(batch, idxBuckets, idxSets,
+        val dups = Dedup.nearDupMinhashAgainstIndex(batch, idxBuckets, idxSets,
           "doc_id", "text", k = 3, numHashes = 64, bands = 64, threshold = 0.5)
+        val keep = batch.join(dups.select(col("id_a").as("doc_id")), Seq("doc_id"), "left_anti")
           .localCheckpoint()
         survived ++= keep.select("doc_id").as[Long].collect()
         idxBuckets = idxBuckets.unionByName(
@@ -320,8 +253,10 @@ class StreamsSpec extends AnyFunSuite {
     val q = mem.toDF().toDF("vec_id", "embedding").writeStream
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val keep = Dedup.dedupAgainstSemanticIndex(batch, index,
-          "vec_id", "embedding", cents, threshold = 0.9).localCheckpoint()
+        val dups = Dedup.semanticDedupPairsAgainstIndex(batch, index,
+          "vec_id", "embedding", cents, threshold = 0.9)
+        val keep = batch.join(dups.select(col("id_a").as("vec_id")), Seq("vec_id"), "left_anti")
+          .localCheckpoint()
         survived ++= keep.select("vec_id").as[Long].collect()
         index = index.unionByName(
           Dedup.semanticCellIndex(keep, "vec_id", "embedding", cents)).localCheckpoint()
@@ -379,38 +314,6 @@ class StreamsSpec extends AnyFunSuite {
     assert(perConv(4L) === 999999L && perConv(6L) === 1000000L)
   }
 
-  test("streaming rolling deviation matches the batch operator row-for-row across batches") {
-    implicit val sc = spark.sqlContext
-    val events = (1 to 9).map(i => Streams.TsEvent(
-      1L + i % 2, new Timestamp(i * 1000L), i.toLong, if (i == 8) 90.0 else 3.0))
-    val mem = MemoryStream[Streams.TsEvent]
-    val q = Streams.rollingDeviationStream(mem.toDS(), rollN = 3,
-        thresholdPct = 200, minObs = 2)
-      .writeStream.outputMode("append").format("memory").queryName("devout").start()
-    try {
-      // in-order per key, split across two batches: state must carry
-      mem.addData(events.take(5): _*)
-      q.processAllAvailable()
-      mem.addData(events.drop(5): _*)
-      q.processAllAvailable()
-      val got = spark.table("devout")
-        .select("key", "id", "vm", "roll_n", "roll_sum", "roll_abs_sum", "dev100", "is_anomaly")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-          Option(r.get(4)).map(_.asInstanceOf[Long]),
-          Option(r.get(5)).map(_.asInstanceOf[Long]),
-          Option(r.get(6)).map(_.asInstanceOf[Long]), r.getBoolean(7))).toSet
-      val batch = graft.ops.TimeSeries.rollingDeviation(
-          events.toDF().withColumnRenamed("user_id", "u"), "u", "ts", "event_id", "value",
-          rollN = 3, thresholdPct = 200, minObs = 2)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-          Option(r.get(4)).map(_.asInstanceOf[Long]),
-          Option(r.get(5)).map(_.asInstanceOf[Long]),
-          Option(r.get(6)).map(_.asInstanceOf[Long]), r.getBoolean(7))).toSet
-      assert(got === batch)
-      assert(got.exists(_._8), "the planted spike must flag on both paths")
-    } finally q.stop()
-  }
-
   test("streaming domain tagging: assignToCentroids over a loaded model is a stateless stream map") {
     // fit on batch wave 1, persist; the STREAM of later vectors tags
     // against the loaded model — the stateless E-step at ingest time
@@ -419,9 +322,9 @@ class StreamsSpec extends AnyFunSuite {
       (3L, Array(10.0f, 0.0f), 1), (4L, Array(9.8f, 0.0f), 1)
     ).toDF("vec_id", "embedding", "label")
     val dir = java.nio.file.Files.createTempDirectory("graft_cent_model").toString
-    graft.scale.Models.saveGroupCentroids(
-      graft.scale.Embeddings.groupCentroids(wave1, "label", "embedding"), dir)
-    val model = graft.scale.Models.loadGroupCentroids(spark, dir)
+    graft.scale.Embeddings.groupCentroids(wave1, "label", "embedding")
+      .write.mode("overwrite").parquet(dir)
+    val model = spark.read.parquet(dir)
 
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[(Long, Array[Float])]
@@ -444,7 +347,7 @@ class StreamsSpec extends AnyFunSuite {
     val licence = "this work is licensed under the terms below"
     // the accept-loop state: a span-frequency index grown per wave with
     // the wave's OWN spans (counts, never documents — production:
-    // parquet appends + periodic mergeSpanIndexes compaction)
+    // parquet appends + a periodic per-span_hash count compaction)
     var index = TextAnalysis.spanIndex(
       Seq((1L, licence)).toDF("doc_id", "text"), "doc_id", "text", w = 4)
       .localCheckpoint()
@@ -459,8 +362,8 @@ class StreamsSpec extends AnyFunSuite {
         out.select("doc_id", "n_dup_spans", "clean_text")
           .as[(Long, Long, String)].collect()
           .foreach { case (id, nds, t) => masked(id) = (nds, t) }
-        index = TextAnalysis.mergeSpanIndexes(index,
-          TextAnalysis.spanIndex(batch, "doc_id", "text", w = 4)).localCheckpoint()
+        index = index.unionByName(TextAnalysis.spanIndex(batch, "doc_id", "text", w = 4))
+          .groupBy("span_hash").agg(sum(col("n")).as("n")).localCheckpoint()
         ()
       }
       .start()
