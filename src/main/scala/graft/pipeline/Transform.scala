@@ -25,9 +25,8 @@ object Transform {
   def run(
       raw: DataFrame,
       cfg: MappingConfig,
-      codebook: Map[String, Map[String, String]] = Map.empty,
-      fullTab: Boolean = true): Map[String, DataFrame] =
-    runReleasable(raw, cfg, codebook, fullTab)._1
+      codebook: Map[String, Map[String, String]] = Map.empty): Map[String, DataFrame] =
+    runReleasable(raw, cfg, codebook)._1
 
   /** As [[run]], plus a release handle that unpersists the shared input
     * cache — call it once every output table has been materialized
@@ -37,8 +36,7 @@ object Transform {
   def runReleasable(
       raw: DataFrame,
       cfg: MappingConfig,
-      codebook: Map[String, Map[String, String]] = Map.empty,
-      fullTab: Boolean = true): (Map[String, DataFrame], () => Unit) = {
+      codebook: Map[String, Map[String, String]] = Map.empty): (Map[String, DataFrame], () => Unit) = {
 
     val df0 = if (codebook.nonEmpty) Cleaning.applyCodebook(raw, codebook) else raw
     val df = df0.persist(StorageLevel.MEMORY_AND_DISK)
@@ -66,10 +64,8 @@ object Transform {
     val brandDict =
       Map("brand_dictionary" -> Builders.brandDictionary(df, cfg.awareness.tom, groups))
 
-    val tab =
-      if (fullTab) Map("tabulation" -> Tabulation.fullTabulation(df))
-      else Map.empty[String, DataFrame]
+    val tab = "tabulation" -> Tabulation.fullTabulation(df)
 
-    (aware ++ usage ++ csat ++ nps ++ brandDict ++ tab, () => { df.unpersist(); () })
+    (aware ++ usage ++ csat ++ nps ++ brandDict + tab, () => { df.unpersist(); () })
   }
 }

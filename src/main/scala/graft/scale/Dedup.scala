@@ -82,6 +82,68 @@ object Dedup {
       buckets.join(oversized, keyCols, "left_anti")
     }
 
+  /** `df`'s `id` and `cols` (each a column and its pair name) named for
+    * pair side `s`: `id_<s>` and `<name>_<s>`, after the `keys`. */
+  private def pairSide(df: DataFrame, s: String, id: Column,
+      cols: Seq[(Column, String)], keys: Seq[String] = Nil): DataFrame =
+    df.select(keys.map(col) ++ (id.as(s"id_$s") +: cols.map { case (c, n) => c.as(s"${n}_$s") }): _*)
+
+  /** The blocked self-join under every near-dup operator: each unordered
+    * pair of `rows` sharing the block `keys`, once per shared block,
+    * oriented `id_a < id_b`. Each `carry` column rides both sides as
+    * `<name>_a` / `<name>_b`.
+    */
+  private def selfPairs(rows: DataFrame, keys: Seq[String], id: Column,
+      carry: (Column, String)*): DataFrame =
+    pairSide(rows, "a", id, carry, keys).join(pairSide(rows, "b", id, carry, keys), keys)
+      .filter(col("id_a") < col("id_b"))
+
+  /** Per-side fetch: attach `table`'s `fetch` columns to both sides of a
+    * pair frame with two id joins (`id_a` first) — the row whose `key`
+    * is `id_a` gives `<name>_a`, the row whose `key` is `id_b` gives
+    * `<name>_b`. Fetching after the pairs are formed keeps the heavy
+    * columns (shingle sets, vectors, member lists) out of the
+    * quadratic self-join.
+    */
+  private def withSides(pairs: DataFrame, table: DataFrame, key: Column,
+      fetch: (Column, String)*): DataFrame =
+    Seq("a", "b").foldLeft(pairs)((p, s) => p.join(pairSide(table, s, key, fetch), s"id_$s"))
+
+  /** Exact-collapse expansion (SCALE.md §6e), shared by every collapsed
+    * near-dup operator. `groups` holds one row per identical-content
+    * group: `__rep__` (its min id) and `__mem__` (its member ids).
+    * `verified` holds the representative pairs `(id_a, id_b, values…)`;
+    * each expands to every member × member pair with the rep pair's
+    * values. Groups are disjoint, so no member pair repeats;
+    * least/greatest restores `id_a < id_b`, and each per-side column
+    * pair in `swap` trades places where that flips the rep pair's
+    * orientation (containment is asymmetric). `intra` has one row per
+    * group whose members also pair among themselves; each such pair
+    * gets the `intraOut` values, which may read the named `perGroup`
+    * columns (evaluated over `intra`). Expansion joins are OUTPUT-sized:
+    * every produced row is an emitted pair.
+    */
+  private def expandCollapsed(
+      verified: DataFrame, groups: DataFrame, intra: DataFrame, intraOut: Seq[Column],
+      perGroup: Seq[Column] = Nil, swap: Seq[(String, String)] = Nil): DataFrame = {
+    val vals = verified.columns.toSeq.filterNot(Set("id_a", "id_b"))
+    val flip = (swap ++ swap.map(_.swap)).toMap
+    val inter = withSides(verified, groups, col("__rep__"), col("__mem__") -> "__m")
+      .select((explode(col("__m_a")).as("__x__") +: col("__m_b") +: vals.map(col)): _*)
+      .select((col("__x__") +: explode(col("__m_b")).as("__y__") +: vals.map(col)): _*)
+      .select((least(col("__x__"), col("__y__")).as("id_a") +:
+        greatest(col("__x__"), col("__y__")).as("id_b") +:
+        vals.map(v => flip.get(v).fold(col(v))(o =>
+          when(col("__x__") < col("__y__"), col(v)).otherwise(col(o)).as(v)))): _*)
+    val first = intra.select((col("__mem__") +: perGroup :+ explode(col("__mem__")).as("__x__")): _*)
+    val carried = first.columns.toSeq.filterNot(Set("__mem__", "__x__")).map(col)
+    val within = first
+      .select((col("__x__") +: carried :+ explode(col("__mem__")).as("__y__")): _*)
+      .filter(col("__x__") < col("__y__"))
+      .select((col("__x__").as("id_a") +: col("__y__").as("id_b") +: intraOut): _*)
+    inter.unionByName(within)
+  }
+
   /** LSH banding: explode each signature into (band, bandHash) bucket
     * keys; docs sharing any bucket are candidates.
     */
@@ -131,6 +193,14 @@ object Dedup {
     val rowsPerBand = numHashes / bands
     val id = graft.ops.Cleaning.qcol(idCol)
     val sets = hashedShingleTable(df, idCol, textCol, k)
+    // verify with sorted shingle-HASH sets: ~10× smaller shuffle than
+    // string shingle arrays, and the pairwise Jaccard is a native long
+    // merge-walk (hash collisions at 64 bits are negligible)
+    def verified(candidates: DataFrame, setTable: DataFrame, key: Column): DataFrame =
+      withSides(candidates, setTable, key, col("shingles") -> "sh")
+        .select(col("id_a"), col("id_b"),
+          graft.functions.Native.jaccardSorted(col("sh_a"), col("sh_b")).as("jaccard"))
+        .filter(col("jaccard") >= threshold)
 
     if (collapseIdentical) {
       val fam = Shingling.HashFamily(numHashes, seed)
@@ -159,41 +229,16 @@ object Dedup {
       val buckets = capBuckets(bandBuckets(repSigs, "__rep__", bands, rowsPerBand),
         Seq("band", "bucket"), maxBucketSize)
         .localCheckpoint(eager = false)
-      val a = buckets.select(col("band"), col("bucket"), col("__rep__").as("id_a"))
-      val b = buckets.select(col("band"), col("bucket"), col("__rep__").as("id_b"))
-      val candidates = a.join(b, Seq("band", "bucket"))
-        .filter(col("id_a") < col("id_b"))
+      val candidates = selfPairs(buckets, Seq("band", "bucket"), col("__rep__"))
         .select("id_a", "id_b").distinct()
-      val repSets = groups.select(col("__rep__"), col("shingles"))
-      val verified = candidates
-        .join(repSets.select(col("__rep__").as("id_a"), col("shingles").as("sh_a")), "id_a")
-        .join(repSets.select(col("__rep__").as("id_b"), col("shingles").as("sh_b")), "id_b")
-        .select(col("id_a"), col("id_b"),
-          graft.functions.Native.jaccardSorted(col("sh_a"), col("sh_b")).as("jaccard"))
-        .filter(col("jaccard") >= threshold)
-      // expansion joins are OUTPUT-sized: every produced row is an
-      // emitted pair. least/greatest restores the id_a < id_b contract
-      // (groups are disjoint, so no cross-pair can repeat).
-      val mem = groups.select(col("__rep__"), col("__mem__"))
-      val inter = verified
-        .join(mem.select(col("__rep__").as("id_a"), col("__mem__").as("__ma__")), "id_a")
-        .join(mem.select(col("__rep__").as("id_b"), col("__mem__").as("__mb__")), "id_b")
-        .select(explode(col("__ma__")).as("__x__"), col("__mb__"), col("jaccard"))
-        .select(col("__x__"), explode(col("__mb__")).as("__y__"), col("jaccard"))
-        .select(least(col("__x__"), col("__y__")).as("id_a"),
-          greatest(col("__x__"), col("__y__")).as("id_b"), col("jaccard"))
       // intra-group pairs: identical non-empty sets — Jaccard exactly
       // 1.0 (the brute-force merge-walk value; null-text groups have
       // null sets and emit nothing, matching the verify join's
       // null-drop on the uncollapsed path)
-      val intra = groups
-        .filter(size(col("shingles")) > 0 && size(col("__mem__")) > 1 &&
-          lit(1.0) >= threshold)
-        .select(col("__mem__"), explode(col("__mem__")).as("__x__"))
-        .select(col("__x__"), explode(col("__mem__")).as("__y__"))
-        .filter(col("__x__") < col("__y__"))
-        .select(col("__x__").as("id_a"), col("__y__").as("id_b"), lit(1.0).as("jaccard"))
-      inter.unionByName(intra)
+      expandCollapsed(verified(candidates, groups, col("__rep__")), groups,
+        groups.filter(size(col("shingles")) > 0 && size(col("__mem__")) > 1 &&
+          lit(1.0) >= threshold),
+        Seq(lit(1.0).as("jaccard")))
     } else {
       // r14 optimization: the signature frame feeds the cap (twice) and
       // both candidate sides — materialize the per-doc signatures once
@@ -210,24 +255,12 @@ object Dedup {
       // window count or a persist.
       val buckets = capBuckets(buckets0, Seq("band", "bucket"), maxBucketSize)
 
-      val a = buckets.select(col("band"), col("bucket"), id.as("id_a"))
-      val b = buckets.select(col("band"), col("bucket"), id.as("id_b"))
-      val candidates = a.join(b, Seq("band", "bucket"))
-        .filter(col("id_a") < col("id_b"))
+      val candidates = selfPairs(buckets, Seq("band", "bucket"), id)
         .select("id_a", "id_b").distinct()
 
-      // verify with sorted shingle-HASH sets: ~10× smaller shuffle than
-      // string shingle arrays, and the pairwise Jaccard is a native long
-      // merge-walk (hash collisions at 64 bits are negligible).
       // Both verify sides read the set table — materialize it once
       // (r14; hashes only, no text) instead of re-shingling per side.
-      val setsC = sets.localCheckpoint(eager = false)
-      candidates
-        .join(setsC.select(id.as("id_a"), col("shingles").as("sh_a")), "id_a")
-        .join(setsC.select(id.as("id_b"), col("shingles").as("sh_b")), "id_b")
-        .select(col("id_a"), col("id_b"),
-          graft.functions.Native.jaccardSorted(col("sh_a"), col("sh_b")).as("jaccard"))
-        .filter(col("jaccard") >= threshold)
+      verified(candidates, sets.localCheckpoint(eager = false), id)
     }
   }
 
@@ -505,10 +538,15 @@ object Dedup {
     val sets = hashedShingleTable(df, idCol, textCol, k)
       .localCheckpoint(eager = false)
 
-    def epilogue(pairs: DataFrame): DataFrame = pairs
-      .withColumn("cont_a", col("n_shared").cast("double") / col("n_a"))
-      .withColumn("cont_b", col("n_shared").cast("double") / col("n_b"))
-      .filter(greatest(col("cont_a"), col("cont_b")) >= threshold)
+    def verified(cands: DataFrame, setTable: DataFrame, key: Column): DataFrame =
+      withSides(cands, setTable, key, col("shingles") -> "sh")
+        .select(col("id_a"), col("id_b"),
+          graft.functions.Native.intersectSortedCount(col("sh_a"), col("sh_b")).as("n_shared"),
+          size(col("sh_a")).cast("long").as("n_a"),
+          size(col("sh_b")).cast("long").as("n_b"))
+        .withColumn("cont_a", col("n_shared").cast("double") / col("n_a"))
+        .withColumn("cont_b", col("n_shared").cast("double") / col("n_b"))
+        .filter(greatest(col("cont_a"), col("cont_b")) >= threshold)
 
     if (collapseIdentical) {
       // the collapse groupBy feeds six branches — one array-keyed
@@ -527,69 +565,26 @@ object Dedup {
             .filter(col("__df__") > maxShingleDocs).select(col("__sh"))
           repInv0.join(oversized, Seq("__sh"), "left_anti")
         }
-      val a = repInv.select(col("__sh"), col("__rep__").as("id_a"))
-      val b = repInv.select(col("__sh"), col("__rep__").as("id_b"))
-      val cands = a.join(b, Seq("__sh"))
-        .filter(col("id_a") < col("id_b"))
+      val cands = selfPairs(repInv, Seq("__sh"), col("__rep__"))
         .select("id_a", "id_b").distinct()
-      val repSets = groups.select(col("__rep__"), col("shingles"))
-      val verified = epilogue(cands
-        .join(repSets.select(col("__rep__").as("id_a"), col("shingles").as("sh_a")), "id_a")
-        .join(repSets.select(col("__rep__").as("id_b"), col("shingles").as("sh_b")), "id_b")
-        .select(col("id_a"), col("id_b"),
-          graft.functions.Native.intersectSortedCount(col("sh_a"), col("sh_b")).as("n_shared"),
-          size(col("sh_a")).cast("long").as("n_a"),
-          size(col("sh_b")).cast("long").as("n_b")))
-      val outCols = Seq("id_a", "id_b", "n_shared", "n_a", "n_b", "cont_a", "cont_b")
-      val mem = groups.select(col("__rep__"), col("__mem__"))
-      val inter = verified
-        .join(mem.select(col("__rep__").as("id_a"), col("__mem__").as("__ma__")), "id_a")
-        .join(mem.select(col("__rep__").as("id_b"), col("__mem__").as("__mb__")), "id_b")
-        .select((explode(col("__ma__")).as("__x__") +:
-          (col("__mb__") +: outCols.drop(2).map(col))): _*)
-        .select((col("__x__") +: explode(col("__mb__")).as("__y__") +:
-          outCols.drop(2).map(col)): _*)
-        // containment is ASYMMETRIC: when normalizing the expanded
-        // member pair to id_a < id_b flips the rep pair's orientation,
-        // the per-side columns must flip with it (n_shared is symmetric)
-        .select(
-          least(col("__x__"), col("__y__")).as("id_a"),
-          greatest(col("__x__"), col("__y__")).as("id_b"),
-          col("n_shared"),
-          when(col("__x__") < col("__y__"), col("n_a")).otherwise(col("n_b")).as("n_a"),
-          when(col("__x__") < col("__y__"), col("n_b")).otherwise(col("n_a")).as("n_b"),
-          when(col("__x__") < col("__y__"), col("cont_a")).otherwise(col("cont_b")).as("cont_a"),
-          when(col("__x__") < col("__y__"), col("cont_b")).otherwise(col("cont_a")).as("cont_b"))
       // a group member is an old-path candidate iff some group shingle
       // survives the cap — the surviving reps are exactly that set
       val surviving = repInv.select(col("__rep__")).distinct()
-      val intra = groups.join(surviving, Seq("__rep__"), "left_semi")
-        .filter(size(col("__mem__")) > 1)
-        .select(col("__mem__"), size(col("shingles")).cast("long").as("n_a"))
-        .select(col("__mem__"), col("n_a"), explode(col("__mem__")).as("__x__"))
-        .select(col("__x__"), col("n_a"), explode(col("__mem__")).as("__y__"))
-        .filter(col("__x__") < col("__y__"))
-        .select(col("__x__").as("id_a"), col("__y__").as("id_b"),
-          col("n_a").as("n_shared"), col("n_a"), col("n_a").as("n_b"),
-          lit(1.0).as("cont_a"), lit(1.0).as("cont_b"))
-      inter.unionByName(intra)
+      // containment is ASYMMETRIC: the per-side columns flip with the
+      // member pair's orientation (n_shared is symmetric)
+      expandCollapsed(verified(cands, groups, col("__rep__")), groups,
+        groups.join(surviving, Seq("__rep__"), "left_semi")
+          .filter(size(col("__mem__")) > 1)
+          .select(col("__mem__"), size(col("shingles")).cast("long").as("n_a")),
+        Seq(col("n_a").as("n_shared"), col("n_a"), col("n_a").as("n_b"),
+          lit(1.0).as("cont_a"), lit(1.0).as("cont_b")),
+        perGroup = Seq(col("n_a")), swap = Seq("n_a" -> "n_b", "cont_a" -> "cont_b"))
     } else {
       // per-doc sets are already distinct+sorted, so the inverted index
       // is one narrow explode; the cap keys on the shingle hash alone
       val inv = capBuckets(
         sets.select(id, explode(col("shingles")).as("__sh")), Seq("__sh"), maxShingleDocs)
-      val a = inv.select(col("__sh"), id.as("id_a"))
-      val b = inv.select(col("__sh"), id.as("id_b"))
-      val cands = a.join(b, Seq("__sh"))
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b").distinct()
-      epilogue(cands
-        .join(sets.select(id.as("id_a"), col("shingles").as("sh_a")), "id_a")
-        .join(sets.select(id.as("id_b"), col("shingles").as("sh_b")), "id_b")
-        .select(col("id_a"), col("id_b"),
-          graft.functions.Native.intersectSortedCount(col("sh_a"), col("sh_b")).as("n_shared"),
-          size(col("sh_a")).cast("long").as("n_a"),
-          size(col("sh_b")).cast("long").as("n_b")))
+      verified(selfPairs(inv, Seq("__sh"), id).select("id_a", "id_b").distinct(), sets, id)
     }
   }
 
@@ -732,6 +727,12 @@ object Dedup {
       graft.functions.Native.hashedShingleSet(toks, k).as("shingles"))
       .localCheckpoint(eager = false)
     val sets = capBuckets(sets0, Seq("block"), maxBlockSize)
+    def verified(rows: DataFrame, rowId: Column): DataFrame =
+      selfPairs(rows, Seq("block"), rowId, col("shingles") -> "sh")
+        .select(col("id_a"), col("id_b"),
+          graft.functions.Native.jaccardSorted(col("sh_a"), col("sh_b")).as("jaccard"))
+        .filter(col("jaccard") >= threshold)
+        .distinct()
 
     if (collapseIdentical) {
       // the collapse groupBy feeds five branches (both self-join sides,
@@ -739,40 +740,11 @@ object Dedup {
       val groups = sets.groupBy(col("block"), col("shingles"))
         .agg(min(id).as("__rep__"), collect_list(id).as("__mem__"))
         .localCheckpoint(eager = false)
-      val a = groups.select(col("block"), col("__rep__").as("id_a"), col("shingles").as("sh_a"))
-      val b = groups.select(col("block"), col("__rep__").as("id_b"), col("shingles").as("sh_b"))
-      val verified = a.join(b, "block")
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"),
-          graft.functions.Native.jaccardSorted(col("sh_a"), col("sh_b")).as("jaccard"))
-        .filter(col("jaccard") >= threshold)
-        .distinct()
-      val mem = groups.select(col("__rep__"), col("__mem__"))
-      val inter = verified
-        .join(mem.select(col("__rep__").as("id_a"), col("__mem__").as("__ma__")), "id_a")
-        .join(mem.select(col("__rep__").as("id_b"), col("__mem__").as("__mb__")), "id_b")
-        .select(explode(col("__ma__")).as("__x__"), col("__mb__"), col("jaccard"))
-        .select(col("__x__"), explode(col("__mb__")).as("__y__"), col("jaccard"))
-        .select(least(col("__x__"), col("__y__")).as("id_a"),
-          greatest(col("__x__"), col("__y__")).as("id_b"), col("jaccard"))
-      val intra = groups
-        .filter(size(col("shingles")) > 0 && size(col("__mem__")) > 1 &&
-          lit(1.0) >= threshold)
-        .select(col("__mem__"), explode(col("__mem__")).as("__x__"))
-        .select(col("__x__"), explode(col("__mem__")).as("__y__"))
-        .filter(col("__x__") < col("__y__"))
-        .select(col("__x__").as("id_a"), col("__y__").as("id_b"), lit(1.0).as("jaccard"))
-      inter.unionByName(intra)
-    } else {
-      val a = sets.select(col("block"), id.as("id_a"), col("shingles").as("sh_a"))
-      val b = sets.select(col("block"), id.as("id_b"), col("shingles").as("sh_b"))
-      a.join(b, "block")
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"),
-          graft.functions.Native.jaccardSorted(col("sh_a"), col("sh_b")).as("jaccard"))
-        .filter(col("jaccard") >= threshold)
-        .distinct()
-    }
+      expandCollapsed(verified(groups, col("__rep__")), groups,
+        groups.filter(size(col("shingles")) > 0 && size(col("__mem__")) > 1 &&
+          lit(1.0) >= threshold),
+        Seq(lit(1.0).as("jaccard")))
+    } else verified(sets, id)
   }
 
   /** Connected components over near-dup pairs: assign every id the MIN id
@@ -868,11 +840,8 @@ object Dedup {
     val keyed = capBuckets(keyed0, Seq("block"), maxBlockSize)
       .filter(col("__t").isNotNull)
 
-    def verifiedPairs(rows: DataFrame): DataFrame = {
-      val a = rows.select(col("block"), col("__id").as("id_a"), col("__t").as("t_a"))
-      val b = rows.select(col("block"), col("__id").as("id_b"), col("__t").as("t_b"))
-      a.join(b, "block")
-        .filter(col("id_a") < col("id_b"))
+    def verifiedPairs(rows: DataFrame, rowId: Column): DataFrame =
+      selfPairs(rows, Seq("block"), rowId, col("__t") -> "t")
         // |len(a) − len(b)| lower-bounds the edit distance, so this
         // prunes the O(|a|·|b|) DP without changing the result set (any
         // row it drops would fail the final filter) — no oracle impact
@@ -884,36 +853,19 @@ object Dedup {
         .filter(col("dist").cast("long") * 100L <= lit(maxDistPct.toLong) * col("max_len"))
         .select(col("id_a"), col("id_b"), col("dist").cast("long").as("dist"),
           col("max_len"))
-    }
 
     // r14 optimization (guide §5): both self-join sides (and, in the
     // collapse path, both member expansions and the intra emitter)
     // re-ran the cap's counting pass and the collapse groupBy per
     // branch — materialize the reused frame once; identical pairs out.
-    if (!collapseIdentical) verifiedPairs(keyed.localCheckpoint(eager = false))
+    if (!collapseIdentical) verifiedPairs(keyed.localCheckpoint(eager = false), col("__id"))
     else {
       val groups = keyed.groupBy(col("block"), col("__t"))
         .agg(min(col("__id")).as("__rep__"), collect_list(col("__id")).as("__mem__"))
         .localCheckpoint(eager = false)
-      val reps = groups.select(col("block"), col("__rep__").as("__id"), col("__t"))
-      val repPairs = verifiedPairs(reps)
-      val mem = groups.select(col("__rep__"), col("__mem__"))
-      val inter = repPairs
-        .join(mem.select(col("__rep__").as("id_a"), col("__mem__").as("__ma__")), "id_a")
-        .join(mem.select(col("__rep__").as("id_b"), col("__mem__").as("__mb__")), "id_b")
-        .select(explode(col("__ma__")).as("__x__"), col("__mb__"), col("dist"), col("max_len"))
-        .select(col("__x__"), explode(col("__mb__")).as("__y__"), col("dist"), col("max_len"))
-        .select(least(col("__x__"), col("__y__")).as("id_a"),
-          greatest(col("__x__"), col("__y__")).as("id_b"), col("dist"), col("max_len"))
-      val intra = groups
-        .filter(size(col("__mem__")) > 1)
-        .select(col("__mem__"), length(col("__t")).cast("long").as("max_len"),
-          explode(col("__mem__")).as("__x__"))
-        .select(col("__x__"), explode(col("__mem__")).as("__y__"), col("max_len"))
-        .filter(col("__x__") < col("__y__"))
-        .select(col("__x__").as("id_a"), col("__y__").as("id_b"),
-          lit(0L).as("dist"), col("max_len"))
-      inter.unionByName(intra)
+      expandCollapsed(verifiedPairs(groups, col("__rep__")), groups,
+        groups.filter(size(col("__mem__")) > 1), Seq(lit(0L).as("dist"), col("max_len")),
+        perGroup = Seq(length(col("__t")).cast("long").as("max_len")))
     }
   }
 
@@ -1550,6 +1502,12 @@ object Dedup {
           .bitwiseAND((1L << bitsPer) - 1).as("ckey"))
     }
 
+    def verified(buckets: DataFrame, bucketId: Column): DataFrame =
+      selfPairs(buckets, Seq("chunk", "ckey"), bucketId, col("fp") -> "fp")
+        .select(col("id_a"), col("id_b"), bit_count(col("fp_a").bitwiseXOR(col("fp_b"))).as("hamming"))
+        .filter(col("hamming") <= maxHamming) // cheap predicate BEFORE the dedup shuffle
+        .distinct()
+
     if (collapseIdentical) {
       // null fingerprints pair with nothing on the uncollapsed path
       // (equi-join keys); dropping that group up front preserves it
@@ -1561,28 +1519,9 @@ object Dedup {
         groups.select(col("__rep__"), col("fp"), explode(array(chunkStructs: _*)).as("cb"))
           .select(col("__rep__"), col("fp"), col("cb.chunk"), col("cb.ckey")),
         Seq("chunk", "ckey"), maxBucketSize)
-      val a = buckets.select(col("chunk"), col("ckey"), col("__rep__").as("id_a"), col("fp").as("fp_a"))
-      val b = buckets.select(col("chunk"), col("ckey"), col("__rep__").as("id_b"), col("fp").as("fp_b"))
-      val verified = a.join(b, Seq("chunk", "ckey"))
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"), bit_count(col("fp_a").bitwiseXOR(col("fp_b"))).as("hamming"))
-        .filter(col("hamming") <= maxHamming)
-        .distinct()
-      val mem = groups.select(col("__rep__"), col("__mem__"))
-      val inter = verified
-        .join(mem.select(col("__rep__").as("id_a"), col("__mem__").as("__ma__")), "id_a")
-        .join(mem.select(col("__rep__").as("id_b"), col("__mem__").as("__mb__")), "id_b")
-        .select(explode(col("__ma__")).as("__x__"), col("__mb__"), col("hamming"))
-        .select(col("__x__"), explode(col("__mb__")).as("__y__"), col("hamming"))
-        .select(least(col("__x__"), col("__y__")).as("id_a"),
-          greatest(col("__x__"), col("__y__")).as("id_b"), col("hamming"))
-      val intra = groups.filter(size(col("__mem__")) > 1)
-        .select(col("__mem__"), explode(col("__mem__")).as("__x__"))
-        .select(col("__x__"), explode(col("__mem__")).as("__y__"))
-        .filter(col("__x__") < col("__y__"))
-        .select(col("__x__").as("id_a"), col("__y__").as("id_b"),
-          lit(0).cast("int").as("hamming"))
-      inter.unionByName(intra)
+      expandCollapsed(verified(buckets, col("__rep__")), groups,
+        groups.filter(size(col("__mem__")) > 1),
+        Seq(lit(0).cast("int").as("hamming")))
     } else {
       val buckets0 = fp.select(id, col("fp"),
           explode(array(chunkStructs: _*)).as("cb"))
@@ -1594,15 +1533,7 @@ object Dedup {
       // standard LSH skew mitigation; the pigeonhole recall guarantee then
       // holds for pairs that share at least one NON-degenerate chunk.
       // maxBucketSize <= 0 disables the cap.
-      val buckets = capBuckets(buckets0, Seq("chunk", "ckey"), maxBucketSize)
-
-      val a = buckets.select(col("chunk"), col("ckey"), id.as("id_a"), col("fp").as("fp_a"))
-      val b = buckets.select(col("chunk"), col("ckey"), id.as("id_b"), col("fp").as("fp_b"))
-      a.join(b, Seq("chunk", "ckey"))
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"), bit_count(col("fp_a").bitwiseXOR(col("fp_b"))).as("hamming"))
-        .filter(col("hamming") <= maxHamming) // cheap predicate BEFORE the dedup shuffle
-        .distinct()
+      verified(capBuckets(buckets0, Seq("chunk", "ckey"), maxBucketSize), id)
     }
   }
 
@@ -1645,15 +1576,8 @@ object Dedup {
     val cells0 = df.select(id,
       graft.functions.Native.nearestCells(normArr, centroids, 1)(0).as("__cell__"))
     val cells = capBuckets(cells0, Seq("__cell__"), maxCellSize)
-    val pairs = cells.select(col("__cell__"), id.as("id_a"))
-      .join(cells.select(col("__cell__"), id.as("id_b")), Seq("__cell__"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-    val va = df.select(id.as("id_a"), v.as("__v_a__"))
-    val vb = df.select(id.as("id_b"), v.as("__v_b__"))
-    pairs.join(va, "id_a").join(vb, "id_b")
-      .select(col("id_a"), col("id_b"),
-        Similarity.cosine(col("__v_a__"), col("__v_b__")).as("cosine"))
+    withSides(selfPairs(cells, Seq("__cell__"), id).select("id_a", "id_b"), df, id, v -> "v")
+      .select(col("id_a"), col("id_b"), Similarity.cosine(col("v_a"), col("v_b")).as("cosine"))
       .filter(col("cosine") >= threshold)
   }
 
@@ -1726,20 +1650,13 @@ object Dedup {
     // r15: both self-join sides read the keyed frame — materialize it
     // once (three narrow columns) so the tables×bits hyperplane pass
     // over the vectors runs once, not twice (guide §2.4)
+    val id = graft.ops.Cleaning.qcol(idCol)
     val keyed = Similarity.withLshKeys(
-        df.select(graft.ops.Cleaning.qcol(idCol), graft.ops.Cleaning.qcol(vecCol)),
-        vecCol, bits, tables, seed, dim)
-      .select(col("table"), col("lsh_key"), graft.ops.Cleaning.qcol(idCol))
+        df.select(id, graft.ops.Cleaning.qcol(vecCol)), vecCol, bits, tables, seed, dim)
+      .select(col("table"), col("lsh_key"), id)
       .localCheckpoint(eager = false)
-    val a = keyed.select(col("table"), col("lsh_key"), graft.ops.Cleaning.qcol(idCol).as("id_a"))
-    val b = keyed.select(col("table"), col("lsh_key"), graft.ops.Cleaning.qcol(idCol).as("id_b"))
-    val pairs = a.join(b, Seq("table", "lsh_key"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-    val va = df.select(graft.ops.Cleaning.qcol(idCol).as("id_a"), graft.ops.Cleaning.qcol(vecCol).as("v_a"))
-    val vb = df.select(graft.ops.Cleaning.qcol(idCol).as("id_b"), graft.ops.Cleaning.qcol(vecCol).as("v_b"))
-    pairs.join(va, "id_a").join(vb, "id_b")
+    val pairs = selfPairs(keyed, Seq("table", "lsh_key"), id).select("id_a", "id_b").distinct()
+    withSides(pairs, df, id, graft.ops.Cleaning.qcol(vecCol) -> "v")
       .select(col("id_a"), col("id_b"), Similarity.cosine(col("v_a"), col("v_b")).as("cosine"))
       .filter(col("cosine") >= threshold)
   }

@@ -39,7 +39,7 @@ class TransformSpec extends AnyFunSuite {
     val df = Seq(("1", "x"), ("2", "y")).toDF("tom", "other")
     val cfg = MappingConfig(awareness = AwarenessCfg(tom = Some("tom")))
     val out = Transform.run(df, cfg,
-      codebook = Map("tom" -> Map("1" -> "BrandOne")), fullTab = false)
+      codebook = Map("tom" -> Map("1" -> "BrandOne")))
     val tom = out("awareness_tom").as[(String, Long)].collect().toMap
     assert(tom == Map("BrandOne" -> 1L, "2" -> 1L))
   }
@@ -52,9 +52,9 @@ class TransformSpec extends AnyFunSuite {
     val cfg = MappingConfig(awareness = AwarenessCfg(tom = Some("tom")))
     val wave1 = Seq("A", "A", "B").toDF("tom")
     val wave2 = Seq("A", "B", "B", "B").toDF("tom")
-    val stacked = Transform.run(wave1, cfg, fullTab = false)("awareness_tom")
+    val stacked = Transform.run(wave1, cfg)("awareness_tom")
       .withColumn("wave", lit(1))
-      .unionByName(Transform.run(wave2, cfg, fullTab = false)("awareness_tom")
+      .unionByName(Transform.run(wave2, cfg)("awareness_tom")
         .withColumn("wave", lit(2)))
     val out = graft.bht.Trend.waveOverWave(stacked, "wave", Seq("brand"), Some("count"))
       .collect()

@@ -620,6 +620,15 @@ class DedupSpec extends AnyFunSuite {
     assert(ngNew == ngOld)
     assert(ngNew.contains((0L, 1L, 1.0)))
 
+    def canonE(f: org.apache.spark.sql.DataFrame) =
+      f.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    val edOld = canonE(Dedup.nearDupEditDistance(df, "doc_id", "text",
+      maxBlockSize = 0, collapseIdentical = false))
+    val edNew = canonE(Dedup.nearDupEditDistance(df, "doc_id", "text", maxBlockSize = 0))
+    assert(edNew == edOld)
+    assert(edNew.contains((0L, 1L, 0L, base.head.length.toLong))) // intra-group copies
+    assert(edNew.exists { case (a, b, d, _) => a == 0L && b == 100L && d > 0L }) // expanded cross
+
     def canonC(f: org.apache.spark.sql.DataFrame) =
       f.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getDouble(5), r.getDouble(6))).toSet
