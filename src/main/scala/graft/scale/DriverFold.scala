@@ -1,6 +1,7 @@
 package graft.scale
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** The one driver-collect policy behind every hybrid fold (Bradley–Terry
   * MM, pageRank/HITS/seed-distance/LPA/k-core, near-dup connected
@@ -46,4 +47,28 @@ private[graft] object DriverFold {
       if (rows.length > b) None else Some(rows)
     }
   }
+
+  /** The folds' one duplicate-row policy for a caller-supplied side
+    * frame (warm-start strengths or ranks, teleport mass): its
+    * (`key`, `value`) rows as a per-key MAX map keyed by `r.get(0)`, the
+    * groupBy(max) + left join the distributed prologues run, so a
+    * duplicate key never fans out. Rows with a null key or value are
+    * skipped: the join never matches a null key, and max ignores a null
+    * value. Some(None) when the frame is absent; None when it is over
+    * the budget (→ the caller runs distributed). */
+  def maxByKey(df: Option[DataFrame], key: String, value: String)
+      : Option[Option[java.util.HashMap[Any, java.lang.Long]]] =
+    df.fold[Option[Option[java.util.HashMap[Any, java.lang.Long]]]](Some(None)) { d =>
+      collect(d, col(key), col(value)).map { rows =>
+        val m = new java.util.HashMap[Any, java.lang.Long]()
+        rows.foreach { r =>
+          if (!r.isNullAt(0) && !r.isNullAt(1)) {
+            val k = r.get(0); val v = r.getLong(1)
+            val cur = m.get(k)
+            if (cur == null || v > cur) m.put(k, v)
+          }
+        }
+        Some(m)
+      }
+    }
 }

@@ -1,7 +1,8 @@
 package graft.scale
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import graft.ops.Cleaning.qcol
 
 /** Link-graph quality ranking — the standard crawl-quality signal a
   * pretraining pipeline feeds into its mixture/quality-floor operators
@@ -38,12 +39,59 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Iterations between eager localCheckpoints of the rank frame: deep
-    * iterative plans otherwise accumulate one join+agg of depth per
-    * round and Catalyst re-analysis goes superlinear. 4 keeps plans
-    * shallow while checkpointing rarely enough that the materialized
-    * frame (|nodes| rows of two longs) stays a minor cost. */
+  /** Iterations between lazy localCheckpoints (`eager = false`: the
+    * frame materializes in the first job that reads it) of the loop
+    * frame — rank, distance or label: deep iterative plans otherwise
+    * accumulate one join+agg of depth per round and Catalyst
+    * re-analysis goes superlinear. 4 keeps plans shallow while
+    * checkpointing rarely enough that the materialized frame (|nodes|
+    * rows of two longs) stays a minor cost. */
   val CheckpointEvery = 4
+
+  // ---- the edge kernel: every operator's hygiene, node set, loop
+  // cadence and driver-fold scaffolding, written once ----
+
+  /** The caller's directed links as long (src, dst) with self-loops
+    * dropped (a self-loop is rank recycling) — the hygiene of every
+    * directed operator. Caller names resolve through `qcol`, so dotted
+    * column names work; `extra` columns ride along (the weight). Adds
+    * no barrier: callers that reread the frame cut their own. */
+  private def directedEdges(
+      edges: DataFrame, srcCol: String, dstCol: String, extra: Column*): DataFrame =
+    edges.select(Seq(qcol(srcCol).cast("long").as("src"),
+        qcol(dstCol).cast("long").as("dst")) ++ extra: _*)
+      .filter(col("src") =!= col("dst"))
+
+  /** [[directedEdges]] deduplicated — the unweighted link set (a
+    * duplicate edge would double-count a link's vote). */
+  private def links(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    directedEdges(edges, srcCol, dstCol).distinct()
+
+  /** The caller's links as long (a, b) with null ids and self-loops
+    * dropped, in their given orientation. */
+  private def pairEdges(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges.select(qcol(srcCol).cast("long").as("a"), qcol(dstCol).cast("long").as("b"))
+      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
+
+  /** [[pairEdges]] symmetrized and deduplicated: each undirected link
+    * as both (a, b) and (b, a) — the community operators' edge list. */
+  private def symmetricEdges(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+    val e0 = pairEdges(edges, srcCol, dstCol)
+    e0.union(e0.select(col("b").as("a"), col("a").as("b"))).distinct()
+  }
+
+  /** Every endpoint of a (src, dst) frame once, as `node`. */
+  private def nodesOf(e: DataFrame): DataFrame =
+    e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct()
+
+  /** `rounds` applications of `step` from `init`, the frame lazily
+    * localCheckpointed after every [[CheckpointEvery]]th round but the
+    * last (the caller's consumer reads that one once). */
+  private def iterate(init: DataFrame, rounds: Int)(step: DataFrame => DataFrame): DataFrame =
+    (1 to rounds).foldLeft(init) { (cur, i) =>
+      val next = step(cur)
+      if (i % CheckpointEvery == 0 && i < rounds) next.localCheckpoint(eager = false) else next
+    }
 
   /** Hybrid cutover for the iterative operators: when the PREPARED
     * edge frame (deduped, self-loop-free longs) fits the
@@ -55,40 +103,37 @@ object Graph {
     * step is long sums (order-free), positive-operand integer division,
     * and multiplyExact/addExact replaying ANSI's overflow error —
     * spec-pinned driver ≡ distributed. Caller-supplied side frames
-    * (seeds, teleport, warm-start ranks) go through the same budget. */
-  private type NodeMap = java.util.HashMap[Long, java.lang.Long]
-
-  /** A caller-supplied (node, value) frame as a per-node max map — the
-    * groupBy(max) + left-join semantics of the distributed prologue;
-    * Some(None) when the frame is absent, None when it is over the
-    * fold budget (→ distributed). */
-  private def nodeMaxMap(df: Option[DataFrame], valueCol: String): Option[Option[NodeMap]] =
-    df.fold[Option[Option[NodeMap]]](Some(None)) { d =>
-      DriverFold.collect(d, col("node"), col(valueCol)).map { rows =>
-        val m = new NodeMap()
-        rows.foreach { r =>
-          if (!r.isNullAt(0) && !r.isNullAt(1)) {
-            val k = r.getLong(0); val v = r.getLong(1)
-            val cur = m.get(k)
-            if (cur == null || v > cur) m.put(k, v)
-          }
-        }
-        Some(m)
-      }
+    * (seeds, teleport, warm-start ranks) go through the same budget.
+    *
+    * This is the fold's input: the edge frame's `cols` collected as
+    * (x, y, w) longs in collect order (w = 1 without a third column)
+    * and the node set in first-seen order (x then y per edge), which is
+    * the row order of the fold's output. None over the budget. */
+  private def localEdges(e: DataFrame, cols: String*)
+      : Option[(Array[(Long, Long, Long)], java.util.LinkedHashSet[java.lang.Long])] =
+    DriverFold.collect(e, cols.map(col): _*).map { rows =>
+      val edges = rows.map(r =>
+        (r.getLong(0), r.getLong(1), if (r.length > 2) r.getLong(2) else 1L))
+      val nodes = new java.util.LinkedHashSet[java.lang.Long]()
+      edges.foreach { case (x, y, _) => nodes.add(x); nodes.add(y) }
+      (edges, nodes)
     }
 
-  /** (node, rank_micro) frame from a driver fold — the distributed
-    * loop's exact column set/types. */
-  private def longPairFrame(
-      ec: DataFrame, names: (String, String),
-      rows: Iterator[(Long, java.lang.Long)]): DataFrame = {
+  /** A fold's node-keyed output: one row per node in `nodes` order,
+    * `node` then one nullable long column per (name, node → value) map
+    * (a missing or null value is SQL NULL) — the distributed loop's
+    * exact column set/types. */
+  private def nodeFrame(
+      e: DataFrame, nodes: java.util.LinkedHashSet[java.lang.Long],
+      cols: (String, java.util.Map[_, java.lang.Long])*): DataFrame = {
     import org.apache.spark.sql.types._
     import scala.jdk.CollectionConverters._
-    val list: java.util.List[org.apache.spark.sql.Row] =
-      rows.map { case (n, v) => org.apache.spark.sql.Row(n, v) }.toSeq.asJava
-    ec.sparkSession.createDataFrame(list, StructType(Seq(
-      StructField(names._1, LongType, nullable = false),
-      StructField(names._2, LongType))))
+    val rows: java.util.List[Row] = nodes.iterator.asScala
+      .map(n => Row.fromSeq(n.longValue +: cols.map(_._2.get(n))))
+      .toSeq.asJava
+    e.sparkSession.createDataFrame(rows, StructType(
+      StructField("node", LongType, nullable = false) +:
+        cols.map(c => StructField(c._1, LongType))))
   }
 
   /** Fixed-point PageRank (see object doc). Input: an edge table;
@@ -101,14 +146,9 @@ object Graph {
     */
   def pageRank(
       edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int, dampingPct: Int = 85): DataFrame = {
-    val src = col(srcCol).cast("long").as("src")
-    val dst = col(dstCol).cast("long").as("dst")
-    val e = edges.select(src, dst)
-      .filter(col("src") =!= col("dst")).distinct()
-      .withColumn("w", lit(1L))
-    rankIterate(e, iterations, dampingPct)
-  }
+      iterations: Int, dampingPct: Int = 85): DataFrame =
+    rankIterate(links(edges, srcCol, dstCol).withColumn("w", lit(1L)),
+      iterations, dampingPct)
 
   /** WEIGHTED fixed-point PageRank: each link votes in proportion to
     * its weight (multi-edges aggregate by summing `weightCol` per
@@ -124,10 +164,7 @@ object Graph {
   def pageRankWeighted(
       edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
       iterations: Int, dampingPct: Int = 85): DataFrame = {
-    val src = col(srcCol).cast("long").as("src")
-    val dst = col(dstCol).cast("long").as("dst")
-    val e = edges.select(src, dst, col(weightCol).cast("long").as("w"))
-      .filter(col("src") =!= col("dst"))
+    val e = directedEdges(edges, srcCol, dstCol, qcol(weightCol).cast("long").as("w"))
       .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
       .filter(col("w") > 0)
     rankIterate(e, iterations, dampingPct)
@@ -150,16 +187,11 @@ object Graph {
     */
   def pageRankPersonalized(
       edges: DataFrame, srcCol: String, dstCol: String,
-      teleport: DataFrame, iterations: Int, dampingPct: Int = 85): DataFrame = {
-    val src = col(srcCol).cast("long").as("src")
-    val dst = col(dstCol).cast("long").as("dst")
-    val e = edges.select(src, dst)
-      .filter(col("src") =!= col("dst")).distinct()
-      .withColumn("w", lit(1L))
-    rankIterate(e, iterations, dampingPct,
+      teleport: DataFrame, iterations: Int, dampingPct: Int = 85): DataFrame =
+    rankIterate(links(edges, srcCol, dstCol).withColumn("w", lit(1L)),
+      iterations, dampingPct,
       Some(teleport.select(col("node").cast("long").as("node"),
         col("teleport_micro").cast("long").as("teleport_micro"))))
-  }
 
   /** WARM-START rank refresh — the incremental path a production crawl
     * actually runs: after a crawl delta lands (new edges, dead hosts
@@ -178,16 +210,11 @@ object Graph {
     */
   def pageRankRefresh(
       edges: DataFrame, srcCol: String, dstCol: String, ranks0: DataFrame,
-      iterations: Int, dampingPct: Int = 85): DataFrame = {
-    val src = col(srcCol).cast("long").as("src")
-    val dst = col(dstCol).cast("long").as("dst")
-    val e = edges.select(src, dst)
-      .filter(col("src") =!= col("dst")).distinct()
-      .withColumn("w", lit(1L))
-    rankIterate(e, iterations, dampingPct, None,
+      iterations: Int, dampingPct: Int = 85): DataFrame =
+    rankIterate(links(edges, srcCol, dstCol).withColumn("w", lit(1L)),
+      iterations, dampingPct, None,
       Some(ranks0.select(col("node").cast("long").as("node"),
         col("rank_micro").cast("long").as("rank_micro"))))
-  }
 
   /** Shared power-iteration core over a prepared (src, dst, w) edge
     * frame (deduped, self-loop-free, positive integer weights);
@@ -199,6 +226,60 @@ object Graph {
     * row would otherwise fan out the node set through the left join
     * and double-count contributions in every subsequent iteration —
     * the same hygiene the operator applies to the edge set. */
+  private def rankIterate(
+      e: DataFrame, iterations: Int, dampingPct: Int,
+      teleportOpt: Option[DataFrame] = None,
+      initOpt: Option[DataFrame] = None): DataFrame = {
+    require(iterations >= 1, "pageRank: need at least one iteration")
+    require(dampingPct >= 0 && dampingPct <= 100,
+      s"pageRank: dampingPct must be 0..100, got $dampingPct")
+    // materialize the loop INPUTS once (the r11 Bradley-Terry lesson):
+    // the lazy forms would re-run the edge prep (distinct + filters on
+    // the raw graph) and the out-weight/node aggregates on EVERY
+    // iteration — only the rank frame was checkpointed before. The
+    // edge frame materializes at |edges| rows of three longs; outw and
+    // the node set are node-sized.
+    val ec = e.localCheckpoint(eager = false)
+    rankFoldLocal(ec, iterations, dampingPct, teleportOpt, initOpt).getOrElse {
+      val outw = ec.groupBy(col("src")).agg(sum(col("w")).as("outw"))
+        .localCheckpoint(eager = false)
+      val nodes0 = nodesOf(ec)
+      // nodes carries each node's teleport mass so the per-iteration
+      // epilogue is one join with the node set it needs anyway
+      val nodes = (teleportOpt match {
+        case None => nodes0.withColumn("t_micro", lit(1000000L))
+        case Some(t) =>
+          val t1 = t.groupBy(col("node")).agg(max(col("teleport_micro")).as("teleport_micro"))
+          nodes0.join(t1, Seq("node"), "left")
+            .select(col("node"),
+              coalesce(col("teleport_micro"), lit(0L)).as("t_micro"))
+      }).localCheckpoint(eager = false)
+      val ranks0 = initOpt match {
+        case None => nodes.select(col("node"), col("t_micro").as("rank_micro"))
+        case Some(r0) =>
+          val r1 = r0.groupBy(col("node")).agg(max(col("rank_micro")).as("rank_micro"))
+          nodes.join(r1, Seq("node"), "left")
+            .select(col("node"),
+              coalesce(col("rank_micro"), col("t_micro")).as("rank_micro"))
+      }
+      iterate(ranks0, iterations) { ranks =>
+        // contribution of each edge = src rank split over its out-weight
+        // (integer division — the determinism contract)
+        val contribs = ec
+          .join(ranks.withColumnRenamed("node", "src"), "src")
+          .join(outw, "src")
+          .select(col("dst").as("node"),
+            expr("(rank_micro * w) div outw").as("contrib"))
+          .groupBy(col("node")).agg(sum(col("contrib")).as("in_sum"))
+        nodes.join(contribs, Seq("node"), "left")
+          .select(col("node"),
+            (expr(s"((${100 - dampingPct}) * t_micro) div 100") +
+              expr(s"($dampingPct * coalesce(in_sum, 0L)) div 100"))
+              .as("rank_micro"))
+      }
+    }
+  }
+
   /** Driver-side replay of the power iteration over the collected edge
     * frame — the [[DriverFold]] hybrid. The arithmetic is the EXACT
     * integer chain the distributed loop runs (contributions
@@ -209,17 +290,14 @@ object Graph {
       ec: DataFrame, iterations: Int, dampingPct: Int,
       teleportOpt: Option[DataFrame], initOpt: Option[DataFrame]): Option[DataFrame] =
     for {
-      rows <- DriverFold.collect(ec, col("src"), col("dst"), col("w"))
-      tm <- nodeMaxMap(teleportOpt, "teleport_micro")
-      rm <- nodeMaxMap(initOpt, "rank_micro")
+      (edges, nodeSet) <- localEdges(ec, "src", "dst", "w")
+      tm <- DriverFold.maxByKey(teleportOpt, "node", "teleport_micro")
+      rm <- DriverFold.maxByKey(initOpt, "node", "rank_micro")
     } yield {
-      val edges = rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       val outw = new java.util.HashMap[Long, java.lang.Long]()
-      val nodeSet = new java.util.LinkedHashSet[java.lang.Long]()
-      edges.foreach { case (s2, d2, w) =>
+      edges.foreach { case (s2, _, w) =>
         val cur = outw.get(s2)
         outw.put(s2, if (cur == null) w else Math.addExact(cur, w))
-        nodeSet.add(s2); nodeSet.add(d2)
       }
       val t = new java.util.HashMap[Long, java.lang.Long]()
       tm match {
@@ -253,71 +331,8 @@ object Graph {
         }
         ranks = next
       }
-      val rk = ranks
-      longPairFrame(ec, ("node", "rank_micro"),
-        scala.jdk.CollectionConverters.IteratorHasAsScala(nodeSet.iterator).asScala
-          .map(n => (n.longValue, rk.get(n))))
+      nodeFrame(ec, nodeSet, "rank_micro" -> ranks)
     }
-
-  private def rankIterate(
-      e: DataFrame, iterations: Int, dampingPct: Int,
-      teleportOpt: Option[DataFrame] = None,
-      initOpt: Option[DataFrame] = None): DataFrame = {
-    require(iterations >= 1, "pageRank: need at least one iteration")
-    require(dampingPct >= 0 && dampingPct <= 100,
-      s"pageRank: dampingPct must be 0..100, got $dampingPct")
-    // materialize the loop INPUTS once (the r11 Bradley-Terry lesson):
-    // the lazy forms would re-run the edge prep (distinct + filters on
-    // the raw graph) and the out-weight/node aggregates on EVERY
-    // iteration — only the rank frame was checkpointed before. The
-    // edge frame materializes at |edges| rows of three longs; outw and
-    // the node set are node-sized.
-    val ec = e.localCheckpoint(eager = false)
-    rankFoldLocal(ec, iterations, dampingPct, teleportOpt, initOpt) match {
-      case Some(done) => return done
-      case None => ()
-    }
-    val outw = ec.groupBy(col("src")).agg(sum(col("w")).as("outw"))
-      .localCheckpoint(eager = false)
-    val nodes0 = ec.select(col("src").as("node"))
-      .union(ec.select(col("dst").as("node"))).distinct()
-    // nodes carries each node's teleport mass so the per-iteration
-    // epilogue is one join with the node set it needs anyway
-    val nodes = (teleportOpt match {
-      case None => nodes0.withColumn("t_micro", lit(1000000L))
-      case Some(t) =>
-        val t1 = t.groupBy(col("node")).agg(max(col("teleport_micro")).as("teleport_micro"))
-        nodes0.join(t1, Seq("node"), "left")
-          .select(col("node"),
-            coalesce(col("teleport_micro"), lit(0L)).as("t_micro"))
-    }).localCheckpoint(eager = false)
-    var ranks = initOpt match {
-      case None => nodes.select(col("node"), col("t_micro").as("rank_micro"))
-      case Some(r0) =>
-        val r1 = r0.groupBy(col("node")).agg(max(col("rank_micro")).as("rank_micro"))
-        nodes.join(r1, Seq("node"), "left")
-          .select(col("node"),
-            coalesce(col("rank_micro"), col("t_micro")).as("rank_micro"))
-    }
-    for (i <- 1 to iterations) {
-      // contribution of each edge = src rank split over its out-weight
-      // (integer division — the determinism contract)
-      val contribs = ec
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .join(outw, "src")
-        .select(col("dst").as("node"),
-          expr("(rank_micro * w) div outw").as("contrib"))
-        .groupBy(col("node")).agg(sum(col("contrib")).as("in_sum"))
-      ranks = nodes.join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          (expr(s"((${100 - dampingPct}) * t_micro) div 100") +
-            expr(s"($dampingPct * coalesce(in_sum, 0L)) div 100"))
-            .as("rank_micro"))
-      if (i % CheckpointEvery == 0 && i < iterations)
-        ranks = ranks.localCheckpoint(eager = false)
-    }
-    ranks
-  }
 
   /** HITS hubs & authorities (Kleinberg) over the cleaned link graph —
     * the complementary quality signal to [[pageRank]]: an AUTHORITY is
@@ -354,28 +369,21 @@ object Graph {
     require(iterations >= 1, "hits: need at least one iteration")
     // inputs materialized once — each half-step would otherwise re-run
     // the edge distinct and node union (the rankIterate/BT lesson)
-    val e = edges.select(
-        col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(eager = false)
+    val e = links(edges, srcCol, dstCol).localCheckpoint(eager = false)
     // driver fold when the graph fits the budget (see DriverFold):
     // the mutual recursion is 2 gathers + 2 rescales per iteration —
     // ~6 Spark jobs of fixed overhead each on a collectable graph
-    hitsFoldLocal(e, iterations) match {
-      case Some(done) => return done
-      case None => ()
+    hitsFoldLocal(e, iterations).getOrElse {
+      val nodes = nodesOf(e).localCheckpoint(eager = false)
+      var hub = nodes.select(col("node"), lit(1000000L).as("score"))
+      var auth = hub
+      for (_ <- 1 to iterations) {
+        auth = hitsHalfStep(e, hub, "src", "dst", nodes)
+        hub = hitsHalfStep(e, auth, "dst", "src", nodes)
+      }
+      auth.withColumnRenamed("score", "auth_micro")
+        .join(hub.withColumnRenamed("score", "hub_micro"), Seq("node"))
     }
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(eager = false)
-    var hub = nodes.select(col("node"), lit(1000000L).as("score"))
-    var auth = hub
-    for (i <- 1 to iterations) {
-      auth = hitsHalfStep(e, hub, "src", "dst", nodes)
-      hub = hitsHalfStep(e, auth, "dst", "src", nodes)
-    }
-    auth.withColumnRenamed("score", "auth_micro")
-      .join(hub.withColumnRenamed("score", "hub_micro"), Seq("node"))
   }
 
   /** Driver-side replay of the HITS mutual recursion — the
@@ -384,10 +392,7 @@ object Graph {
     * `raw div (max div 1e6 + 1)` — the exact integer chain
     * [[hitsHalfStep]] runs distributed. */
   private def hitsFoldLocal(e: DataFrame, iterations: Int): Option[DataFrame] =
-    DriverFold.collect(e, col("src"), col("dst")).map { rows =>
-      val edges = rows.map(r => (r.getLong(0), r.getLong(1)))
-      val nodeSet = new java.util.LinkedHashSet[java.lang.Long]()
-      edges.foreach { case (s2, d2) => nodeSet.add(s2); nodeSet.add(d2) }
+    localEdges(e, "src", "dst").map { case (edges, nodeSet) =>
       def uniform(): java.util.HashMap[Long, java.lang.Long] = {
         val m = new java.util.HashMap[Long, java.lang.Long]()
         nodeSet.forEach(n => m.put(n, 1000000L)); m
@@ -396,7 +401,7 @@ object Graph {
       def half(scores: java.util.HashMap[Long, java.lang.Long],
           fromDst: Boolean): java.util.HashMap[Long, java.lang.Long] = {
         val in = new java.util.HashMap[Long, java.lang.Long]()
-        edges.foreach { case (s2, d2) =>
+        edges.foreach { case (s2, d2, _) =>
           val (f, to) = if (fromDst) (d2, s2) else (s2, d2)
           val cur = in.get(to)
           val v = scores.get(f).longValue
@@ -419,17 +424,7 @@ object Graph {
         auth = half(hub, fromDst = false)
         hub = half(auth, fromDst = true)
       }
-      import org.apache.spark.sql.types._
-      import scala.jdk.CollectionConverters._
-      val (a2, h2) = (auth, hub)
-      val list: java.util.List[org.apache.spark.sql.Row] =
-        IteratorHasAsScala(nodeSet.iterator).asScala
-          .map(n => org.apache.spark.sql.Row(n.longValue,
-            a2.get(n).longValue, h2.get(n).longValue)).toSeq.asJava
-      e.sparkSession.createDataFrame(list, StructType(Seq(
-        StructField("node", LongType, nullable = false),
-        StructField("auth_micro", LongType),
-        StructField("hub_micro", LongType))))
+      nodeFrame(e, nodeSet, "auth_micro" -> auth, "hub_micro" -> hub)
     }
 
   /** One HITS half-step: gather `scores` across edges from `fromCol`
@@ -483,6 +478,34 @@ object Graph {
     * localCheckpoint every [[CheckpointEvery]] iterations bounds the
     * lineage. Output is |nodes| rows.
     */
+  def seedDistance(
+      edges: DataFrame, srcCol: String, dstCol: String,
+      seeds: DataFrame, maxHops: Int): DataFrame = {
+    require(maxHops >= 1, "seedDistance: need at least one hop")
+    // inputs materialized once per fit — the rankIterate/BT lesson
+    val e = links(edges, srcCol, dstCol).localCheckpoint(eager = false)
+    // driver fold when the graph fits the budget (see DriverFold):
+    // pure integer min-plus, exactly the distributed rounds
+    seedDistanceFoldLocal(e, seeds, maxHops).getOrElse {
+      val s = seeds.select(col("node").cast("long").as("node")).distinct()
+        .withColumn("__seed", lit(1))
+      val dist0 = nodesOf(e).join(s, Seq("node"), "left")
+        .select(col("node"),
+          when(col("__seed").isNotNull, lit(0L))
+            .otherwise(lit(UnreachedHops)).as("hops"))
+      val dist = iterate(dist0, maxHops) { dist =>
+        val gather = e.join(dist.withColumnRenamed("node", "src"), "src")
+          .groupBy(col("dst").as("node")).agg(min(col("hops") + 1L).as("__g"))
+        dist.join(gather, Seq("node"), "left")
+          .select(col("node"),
+            least(col("hops"), coalesce(col("__g"), lit(UnreachedHops))).as("hops"))
+      }
+      dist.select(col("node"),
+        when(col("hops") >= UnreachedHops, lit(null).cast("long"))
+          .otherwise(col("hops")).as("hops"))
+    }
+  }
+
   /** Driver-side replay of the bounded-hop min-plus iteration — the
     * [[DriverFold]] hybrid (the seeds frame is collected under the same
     * budget); seeds outside the edge set are ignored (the distributed
@@ -490,12 +513,9 @@ object Graph {
   private def seedDistanceFoldLocal(
       e: DataFrame, seeds: DataFrame, maxHops: Int): Option[DataFrame] =
     for {
-      rows <- DriverFold.collect(e, col("src"), col("dst"))
+      (edges, nodeSet) <- localEdges(e, "src", "dst")
       seedRows <- DriverFold.collect(seeds, col("node").cast("long"))
     } yield {
-      val edges = rows.map(r => (r.getLong(0), r.getLong(1)))
-      val nodeSet = new java.util.LinkedHashSet[java.lang.Long]()
-      edges.foreach { case (s2, d2) => nodeSet.add(s2); nodeSet.add(d2) }
       val seedSet = new java.util.HashSet[java.lang.Long]()
       seedRows.foreach(r => if (!r.isNullAt(0)) seedSet.add(r.getLong(0)))
       var dist = new java.util.HashMap[Long, java.lang.Long]()
@@ -503,7 +523,7 @@ object Graph {
         if (seedSet.contains(n)) 0L else UnreachedHops))
       for (_ <- 1 to maxHops) {
         val gather = new java.util.HashMap[Long, java.lang.Long]()
-        edges.foreach { case (s2, d2) =>
+        edges.foreach { case (s2, d2, _) =>
           val g = dist.get(s2).longValue + 1L
           val cur = gather.get(d2)
           if (cur == null || g < cur) gather.put(d2, g)
@@ -516,51 +536,9 @@ object Graph {
         }
         dist = next
       }
-      val dd = dist
-      longPairFrame(e, ("node", "hops"),
-        scala.jdk.CollectionConverters.IteratorHasAsScala(nodeSet.iterator).asScala
-          .map { n =>
-            val h = dd.get(n).longValue
-            (n.longValue, if (h >= UnreachedHops) null
-              else java.lang.Long.valueOf(h))
-          })
+      dist.replaceAll((_, h) => if (h >= UnreachedHops) null else h) // unreached → NULL
+      nodeFrame(e, nodeSet, "hops" -> dist)
     }
-
-  def seedDistance(
-      edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, maxHops: Int): DataFrame = {
-    require(maxHops >= 1, "seedDistance: need at least one hop")
-    // inputs materialized once per fit — the rankIterate/BT lesson
-    val e = edges.select(
-        col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(eager = false)
-    // driver fold when the graph fits the budget (see DriverFold):
-    // pure integer min-plus, exactly the distributed rounds
-    seedDistanceFoldLocal(e, seeds, maxHops) match {
-      case Some(done) => return done
-      case None => ()
-    }
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    val s = seeds.select(col("node").cast("long").as("node")).distinct()
-      .withColumn("__seed", lit(1))
-    var dist = nodes.join(s, Seq("node"), "left")
-      .select(col("node"),
-        when(col("__seed").isNotNull, lit(0L))
-          .otherwise(lit(UnreachedHops)).as("hops"))
-    for (i <- 1 to maxHops) {
-      val gather = e.join(dist.withColumnRenamed("node", "src"), "src")
-        .groupBy(col("dst").as("node")).agg(min(col("hops") + 1L).as("__g"))
-      dist = dist.join(gather, Seq("node"), "left")
-        .select(col("node"),
-          least(col("hops"), coalesce(col("__g"), lit(UnreachedHops))).as("hops"))
-      if (i % CheckpointEvery == 0 && i < maxHops) dist = dist.localCheckpoint(eager = false)
-    }
-    dist.select(col("node"),
-      when(col("hops") >= UnreachedHops, lit(null).cast("long"))
-        .otherwise(col("hops")).as("hops"))
-  }
 
   /** Co-citation pairs — domains frequently linked BY THE SAME sources
     * (Small 1973's bibliographic measure, applied as the standard
@@ -587,9 +565,7 @@ object Graph {
       maxOutDegree: Int, minCommon: Long): DataFrame = {
     require(maxOutDegree >= 2, s"coCitation: maxOutDegree must be >= 2, got $maxOutDegree")
     require(minCommon >= 1, s"coCitation: minCommon must be >= 1, got $minCommon")
-    val e = edges.select(
-        col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
+    val e = links(edges, srcCol, dstCol)
     val keep = e.join(
       e.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
         .filter(col("__deg") <= maxOutDegree).select(col("src")),
@@ -614,17 +590,13 @@ object Graph {
     * |nodes| rows.
     */
   def degreeAudit(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val e = edges.select(
-        col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
+    val e = links(edges, srcCol, dstCol)
     val out = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("out_deg"))
     val in = e.groupBy(col("dst").as("node")).agg(count(lit(1)).as("in_deg"))
     val recip = e.join(
         e.select(col("dst").as("src"), col("src").as("dst")), Seq("src", "dst"))
       .groupBy(col("src").as("node")).agg(count(lit(1)).as("reciprocal"))
-    nodes
+    nodesOf(e)
       .join(out, Seq("node"), "left")
       .join(in, Seq("node"), "left")
       .join(recip, Seq("node"), "left")
@@ -695,6 +667,44 @@ object Graph {
     * exactly; inputs materialize once, lineage checkpoints every
     * [[CheckpointEvery]] rounds.
     */
+  def labelPropagation(
+      edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
+      iterations: Int = 3, selfVote: Boolean = false): DataFrame = {
+    require(iterations >= 1, "labelPropagation: need at least one iteration")
+    val sym = symmetricEdges(edges, srcCol, dstCol).localCheckpoint(eager = false)
+    lpaFoldLocal(sym, iterations, selfVote).getOrElse {
+      // the id-range guard rides inside the consumed init label: under
+      // the default lazy barrier it fires at the first consuming action
+      val labels0 = sym.select(col("a").as("node")).distinct()
+        .select(col("node"),
+          when(col("node") < 0L || col("node") >= Pack,
+            raise_error(concat(lit("labelPropagation: node id outside [0, 2^31): "),
+              col("node").cast("string"))).cast("long"))
+            .otherwise(col("node")).as("label"))
+        .localCheckpoint(eager = false)
+      iterate(labels0, iterations) { labels =>
+        val neigh = sym
+          .join(labels.withColumnRenamed("node", "b"), "b")
+          .select(col("a"), col("label"))
+        // inertia: the node's own current label is one more vote row —
+        // same aggregate shape, |nodes| extra rows per round
+        val ballots = if (selfVote)
+          neigh.unionByName(labels.select(col("node").as("a"), col("label")))
+        else neigh
+        val votes = ballots
+          .groupBy(col("a"), col("label")).agg(count(lit(1)).as("__c"))
+        votes.groupBy(col("a"))
+          .agg(min((lit(Pack) - col("__c")) * Pack + col("label")).as("__pk"))
+          .select(col("a").as("node"), pmod(col("__pk"), lit(Pack)).as("label"))
+      }
+    }
+  }
+
+  /** 2³¹: node ids of [[labelPropagation]] and [[triangles]] must lie in
+    * [0, 2³¹) so a (count, label) or (degree, id) pair packs into one
+    * long. */
+  private val Pack = 2147483648L
+
   /** Driver-side replay of the synchronous LPA rounds — the
     * [[DriverFold]] hybrid: per round, neighbor (+optional self)
     * votes then the packed argmin `(2³¹−c)·2³¹+label`, exactly the
@@ -702,11 +712,7 @@ object Graph {
     * failure. */
   private def lpaFoldLocal(
       sym: DataFrame, iterations: Int, selfVote: Boolean): Option[DataFrame] =
-    DriverFold.collect(sym, col("a"), col("b")).map { rows =>
-      val Pack = 2147483648L
-      val edges = rows.map(r => (r.getLong(0), r.getLong(1)))
-      val nodeSet = new java.util.LinkedHashSet[java.lang.Long]()
-      edges.foreach { case (a, b) => nodeSet.add(a); nodeSet.add(b) }
+    localEdges(sym, "a", "b").map { case (edges, nodeSet) =>
       var labels = new java.util.HashMap[Long, java.lang.Long]()
       nodeSet.forEach { n =>
         if (n < 0L || n >= Pack)
@@ -720,7 +726,7 @@ object Graph {
           val k = (a, lab); val cur = votes.get(k)
           votes.put(k, if (cur == null) 1L else cur + 1L)
         }
-        edges.foreach { case (a, b) => vote(a, labels.get(b)) }
+        edges.foreach { case (a, b, _) => vote(a, labels.get(b)) }
         if (selfVote) nodeSet.forEach(n => vote(n, labels.get(n)))
         val best = new java.util.HashMap[Long, java.lang.Long]()
         votes.forEach { (k, c) =>
@@ -732,54 +738,8 @@ object Graph {
         best.forEach((n, pk) => next.put(n, java.lang.Math.floorMod(pk, Pack)))
         labels = next
       }
-      val lb = labels
-      longPairFrame(sym, ("node", "label"),
-        scala.jdk.CollectionConverters.IteratorHasAsScala(nodeSet.iterator).asScala
-          .map(n => (n.longValue, lb.get(n))))
+      nodeFrame(sym, nodeSet, "label" -> labels)
     }
-
-  def labelPropagation(
-      edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
-      iterations: Int = 3, selfVote: Boolean = false): DataFrame = {
-    require(iterations >= 1, "labelPropagation: need at least one iteration")
-    val Pack = 2147483648L // 2^31
-    val q = graft.ops.Cleaning.qcol _
-    val e0 = edges.select(q(srcCol).cast("long").as("a"), q(dstCol).cast("long").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-    val sym = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-      .distinct().localCheckpoint(eager = false)
-    lpaFoldLocal(sym, iterations, selfVote) match {
-      case Some(done) => return done
-      case None => ()
-    }
-    // the id-range guard rides inside the consumed init label: under
-    // the default lazy barrier it fires at the first consuming action
-    var labels = sym.select(col("a").as("node")).distinct()
-      .select(col("node"),
-        when(col("node") < 0L || col("node") >= Pack,
-          raise_error(concat(lit("labelPropagation: node id outside [0, 2^31): "),
-            col("node").cast("string"))).cast("long"))
-          .otherwise(col("node")).as("label"))
-      .localCheckpoint(eager = false)
-    for (i <- 1 to iterations) {
-      val neigh = sym
-        .join(labels.withColumnRenamed("node", "b"), "b")
-        .select(col("a"), col("label"))
-      // inertia: the node's own current label is one more vote row —
-      // same aggregate shape, |nodes| extra rows per round
-      val ballots = if (selfVote)
-        neigh.unionByName(labels.select(col("node").as("a"), col("label")))
-      else neigh
-      val votes = ballots
-        .groupBy(col("a"), col("label")).agg(count(lit(1)).as("__c"))
-      labels = votes.groupBy(col("a"))
-        .agg(min((lit(Pack) - col("__c")) * Pack + col("label")).as("__pk"))
-        .select(col("a").as("node"), pmod(col("__pk"), lit(Pack)).as("label"))
-      if (i % CheckpointEvery == 0 && i < iterations)
-        labels = labels.localCheckpoint(eager = false)
-    }
-    labels
-  }
 
   /** Budgeted k-core peeling — the dense-subgraph extractor beside
     * [[triangles]]'s local density: the k-core is the maximal subgraph
@@ -827,37 +787,67 @@ object Graph {
     * exposed package-private so GraphSpec can observe the early exit
     * without changing the shipped key's (node, degree, in_core)
     * schema. */
+  private[graft] def kCorePeel(
+      edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
+      k: Int = 3, rounds: Int = 8): (DataFrame, Int) = {
+    require(k >= 1, s"kCore: k must be >= 1, got $k")
+    require(rounds >= 1, s"kCore: rounds must be >= 1, got $rounds")
+    val sym = symmetricEdges(edges, srcCol, dstCol).localCheckpoint(eager = false)
+    kCoreFoldLocal(sym, k, rounds).getOrElse {
+      var e = sym
+      var remaining = e.count()
+      var ran = 0
+      var converged = remaining == 0L
+      while (ran < rounds && !converged) {
+        ran += 1
+        val keep = e.groupBy(col("a")).agg(count(lit(1)).as("__d"))
+          .filter(col("__d") >= k).select(col("a"))
+        e = e.join(keep, Seq("a"), "left_semi")
+          .join(keep.withColumnRenamed("a", "b"), Seq("b"), "left_semi")
+          .select(col("a"), col("b"))
+          .localCheckpoint(eager = false)
+        val after = e.count()
+        // zero edges removed ⟹ every degree is unchanged ⟹ fixpoint
+        converged = after == remaining
+        remaining = after
+      }
+      val out = e.groupBy(col("a")).agg(count(lit(1)).as("degree"))
+        .select(col("a").as("node"), col("degree"),
+          (col("degree") >= k).as("in_core"))
+      (out, ran)
+    }
+  }
+
   /** Driver-side replay of the peel cascade — the [[DriverFold]]
     * hybrid with the same early exit (a round that removes zero edges
     * certifies the fixpoint). Returns (result, rounds actually run). */
   private def kCoreFoldLocal(
       sym: DataFrame, k: Int, rounds: Int): Option[(DataFrame, Int)] =
-    DriverFold.collect(sym, col("a"), col("b")).map { rows =>
-      var edges = rows.map(r => (r.getLong(0), r.getLong(1)))
+    localEdges(sym, "a", "b").map { case (all, _) =>
+      var edges = all
       var ran = 0
       var converged = edges.isEmpty
       while (ran < rounds && !converged) {
         ran += 1
         val deg = new java.util.HashMap[Long, java.lang.Long]()
-        edges.foreach { case (a, _) =>
+        edges.foreach { case (a, _, _) =>
           val cur = deg.get(a); deg.put(a, if (cur == null) 1L else cur + 1L)
         }
         val before = edges.length
-        edges = edges.filter { case (a, b) =>
+        edges = edges.filter { case (a, b, _) =>
           deg.get(a) >= k && deg.get(b) >= k
         }
         converged = edges.length == before
       }
       val deg = new java.util.HashMap[Long, java.lang.Long]()
-      edges.foreach { case (a, _) =>
+      edges.foreach { case (a, _, _) =>
         val cur = deg.get(a); deg.put(a, if (cur == null) 1L else cur + 1L)
       }
       import org.apache.spark.sql.types._
       import scala.jdk.CollectionConverters._
-      val list: java.util.List[org.apache.spark.sql.Row] =
+      val list: java.util.List[Row] =
         deg.entrySet().iterator().asScala
-          .map(e2 => org.apache.spark.sql.Row(
-            e2.getKey.longValue, e2.getValue.longValue, e2.getValue >= k))
+          .map(e2 => Row(e2.getKey.longValue, e2.getValue.longValue, e2.getValue >= k))
           .toSeq.asJava
       val out = sym.sparkSession.createDataFrame(list, StructType(Seq(
         StructField("node", LongType, nullable = false),
@@ -865,42 +855,6 @@ object Graph {
         StructField("in_core", BooleanType, nullable = false))))
       (out, ran)
     }
-
-  private[graft] def kCorePeel(
-      edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
-      k: Int = 3, rounds: Int = 8): (DataFrame, Int) = {
-    require(k >= 1, s"kCore: k must be >= 1, got $k")
-    require(rounds >= 1, s"kCore: rounds must be >= 1, got $rounds")
-    val q = graft.ops.Cleaning.qcol _
-    val e0 = edges.select(q(srcCol).cast("long").as("a"), q(dstCol).cast("long").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-    var e = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-      .distinct().localCheckpoint(eager = false)
-    kCoreFoldLocal(e, k, rounds) match {
-      case Some(done) => return done
-      case None => ()
-    }
-    var remaining = e.count()
-    var ran = 0
-    var converged = remaining == 0L
-    while (ran < rounds && !converged) {
-      ran += 1
-      val keep = e.groupBy(col("a")).agg(count(lit(1)).as("__d"))
-        .filter(col("__d") >= k).select(col("a"))
-      e = e.join(keep, Seq("a"), "left_semi")
-        .join(keep.withColumnRenamed("a", "b"), Seq("b"), "left_semi")
-        .select(col("a"), col("b"))
-        .localCheckpoint(eager = false)
-      val after = e.count()
-      // zero edges removed ⟹ every degree is unchanged ⟹ fixpoint
-      converged = after == remaining
-      remaining = after
-    }
-    val out = e.groupBy(col("a")).agg(count(lit(1)).as("degree"))
-      .select(col("a").as("node"), col("degree"),
-        (col("degree") >= k).as("in_core"))
-    (out, ran)
-  }
 
   /** Exact triangle counting + local clustering coefficient — the
     * density signal beside [[labelPropagation]]'s communities and
@@ -940,11 +894,7 @@ object Graph {
     */
   def triangles(
       edges: DataFrame, srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
-    val Pack = 2147483648L // 2^31
-    val q = graft.ops.Cleaning.qcol _
-    val e0 = edges.select(q(srcCol).cast("long").as("a"), q(dstCol).cast("long").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-    val und = e0
+    val und = pairEdges(edges, srcCol, dstCol)
       .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
       .distinct().localCheckpoint(eager = false)
     // undirected degree; the id-range guard rides the consumed degree

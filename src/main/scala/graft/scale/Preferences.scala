@@ -162,6 +162,17 @@ object Preferences {
       .agg(sum(col("games")).as("games"), sum(col("wins_a")).as("wins_a"))
   }
 
+  /** Item types the driver fold accepts: driver-map equality must agree
+    * with Spark join equality (integral and string keys do; decimals
+    * would compare scale-sensitively on the driver). */
+  private def btDriverSafeItemType(t: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    t match {
+      case ByteType | ShortType | IntegerType | LongType | StringType => true
+      case _ => false
+    }
+  }
+
   /** Hybrid cutover for the MM loop — the [[DriverFold]] policy
     * applied to Bradley–Terry: the corpus-sized work is the ONE
     * [[pairStats]] aggregate, and the loop itself runs on the
@@ -176,22 +187,14 @@ object Preferences {
     * matrix). Identical results either way: every step is long sums
     * (order-free), positive-operand integer division, and
     * multiplyExact/addExact replaying ANSI's overflow error —
-    * spec-pinned driver ≡ distributed. */
-  /** Item types the driver fold accepts: driver-map equality must agree
-    * with Spark join equality (integral and string keys do; decimals
-    * would compare scale-sensitively on the driver). */
-  private def btDriverSafeItemType(t: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    t match {
-      case ByteType | ShortType | IntegerType | LongType | StringType => true
-      case _ => false
-    }
-  }
-
-  /** Driver-side replay of the MM loop over the collected directed
-    * matrix. Returns None (caller falls back to the distributed loop)
-    * when the matrix, the item totals or the warm-start `init` frame
-    * exceeds the budget, or the item type is not driver-safe. The arithmetic is the EXACT
+    * spec-pinned driver ≡ distributed.
+    *
+    * This is the driver side: a replay of the MM loop over the
+    * collected directed matrix. Returns None (caller falls back to the
+    * distributed loop) when the matrix, the item totals or the
+    * warm-start `init` frame exceeds the budget, or the item type is
+    * not driver-safe; `init` is deduped by [[DriverFold.maxByKey]], the
+    * max-strength rule of [[btInit]]. The arithmetic is the EXACT
     * integer chain [[btStep]] runs distributed, including the
     * inner-join drop semantics (an item missing from the strength map
     * contributes no term; an item with no opponents drops from the next
@@ -207,22 +210,13 @@ object Preferences {
     else for {
       matrix <- DriverFold.collect(directed, col("i"), col("j"), col("n"))
       items <- DriverFold.collect(totals, col("item"), col("wins"), col("games"), col("w_smooth"))
-      initRows <- init.fold(Option(Array.empty[org.apache.spark.sql.Row]))(
-        DriverFold.collect(_, col("item"), col("strength_micro")))
+      initMap <- DriverFold.maxByKey(init, "item", "strength_micro")
     } yield {
       val dRows = matrix.map(r => (r.get(0), r.get(1), r.getLong(2)))
       val tRows = items.map(r => (r.get(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      val initMap = new java.util.HashMap[Any, java.lang.Long]()
-      initRows.foreach { r =>
-        if (!r.isNullAt(0) && !r.isNullAt(1)) {
-          val k = r.get(0); val v = r.getLong(1)
-          val cur = initMap.get(k)
-          if (cur == null || v > cur) initMap.put(k, v) // the max-dedupe
-        }
-      }
       var s = new java.util.HashMap[Any, java.lang.Long]()
       tRows.foreach { t =>
-        val warm = if (init.isDefined) initMap.get(t._1) else null
+        val warm = initMap.map(_.get(t._1)).orNull
         s.put(t._1, if (warm != null) warm else java.lang.Long.valueOf(1000000L))
       }
       val deltas = Array.fill[Option[Long]](iterations)(None)

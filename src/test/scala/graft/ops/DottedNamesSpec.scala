@@ -41,6 +41,30 @@ class DottedNamesSpec extends AnyFunSuite {
     assert(Kpis.npsSummary(df, "Q3. CSAT").count() == 5)
   }
 
+  test("graph operators on dotted src/dst/weight names equal the plain-named run") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, lit}
+    import graft.scale.Graph
+    val plain = (0L until 120L).map(i => (i % 11, (i * 7 + 3) % 11, i % 3 + 1))
+      .toDF("src", "dst", "w")
+    val dotted = plain.toDF("src.id", "dst.id", "w.x")
+    val seeds = Seq(0L, 5L).toDF("node")
+    val tele = seeds.withColumn("teleport_micro", lit(1000000L))
+    val ranks0 = Graph.pageRank(plain, "src", "dst", 2)
+    def sorted(df: DataFrame) = df.orderBy(df.columns.map(col): _*).collect().toSeq
+    def same(name: String)(run: (DataFrame, String, String, String) => DataFrame): Unit =
+      assert(sorted(run(dotted, "src.id", "dst.id", "w.x")) ===
+        sorted(run(plain, "src", "dst", "w")), name)
+    same("pageRank")((e, s, d, _) => Graph.pageRank(e, s, d, 3))
+    same("pageRankWeighted")((e, s, d, w) => Graph.pageRankWeighted(e, s, d, w, 3))
+    same("pageRankPersonalized")((e, s, d, _) => Graph.pageRankPersonalized(e, s, d, tele, 3))
+    same("pageRankRefresh")((e, s, d, _) => Graph.pageRankRefresh(e, s, d, ranks0, 2))
+    same("hits")((e, s, d, _) => Graph.hits(e, s, d, 3))
+    same("seedDistance")((e, s, d, _) => Graph.seedDistance(e, s, d, seeds, 3))
+    same("coCitation")((e, s, d, _) => Graph.coCitation(e, s, d, 8, 1L))
+    same("degreeAudit")((e, s, d, _) => Graph.degreeAudit(e, s, d))
+  }
+
   test("fullTabulation + codebook recode on dotted names") {
     assert(Tabulation.fullTabulation(df).select("column").distinct().count() == 4)
     val r = Cleaning.applyCodebook(df, Map("Q2. Gender" -> Map("Male" -> "M")))

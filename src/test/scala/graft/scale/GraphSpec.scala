@@ -438,6 +438,29 @@ class GraphSpec extends AnyFunSuite {
     assert(ranK5 === 1, s"K5 at k=4 removes nothing: certified after round 1, ran $ranK5")
   }
 
+  test("distributed loops: the analyzed plan is the same size at depth 5 and 5 + CheckpointEvery") {
+    // the loop frames are cut every CheckpointEvery rounds, so a deeper
+    // run adds no plan nodes: lineage stays bounded at any depth
+    import org.apache.spark.sql.DataFrame
+    val edges = (0L until 80L).map(i => (i % 13, (i * 5 + 1) % 13)).toDF("src", "dst")
+    val seeds = Seq(0L, 7L).toDF("node")
+    // a 30-edge path peels one edge per end per round: neither depth converges
+    val chain = (0L until 30L).map(i => (i, i + 1)).toDF("src", "dst")
+    def planSize(df: DataFrame): Int = df.queryExecution.analyzed.collect { case p => p }.size
+    val deep = 5 + Graph.CheckpointEvery
+    SparkTestSession.withConf(DriverFold.Conf, "0") {
+      Seq[(String, Int => DataFrame)](
+        "pageRank" -> (n => Graph.pageRank(edges, "src", "dst", n)),
+        "seedDistance" -> (n => Graph.seedDistance(edges, "src", "dst", seeds, n)),
+        "labelPropagation" -> (n => Graph.labelPropagation(edges, "src", "dst", n)),
+        "hits" -> (n => Graph.hits(edges, "src", "dst", n)),
+        "kCore" -> (n => Graph.kCore(chain, "src", "dst", k = 2, rounds = n))
+      ).foreach { case (name, run) =>
+        assert(planSize(run(5)) === planSize(run(deep)), name)
+      }
+    }
+  }
+
   test("triangles: K4 + pendant path — exact counts and micro coefficients") {
     // K4 on {1,2,3,4} (4 triangles, every node in 3 of them, lcc = 1)
     // plus a pendant path 4-5-6 (no triangles; node 6 has deg 1 ->
