@@ -111,20 +111,6 @@ private[graft] object EntryShared {
         fittedBpe(s, d, merges)).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap)
 
-  /** Flagship: full BHT transform pipeline (§3.2) on sf0.001, treating
-    * `customer` as the survey wave (TOM = market segment, CSAT = account
-    * balance scale, NPS = nation key). Returns the awareness TOM table.
-    */
-
-  /** Derived pairwise-preference view over `documents` (the testdata
-    * has no ratings table; both engines derive the SAME view): within
-    * each language, consecutive docs by doc_id form a judged pair and
-    * the longer document wins — items are the NUMERIC source ids, ties
-    * and same-source pairs are dropped. FIXTURE, not library: the
-    * lang-partitioned lead() window sorts a corpus fraction per
-    * partition, which is fine for deriving test games but not a shape
-    * to ship — production callers hand [[graft.scale.Preferences]] a
-    * real ratings table and no window runs at all. */
   /** WET-roundtrip epilogue shared by the s23/s30 keys: conversion
     * records back to (doc_id from the fixture URL, declared
     * content_length, measured n_chars, text). */
@@ -297,6 +283,15 @@ private[graft] object EntryShared {
       |         CASE WHEN doc_id % (5 + 2 * (doc_id % 3)) = 0 THEN 'xx' ELSE lang END
       |  FROM documents)""".stripMargin
 
+  /** Derived pairwise-preference view over `documents` (the testdata
+    * has no ratings table; both engines derive the SAME view): within
+    * each language, consecutive docs by doc_id form a judged pair and
+    * the longer document wins — items are the NUMERIC source ids, ties
+    * and same-source pairs are dropped. FIXTURE, not library: the
+    * lang-partitioned lead() window sorts a corpus fraction per
+    * partition, which is fine for deriving test games but not a shape
+    * to ship — production callers hand [[graft.scale.Preferences]] a
+    * real ratings table and no window runs at all. */
   def preferenceGames(s: SparkSession, d: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("lang")).orderBy(col("doc_id"))
@@ -667,12 +662,6 @@ private[graft] object EntryShared {
        |            ELSE 0.0 END AS epochs
        |FROM u)""".stripMargin
 
-  /** DuckDB mirror of [[graft.scale.TextAnalysis]]'s `bm25Contrib`
-    * kernel at the default k1 = 1.2, b = 0.75 — one definition for
-    * every BM25 oracle, with the constants interpolated from the SAME
-    * Scala doubles the Spark plan uses (shortest-roundtrip decimals
-    * parse back bit-identical).
-    */
   /** Shared inverted-index CTEs for the query-table BM25 oracles: the
     * 3-query VALUES table, its token set, and the (doc, token) tf /
     * doc-length / df / corpus-stat frames. `tf`/`toks` are
@@ -708,6 +697,12 @@ private[graft] object EntryShared {
        |      SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY bm25_micro DESC, doc_id ASC) AS rk
        |      FROM ${p}b WHERE bm25_micro > 0) WHERE rk <= $k)""".stripMargin
 
+  /** DuckDB mirror of [[graft.scale.TextAnalysis]]'s `bm25Contrib`
+    * kernel at the default k1 = 1.2, b = 0.75 — one definition for
+    * every BM25 oracle, with the constants interpolated from the SAME
+    * Scala doubles the Spark plan uses (shortest-roundtrip decimals
+    * parse back bit-identical).
+    */
   def bm25ContribSql(
       tf: String, dfc: String, dl: String, nd: String, tt: String,
       k1: Double = 1.2, b: Double = 0.75): String = {
@@ -718,12 +713,6 @@ private[graft] object EntryShared {
        |  * 1000000.0 + 0.5) AS BIGINT)""".stripMargin
   }
 
-  /** DuckDB mirror of [[graft.functions.PortableHash.polyHash31]] for
-    * an arbitrary string expression (empty string folds to 0) — the
-    * SINGLE source for every oracle that replays the poly-hash kernel,
-    * matching PortableHash's one-definition rule on the Scala side.
-    * `base` parameterizes SimHash's second 131-base row.
-    */
   /** The planted-dup orders view (`qcDupedOrders`) as oracle CTEs
     * ending in `v(k1, k2)`. */
   def qcDupedOrdersSql: String =
@@ -732,6 +721,12 @@ private[graft] object EntryShared {
       |             o_custkey AS k2 FROM orders),
       |v AS (SELECT * FROM v0 UNION ALL SELECT * FROM v0 WHERE k1 % 10 = 0)""".stripMargin
 
+  /** DuckDB mirror of [[graft.functions.PortableHash.polyHash31]] for
+    * an arbitrary string expression (empty string folds to 0) — the
+    * SINGLE source for every oracle that replays the poly-hash kernel,
+    * matching PortableHash's one-definition rule on the Scala side.
+    * `base` parameterizes SimHash's second 131-base row.
+    */
   def polyHashSqlOf(expr: String, base: Int = 31): String =
     s"""CASE WHEN $expr = '' THEN 0
        |     ELSE list_reduce(list_prepend(CAST(0 AS BIGINT),
@@ -1004,11 +999,6 @@ private[graft] object EntryShared {
        |FROM per GROUP BY 1""".stripMargin
   }
 
-  /** Full corpus-clean oracle: quality keep + language filter + n-gram
-    * near-dup connected components over the SURVIVORS, keeping cluster
-    * representatives — composed from the same SQL pieces the individual
-    * stage oracles use.
-    */
   /** Stopword-score CTE chain shared by the language-ID oracles:
     * occurrence counts per (doc, language) via one token explode + a
     * 40-row join, pivoted back to score_* columns — count-identical to
@@ -1034,6 +1024,11 @@ private[graft] object EntryShared {
        |FROM $tl LEFT JOIN swj ON $tl.doc_id = swj.doc_id GROUP BY 1)""".stripMargin
   }
 
+  /** Full corpus-clean oracle: quality keep + language filter + n-gram
+    * near-dup connected components over the SURVIVORS, keeping cluster
+    * representatives — composed from the same SQL pieces the individual
+    * stage oracles use.
+    */
   val corpusCleanCtes: String = {
     val m = "greatest(score_de, score_en, score_es, score_fr, score_zh)"
     s"""WITH RECURSIVE
@@ -1128,9 +1123,6 @@ private[graft] object EntryShared {
       |         CASE WHEN turn % 2 = 1 THEN 'user' ELSE 'assistant' END AS role, text
       |       FROM conv)""".stripMargin
 
-  /** The x_graph_* oracle prologue: edge/degree/node CTEs mirroring
-    * [[graphEdges]] + Graph.pageRank's hygiene (distinct edges, no
-    * self-loops), then one CTE per unrolled power iteration. */
   /** The C4 terminal-punctuation rule as SQL over the 9 literal
     * suffixes — mirrors [[graft.scale.WebFilters]]'s endsWith chain. */
   def c4TerminalSql(v: String): String =
@@ -1209,6 +1201,9 @@ private[graft] object EntryShared {
     base + iters
   }
 
+  /** The x_graph_* oracle prologue: edge/degree/node CTEs mirroring
+    * [[graphEdges]] + Graph.pageRank's hygiene (distinct edges, no
+    * self-loops), then one CTE per unrolled power iteration. */
   def graphRankOracleCtes(iterations: Int): String = {
     val base =
       """WITH e AS (

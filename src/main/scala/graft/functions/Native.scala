@@ -462,12 +462,6 @@ object Native {
     override def prettyName: String = "hyperplane_lsh_keys"
   }
 
-  /** The `n` nearest centroid indices for a vector by squared euclidean
-    * distance (ties → lower index), as array<int>. Centroids ship as
-    * literals (nlist ≤ thousands — driver-sized by design, like the
-    * hyperplanes above), so IVF cell assignment/probing is one tight
-    * loop per row instead of nlist interpreted struct comparisons.
-    */
   /** L2-normalized copy of a float/double array (double elements);
     * NULL when the norm is zero (a zero vector has no direction — the
     * IVF quantizer and probe paths drop it rather than inventing one).
@@ -517,6 +511,12 @@ object Native {
     override def prettyName: String = "l2_normalize"
   }
 
+  /** The `n` nearest centroid indices for a vector by squared euclidean
+    * distance (ties → lower index), as array<int>. Centroids ship as
+    * literals (nlist ≤ thousands — driver-sized by design, like the
+    * hyperplanes above), so IVF cell assignment/probing is one tight
+    * loop per row instead of nlist interpreted struct comparisons.
+    */
   case class NearestCells(child: Expression, centroids: Array[Array[Double]], n: Int)
       extends UnaryExpression with CodegenFallback {
     override def dataType: DataType = ArrayType(IntegerType, containsNull = false)

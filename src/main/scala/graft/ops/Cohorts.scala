@@ -38,22 +38,6 @@ object Cohorts {
       .agg(count(lit(1)).as("n"))
   }
 
-  /** Retention matrix: one row per (cohort month, month offset) with
-    * the distinct active users. Month index is the integer
-    * `year·12 + month − 1` — pure integer arithmetic on calendar
-    * fields, so any engine derives the identical cohort and offset (no
-    * interval/day-count semantics, which differ across engines for
-    * month math). Output: (cohort_year, cohort_month, offset_months,
-    * n_users); offset 0 is each cohort's full size.
-    *
-    * Scale: one per-user min aggregate (shuffles user ids once), an
-    * id-keyed join back (co-partitioned on the user key), and one
-    * (cohort, offset)-keyed distinct-count — months × months groups,
-    * summary-sized. For month counts beyond exact-distinct comfort,
-    * swap the epilogue's `countDistinct` for the gated HLL
-    * (`approx_count_distinct`, see [[Stats.approxDistinctGate]]) —
-    * same frame, sketch state.
-    */
   /** SCD-2 interval build — collapse an event stream into the
     * slowly-changing-dimension form a warehouse serves: one row per
     * (key, value) RUN with its validity interval, instead of one row
@@ -131,6 +115,22 @@ object Cohorts {
           .as("stickiness"))
   }
 
+  /** Retention matrix: one row per (cohort month, month offset) with
+    * the distinct active users. Month index is the integer
+    * `year·12 + month − 1` — pure integer arithmetic on calendar
+    * fields, so any engine derives the identical cohort and offset (no
+    * interval/day-count semantics, which differ across engines for
+    * month math). Output: (cohort_year, cohort_month, offset_months,
+    * n_users); offset 0 is each cohort's full size.
+    *
+    * Scale: one per-user min aggregate (shuffles user ids once), an
+    * id-keyed join back (co-partitioned on the user key), and one
+    * (cohort, offset)-keyed distinct-count — months × months groups,
+    * summary-sized. For month counts beyond exact-distinct comfort,
+    * swap the epilogue's `countDistinct` for the gated HLL
+    * (`approx_count_distinct`, see [[Stats.approxDistinctGate]]) —
+    * same frame, sketch state.
+    */
   def retentionMatrix(
       events: DataFrame, userCol: String, tsCol: String): DataFrame = {
     val u = Cleaning.qcol(userCol)

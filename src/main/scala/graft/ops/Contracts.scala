@@ -44,17 +44,6 @@ object Contracts {
         col("n_orphans"))
   }
 
-  /** Id-sequence gap/duplicate audit — the completeness side of the
-    * contract: a surrogate-key column that should be dense (event ids,
-    * row sequence numbers) is summarized as
-    * `(rule, n_rows, n_distinct, min_id, max_id, n_missing, n_dupes)`
-    * where `n_missing = span − distinct` (ids absent from the range)
-    * and `n_dupes = rows − distinct`. Nonzero missing on a
-    * should-be-dense key means a delivery dropped rows upstream.
-    *
-    * Scale: ONE aggregate (count-distinct adds its standard two-phase
-    * expand); no window, no join.
-    */
   /** Compound-key uniqueness audit — the dbt `unique` test at delivery
     * grain: `(rule, n_rows, n_null_keys, n_distinct, n_dupe_keys,
     * n_dupe_rows)` where a null key is a row with ANY null component
@@ -190,6 +179,17 @@ object Contracts {
           .otherwise(col("n_dst") === 0L))
   }
 
+  /** Id-sequence gap/duplicate audit — the completeness side of the
+    * contract: a surrogate-key column that should be dense (event ids,
+    * row sequence numbers) is summarized as
+    * `(rule, n_rows, n_distinct, min_id, max_id, n_missing, n_dupes)`
+    * where `n_missing = span − distinct` (ids absent from the range)
+    * and `n_dupes = rows − distinct`. Nonzero missing on a
+    * should-be-dense key means a delivery dropped rows upstream.
+    *
+    * Scale: ONE aggregate (count-distinct adds its standard two-phase
+    * expand); no window, no join.
+    */
   def sequenceGapAudit(df: DataFrame, idCol: String, rule: String): DataFrame =
     df.filter(qcol(idCol).isNotNull)
       .agg(

@@ -24,22 +24,12 @@ object MultiDim {
       decimals: Int = 1): DataFrame = {
     require(dims.nonEmpty && dims.size <= 3, s"dims must be 1..3, got $dims")
     val w = Cleaning.weightExpr(df, weightCol)
-    val grp0 = df
+    val grp = df
       .groupBy(dims.map(Cleaning.qcol): _*)
       .agg(sum(w).as("count"))
-    // summary-sized, read twice when percenting by total; eager
-    // localCheckpoint (ContextCleaner-released) instead of persist()
-    // so repeated calls don't pin frames in the cache manager
-    val grp =
-      if (percentBy == "total") grp0.localCheckpoint(eager = false)
-      else grp0
 
     if (percentBy == "total") {
-      val total = grp.agg(sum(col("count")).as("__total__"))
-      grp.crossJoin(broadcast(total))
-        .withColumn("pct",
-          Rounding.halfUp(col("count") / when(col("__total__") =!= 0, col("__total__")) * 100, decimals))
-        .drop("__total__")
+      Tabulation.withPctOfTotal(grp, "count", "pct", decimals)
     } else if (dims.contains(percentBy)) {
       val denom = sum(col("count")).over(Window.partitionBy(Cleaning.qcol(percentBy)))
       grp.withColumn("pct",

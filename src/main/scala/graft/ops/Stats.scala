@@ -32,11 +32,6 @@ object Stats {
       .select(col("kv.metric").as("metric"), col("kv.value").as("value"))
   }
 
-  /** One-pass approximate describe — the 100 TB path (SCALE.md §7): no
-    * per-group sort; `approx_percentile` (KLL-style sketch) merges
-    * across partitions. `describe` above is the exact oracle-checked
-    * baseline; specs pin the two within sketch tolerance.
-    */
   /** Z-score normalization of a numeric column, optionally per group —
     * the feature-prep step before clustering/regression/embedding-side
     * models. Stats come from ONE aggregate (broadcast back for the
@@ -456,15 +451,6 @@ object Stats {
       .agg(count(lit(1)).as("n"), sum(col("__v")).as("total"))
   }
 
-  /** Pearson chi-square test of independence over a weighted crosstab —
-    * the survey analyst's "is this banner break significant" operator.
-    * Long format (metric, value) with integer-scaled values so the
-    * statistic is exact and engine-portable:
-    *   chi2_micro = Σ_cells floor((obs-exp)²/exp * 1e6 + 0.5)  (long sum
-    *   — order-independent, unlike a double sum), dof, n.
-    * Cell counts come from one hash-aggregate; expected counts from
-    * window sums over the aggregated (tiny) cell frame.
-    */
   /** Shared scaffolding for the driver-side contingency operators
     * (chiSquare, columnProportionZTest): ONE distributed cell
     * aggregation, collected as a (row, col) → weight map with sorted
@@ -492,6 +478,15 @@ object Stats {
     (obs, obs.keys.map(_._1).toSeq.distinct.sorted, obs.keys.map(_._2).toSeq.distinct.sorted)
   }
 
+  /** Pearson chi-square test of independence over a weighted crosstab —
+    * the survey analyst's "is this banner break significant" operator.
+    * Long format (metric, value) with integer-scaled values so the
+    * statistic is exact and engine-portable:
+    *   chi2_micro = Σ_cells floor((obs-exp)²/exp * 1e6 + 0.5)  (long sum
+    *   — order-independent, unlike a double sum), dof, n.
+    * Cell counts come from one hash-aggregate; expected counts from
+    * window sums over the aggregated (tiny) cell frame.
+    */
   def chiSquare(
       df: DataFrame, rowCol: String, colCol: String,
       weightCol: Option[String] = None): DataFrame = {
@@ -1553,30 +1548,6 @@ object Stats {
     * IN-PLAN below the cross join (the ksDrift rule). */
   val MaxChiSquareLevels = 4096L
 
-  /** Pearson chi-square test of independence between two categorical
-    * columns, plus Cramér's V — the survey analyst's "are these
-    * questions related" screen beside the z-score significance grid.
-    * χ² = Σ over the DENSE level lattice of (o−e)²/e with
-    * e = rowMargin·colMargin/n; zero-observed cells contribute their
-    * full expected mass (dropping them understates the statistic,
-    * the classic sparse-crosstab mistake). V = √(χ²/(n·(min(|A|,|B|)−1)))
-    * normalizes to [0,1] for effect size across table shapes.
-    *
-    * Determinism: each cell's term is computed as
-    * (o·n − ra·cb)²/(ra·cb·n) — the numerator an EXACT long before the
-    * one double division — and micro-rounded per cell before summing
-    * (order-invariant, the slice-entropy precedent). Rows with a NULL
-    * in either column are dropped. Overflow: o·n ≤ n² needs n ≲ 3e9 —
-    * rescale counts upstream past that (the BT countDiv move).
-    * min(|A|,|B|) = 1 emits dof 0 and NULL V in-band.
-    *
-    * Output: ONE row — (n, n_a, n_b, dof, chi2_micro, cramers_v).
-    *
-    * Scale: one corpus hash aggregate to the observed cells, two
-    * margin rollups, a dense |A|·|B| lattice join (both sides guarded
-    * at [[MaxChiSquareLevels]] IN-PLAN, below the cross join), one
-    * 1-row epilogue. The corpus is touched once.
-    */
   /** The dense chi-square lattice shared by [[chiSquareIndependence]]
     * and [[chiSquareResiduals]]: observed cells, guarded margins, the
     * 1-row total, and the per-cell micro term — one definition so the
@@ -1614,6 +1585,30 @@ object Stats {
       .withColumn("__tm", floor(term * lit(1000000.0) + lit(0.5)).cast("long"))
   }
 
+  /** Pearson chi-square test of independence between two categorical
+    * columns, plus Cramér's V — the survey analyst's "are these
+    * questions related" screen beside the z-score significance grid.
+    * χ² = Σ over the DENSE level lattice of (o−e)²/e with
+    * e = rowMargin·colMargin/n; zero-observed cells contribute their
+    * full expected mass (dropping them understates the statistic,
+    * the classic sparse-crosstab mistake). V = √(χ²/(n·(min(|A|,|B|)−1)))
+    * normalizes to [0,1] for effect size across table shapes.
+    *
+    * Determinism: each cell's term is computed as
+    * (o·n − ra·cb)²/(ra·cb·n) — the numerator an EXACT long before the
+    * one double division — and micro-rounded per cell before summing
+    * (order-invariant, the slice-entropy precedent). Rows with a NULL
+    * in either column are dropped. Overflow: o·n ≤ n² needs n ≲ 3e9 —
+    * rescale counts upstream past that (the BT countDiv move).
+    * min(|A|,|B|) = 1 emits dof 0 and NULL V in-band.
+    *
+    * Output: ONE row — (n, n_a, n_b, dof, chi2_micro, cramers_v).
+    *
+    * Scale: one corpus hash aggregate to the observed cells, two
+    * margin rollups, a dense |A|·|B| lattice join (both sides guarded
+    * at [[MaxChiSquareLevels]] IN-PLAN, below the cross join), one
+    * 1-row epilogue. The corpus is touched once.
+    */
   def chiSquareIndependence(
       df: DataFrame, colA: String, colB: String): DataFrame = {
     val lat = chiSquareLattice(df, colA, colB)

@@ -23,7 +23,7 @@ object Tabulation {
     * window (A10, app.py:112,141,170). `counts` must already be the
     * aggregated (summary-sized) frame.
     */
-  private def withPctOfTotal(
+  private[ops] def withPctOfTotal(
       counts0: DataFrame, countCol: String, pctName: String, decimals: Int): DataFrame = {
     // counts is summary-sized and read twice (total + projection):
     // snapshot it so the full-data aggregation runs once. A

@@ -136,21 +136,6 @@ object TimeSeries {
       .withColumn("roll_max", max(col("vm")).over(roll))
   }
 
-  /** Rolling relative-deviation outlier flag — the streaming-friendly
-    * anomaly screen over [[lagFeatures]]'s frame: an event is flagged
-    * when its value deviates from the rolling mean of the previous
-    * `rollN` events by more than `thresholdPct` percent of the rolling
-    * mean ABSOLUTE value. Entirely in integers — the test
-    * `|v·n − Σv| · 100 > pct · Σ|v|` is the deviation inequality with
-    * both sides multiplied by `n·100`, so no division ever happens and
-    * engines agree bitwise. Events with fewer than `minObs` prior
-    * observations are never flagged (is_anomaly false, audit columns
-    * still emitted).
-    *
-    * Scale: the same single key-partitioned window pass as
-    * [[lagFeatures]]; magnitudes bounded by `rollN · max|v| · 100` —
-    * micro-scaled values to ~9e16 before a long would overflow.
-    */
   /** Weekly seasonal profile per key: count/sum/mean of the value by
     * day-of-week (0 = Monday … 6 = Sunday; epoch day 0 = Thursday = 3,
     * floor-div + pmod so pre-1970 timestamps land on the right
@@ -222,6 +207,21 @@ object TimeSeries {
       .withColumn("day", floorDivEpochExpr("us", 86400000000L))
       .withColumn("dow", pmod(col("day") + lit(3L), lit(7L)).cast("long"))
 
+  /** Rolling relative-deviation outlier flag — the streaming-friendly
+    * anomaly screen over [[lagFeatures]]'s frame: an event is flagged
+    * when its value deviates from the rolling mean of the previous
+    * `rollN` events by more than `thresholdPct` percent of the rolling
+    * mean ABSOLUTE value. Entirely in integers — the test
+    * `|v·n − Σv| · 100 > pct · Σ|v|` is the deviation inequality with
+    * both sides multiplied by `n·100`, so no division ever happens and
+    * engines agree bitwise. Events with fewer than `minObs` prior
+    * observations are never flagged (is_anomaly false, audit columns
+    * still emitted).
+    *
+    * Scale: the same single key-partitioned window pass as
+    * [[lagFeatures]]; magnitudes bounded by `rollN · max|v| · 100` —
+    * micro-scaled values to ~9e16 before a long would overflow.
+    */
   def rollingDeviation(
       events: DataFrame, keyCol: String, tsCol: String, idCol: String,
       valueCol: String, rollN: Int = 5, thresholdPct: Int = 200,

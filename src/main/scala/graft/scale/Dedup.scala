@@ -512,8 +512,8 @@ object Dedup {
     * Output: (id_a, id_b, n_shared, n_a, n_b, cont_a, cont_b), id_a <
     * id_b, kept when max(cont_a, cont_b) >= threshold; cont_a =
     * n_shared/n_a is "how much of A is inside B".
-    */
-  /** EXACT-COLLAPSE prepass (`collapseIdentical`, ON by default):
+    *
+    * EXACT-COLLAPSE prepass (`collapseIdentical`, ON by default):
     * identical shingle sets collapse to one representative before the
     * inverted-index join; the df cap keeps its MEMBER-count semantics
     * exactly (every member of a set-group carries every group shingle,
@@ -682,8 +682,8 @@ object Dedup {
     * use nearDupMinhash (banded, probabilistic, also capped). Cap
     * membership is deterministic (block sizes are data-determined), so
     * an exact oracle can mirror it.
-    */
-  /** EXACT-COLLAPSE prepass (`collapseIdentical`, ON by default): runs
+    *
+    * EXACT-COLLAPSE prepass (`collapseIdentical`, ON by default): runs
     * AFTER the block cap — the cap's member-count semantics (and the
     * oracles that mirror it) are untouched — and collapses identical
     * (block, shingle set) rows to one representative for the quadratic
@@ -691,8 +691,8 @@ object Dedup {
     * a block by construction (same length, same first token), so the
     * dup-heavy win of [[nearDupMinhash]]'s collapse carries over; the
     * output is identical either way.
-    */
-  /** `extraBlockCols` prepend to the blocking key: pairs only form
+    *
+    * `extraBlockCols` prepend to the blocking key: pairs only form
     * within equal values (e.g. a chat `role` column — a user turn is
     * never a near-dup candidate of an assistant turn), and the block
     * cap counts members per (extras…, lenband, t0).
@@ -756,8 +756,8 @@ object Dedup {
     * clusters are shallow in practice (pairs come from shared buckets),
     * and each round is a pair of co-partitioned shuffles. Converges when
     * no label changes; `maxIter` bounds pathological chains.
-    */
-  /** Hybrid cutover: the VERIFIED near-dup pair set is the duplicate
+    *
+    * Hybrid cutover: the VERIFIED near-dup pair set is the duplicate
     * mass post-banding/post-verify — usually dwarfed by the corpus.
     * When it fits the [[DriverFold]] budget, components are solved with
     * driver union-find in O(E·α(E)) and ONE broadcast join, replacing
@@ -892,14 +892,6 @@ object Dedup {
         expr("1000000L div cluster_size").as("weight_micro"))
   }
 
-  /** Cluster-size census over an EXISTING clusters frame (the
-    * [[clusters]] output, or any (id, cluster) assignment): how much
-    * duplication, in what clump sizes — one row per cluster size with
-    * the number of clusters at that size. The audit report of a dedup
-    * run, as a library call so callers never recompute the pair graph
-    * for it: two summary-sized hash aggregates over a frame they
-    * already have.
-    */
   /** Quality-aware representative election over an existing clusters
     * frame: each near-dup cluster keeps its HIGHEST-scoring member
     * (score desc, id asc — the library's standard total order) instead
@@ -927,6 +919,14 @@ object Dedup {
       .select(col("cluster"), col("id"), graft.ops.Cleaning.qcol(scoreCol))
   }
 
+  /** Cluster-size census over an EXISTING clusters frame (the
+    * [[clusters]] output, or any (id, cluster) assignment): how much
+    * duplication, in what clump sizes — one row per cluster size with
+    * the number of clusters at that size. The audit report of a dedup
+    * run, as a library call so callers never recompute the pair graph
+    * for it: two summary-sized hash aggregates over a frame they
+    * already have.
+    */
   def clusterSizeCensus(
       clusters: DataFrame, clusterCol: String = "cluster"): DataFrame =
     clusters.groupBy(graft.ops.Cleaning.qcol(clusterCol))
@@ -1372,17 +1372,6 @@ object Dedup {
     df.join(best, id === col("__id__")).drop("__id__")
   }
 
-  /** Incremental exact dedup: drop batch rows whose normalized token
-    * stream already exists in a reference corpus — the per-delivery
-    * dedup of an INCREMENTAL ingest (the index side is typically the
-    * persisted fingerprint column of everything accepted so far, not
-    * the full text).
-    *
-    * Scale: both sides reduce to a 64-bit fingerprint (narrow map);
-    * the left_anti join co-partitions on the hash. At 100 TB the index
-    * side is a pre-distinct'd fingerprint table — bytes per historical
-    * doc, not the document itself.
-    */
   /** The content fingerprint incremental exact dedup keys on —
     * xxhash64 of the normalized token stream, NULL-guarded: Spark's
     * xxhash64 SKIPS null inputs (returns the seed hash), which would
@@ -1394,6 +1383,17 @@ object Dedup {
   private def tokenFingerprint(t: Column): Column =
     when(t.isNotNull, xxhash64(array_join(TextAnalysis.tokens(t), " ")))
 
+  /** Incremental exact dedup: drop batch rows whose normalized token
+    * stream already exists in a reference corpus — the per-delivery
+    * dedup of an INCREMENTAL ingest (the index side is typically the
+    * persisted fingerprint column of everything accepted so far, not
+    * the full text).
+    *
+    * Scale: both sides reduce to a 64-bit fingerprint (narrow map);
+    * the left_anti join co-partitions on the hash. At 100 TB the index
+    * side is a pre-distinct'd fingerprint table — bytes per historical
+    * doc, not the document itself.
+    */
   def dedupAgainstIndex(
       batch: DataFrame, index: DataFrame, idCol: String, textCol: String): DataFrame = {
     val indexFps = index
@@ -1475,8 +1475,8 @@ object Dedup {
     * covered chunks still leave one clean chunk); chunks merely
     * discriminate on fewer bits. `fpBits >= maxHamming + 1` is required
     * so every chunk has at least one bit.
-    */
-  /** EXACT-COLLAPSE prepass (`collapseIdentical`, ON by default): docs
+    *
+    * EXACT-COLLAPSE prepass (`collapseIdentical`, ON by default): docs
     * sharing the SAME fingerprint value collapse to one representative
     * before the chunk self-join, and verified representative pairs
     * expand back to member pairs (intra-group Hamming is exactly 0,

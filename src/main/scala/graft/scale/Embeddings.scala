@@ -19,20 +19,6 @@ object Embeddings {
     * oracle side (see Rounding.scala for why `round()` is a trap). */
   private def halfUp(c: Column): Column = floor(c + 0.5)
 
-  /** Per-vector symmetric int8 quantization:
-    *   scale = max(|v_i|) / 127        (null for the all-zero vector)
-    *   q_i   = clamp(halfUp(v_i / scale), -127, 127)
-    *   v'_i  = q_i * scale
-    * Returns (id, qscale, cos_recon, max_abs_err) — the scale factor
-    * plus reconstruction quality: cosine(v, v') and max_i |v_i - v'_i|.
-    * Metrics are rounded to 6 dp (`Rounding.halfUp`) for stable
-    * cross-engine comparison of the already-engine-exact doubles.
-    *
-    * The quantized codes themselves are a row-local `transform` away
-    * (the clamp inside [[quantizeRecon]]) — this table form emits the
-    * scalar columns the driver's oracle can hash (array columns are not
-    * hashable by the compare harness).
-    */
   /** Embedding hygiene audit per label — run BEFORE any cosine-based
     * pipeline stage: zero-norm vectors poison cosine (the library's
     * zero-guard maps them to similarity 0, silently), ragged
@@ -122,6 +108,20 @@ object Embeddings {
       .select(id, col("pos").cast("long").as("pos"), col("val"))
   }
 
+  /** Per-vector symmetric int8 quantization:
+    *   scale = max(|v_i|) / 127        (null for the all-zero vector)
+    *   q_i   = clamp(halfUp(v_i / scale), -127, 127)
+    *   v'_i  = q_i * scale
+    * Returns (id, qscale, cos_recon, max_abs_err) — the scale factor
+    * plus reconstruction quality: cosine(v, v') and max_i |v_i - v'_i|.
+    * Metrics are rounded to 6 dp (`Rounding.halfUp`) for stable
+    * cross-engine comparison of the already-engine-exact doubles.
+    *
+    * The quantized codes themselves are a row-local `transform` away
+    * (the clamp inside [[quantizeRecon]]) — this table form emits the
+    * scalar columns the driver's oracle can hash (array columns are not
+    * hashable by the compare harness).
+    */
   def quantizeInt8Table(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
     val id = graft.ops.Cleaning.qcol(idCol)
     val v = graft.ops.Cleaning.qcol(vecCol)
@@ -284,25 +284,6 @@ object Embeddings {
     * error loudly, not OOM the driver. */
   val MaxCentroidModelRows = 1 << 20
 
-  /** Nearest-centroid assignment — the E-step / domain tagger pairing
-    * [[groupCentroids]]: every vector gets the group of its closest
-    * centroid (squared L2, ties to the lowest group key), as a new
-    * column. `centroids` is a (groupCol, pos, centroid) frame — fit it
-    * with [[groupCentroids]] on labeled data (or load a persisted one)
-    * and assign any corpus against it; composing the two over the SAME
-    * frame yields the centroid-classifier confusion audit.
-    *
-    * Scale: the model is collected once (cap [[MaxCentroidModelRows]],
-    * loud failure past it) and ships inside a native expression — the
-    * corpus pass is one narrow map plus a |groups|-row broadcast join
-    * mapping centroid index back to the group key. Null vectors assign
-    * null; null group keys are excluded from the model.
-    *
-    * Determinism: centroid components are the exact engine-invariant
-    * [[groupCentroids]] means; the distance fold is left-to-right per
-    * [[graft.functions.Native.NearestCells]], so an oracle replaying
-    * the same ordered fold agrees bit-for-bit.
-    */
   /** Collected centroid model shared by [[assignToCentroids]] and
     * [[simplifiedSilhouette]]: the totally-ordered group keys, the
     * dense centroid matrix in that order, and the group-key type. All
@@ -352,6 +333,25 @@ object Embeddings {
     (orderedKeys, cents, gType)
   }
 
+  /** Nearest-centroid assignment — the E-step / domain tagger pairing
+    * [[groupCentroids]]: every vector gets the group of its closest
+    * centroid (squared L2, ties to the lowest group key), as a new
+    * column. `centroids` is a (groupCol, pos, centroid) frame — fit it
+    * with [[groupCentroids]] on labeled data (or load a persisted one)
+    * and assign any corpus against it; composing the two over the SAME
+    * frame yields the centroid-classifier confusion audit.
+    *
+    * Scale: the model is collected once (cap [[MaxCentroidModelRows]],
+    * loud failure past it) and ships inside a native expression — the
+    * corpus pass is one narrow map plus a |groups|-row broadcast join
+    * mapping centroid index back to the group key. Null vectors assign
+    * null; null group keys are excluded from the model.
+    *
+    * Determinism: centroid components are the exact engine-invariant
+    * [[groupCentroids]] means; the distance fold is left-to-right per
+    * [[graft.functions.Native.NearestCells]], so an oracle replaying
+    * the same ordered fold agrees bit-for-bit.
+    */
   def assignToCentroids(
       df: DataFrame, vecCol: String, centroids: DataFrame,
       groupCol: String, outCol: String = "assigned"): DataFrame = {

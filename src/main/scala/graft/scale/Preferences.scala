@@ -1,7 +1,8 @@
 package graft.scale
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.Cleaning.qcol
 
 /** Preference-data operators — the RLHF/eval side of a training-data
   * pipeline: a stream of pairwise outcomes (winner item, loser item)
@@ -18,6 +19,13 @@ import org.apache.spark.sql.functions._
   */
 object Preferences {
 
+  /** The caller's (winner, loser) columns as (w, l): the one games prep
+    * under [[itemStats]] and [[pairStats]]. Names resolve through
+    * `qcol`, so dotted names work. */
+  private def outcomes(
+      games: DataFrame, winnerCol: String, loserCol: String): DataFrame =
+    games.select(qcol(winnerCol).as("w"), qcol(loserCol).as("l"))
+
   /** Per-item outcome rollup: (item, wins, losses, games,
     * winrate_micro = wins·1e6 div games). One union + one aggregate.
     *
@@ -25,11 +33,9 @@ object Preferences {
     * rows. */
   def itemStats(
       games: DataFrame, winnerCol: String, loserCol: String): DataFrame = {
-    val w = games.select(col(winnerCol).as("item"),
-      lit(1L).as("win"))
-    val l = games.select(col(loserCol).as("item"),
-      lit(0L).as("win"))
-    w.union(l)
+    val g = outcomes(games, winnerCol, loserCol)
+    g.select(col("w").as("item"), lit(1L).as("win"))
+      .union(g.select(col("l").as("item"), lit(0L).as("win")))
       .filter(col("item").isNotNull)
       .groupBy(col("item"))
       .agg(sum(col("win")).as("wins"),
@@ -50,8 +56,7 @@ object Preferences {
     * |items|² rows out, corpus-sized rows in. */
   def pairStats(
       games: DataFrame, winnerCol: String, loserCol: String): DataFrame =
-    games
-      .select(col(winnerCol).as("w"), col(loserCol).as("l"))
+    outcomes(games, winnerCol, loserCol)
       .filter(col("w").isNotNull && col("l").isNotNull && col("w") =!= col("l"))
       .select(least(col("w"), col("l")).as("item_a"),
         greatest(col("w"), col("l")).as("item_b"),
@@ -107,8 +112,9 @@ object Preferences {
       iterations: Int = 4, countDiv: Long = 1L): DataFrame = {
     require(iterations >= 1, "btStrengths: need at least one iteration")
     require(countDiv >= 1, "btStrengths: countDiv must be >= 1")
-    val (directed, totals) = btSetup(games, winnerCol, loserCol, countDiv)
-    btRun(directed, totals, iterations, None)
+    val (_, directed, totals) =
+      btSetupFromPairs(pairStats(games, winnerCol, loserCol), countDiv)
+    btRun(directed, totals, iterations, None)._1
   }
 
   /** [[btStrengths]] over an EXISTING pair matrix (a [[pairStats]]
@@ -146,8 +152,8 @@ object Preferences {
       init: Option[DataFrame] = None): DataFrame = {
     require(iterations >= 1, "btStrengthsFromPairs: need at least one iteration")
     require(countDiv >= 1, "btStrengthsFromPairs: countDiv must be >= 1")
-    val (directed, totals) = btSetupFromPairs(pairs, countDiv)
-    btRun(directed, totals, iterations, init)
+    val (_, directed, totals) = btSetupFromPairs(pairs, countDiv)
+    btRun(directed, totals, iterations, init)._1
   }
 
   /** Merge two pair matrices (both [[pairStats]]-shaped) — the
@@ -199,7 +205,7 @@ object Preferences {
     * inner-join drop semantics (an item missing from the strength map
     * contributes no term; an item with no opponents drops from the next
     * strength frame). `deltas(k)` is iteration k+1's max |Δstrength|
-    * over items present in consecutive frames — [[btDeltas]]'s
+    * over items present in consecutive frames — [[btRun]]'s
     * inner-join max — None when no overlap. */
   private def btFoldLocal(
       directed: DataFrame, totals: DataFrame, iterations: Int,
@@ -256,41 +262,53 @@ object Preferences {
     }
   }
 
-  /** Build the (item, wins, games, strength_micro) frame from a driver
-    * fold — the exact column set/types of the distributed projection. */
-  private def btLocalFrame(
-      totals: DataFrame, sFinal: java.util.HashMap[Any, java.lang.Long],
-      tRows: Array[(Any, Long, Long, Long)]): DataFrame = {
-    import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      tRows.iterator.flatMap { t =>
-        val v = sFinal.get(t._1)
-        if (v == null) Iterator.empty // the inner-join drop
-        else Iterator(org.apache.spark.sql.Row(t._1, t._2, t._3, v.longValue))
-      }.toSeq.asJava
-    val schema = StructType(Seq(
-      StructField("item", totals.schema("item").dataType),
-      StructField("wins", LongType), StructField("games", LongType),
-      StructField("strength_micro", LongType)))
-    totals.sparkSession.createDataFrame(rows, schema)
-  }
-
-  /** Shared MM driver: init (uniform or warm), `iterations` steps,
-    * final (item, wins, games, strength_micro) projection. Driver fold
-    * when the pair matrix fits the [[DriverFold]] budget; distributed
-    * loop otherwise. */
+  /** The MM loop, written once: init (uniform or warm), `iterations`
+    * steps, and the final (item, wins, games, strength_micro)
+    * projection, plus the per-iteration convergence curve
+    * (iteration, max_delta_micro) of [[btConvergence]], built only
+    * when called. A curve row is the max |Δstrength| over the items
+    * present in two consecutive strength frames (an inner join). Driver
+    * fold when the pair matrix fits the [[DriverFold]] budget;
+    * distributed loop otherwise. */
   private def btRun(
       directed: DataFrame, totals: DataFrame, iterations: Int,
-      init: Option[DataFrame]): DataFrame =
+      init: Option[DataFrame]): (DataFrame, () => DataFrame) =
     btFoldLocal(directed, totals, iterations, init) match {
-      case Some((sFinal, tRows, _)) => btLocalFrame(totals, sFinal, tRows)
+      case Some((sFinal, tRows, deltas)) =>
+        // the fold's frames carry the exact column set/types of the
+        // distributed projections; an item with no final strength drops
+        // (the inner join)
+        import org.apache.spark.sql.Row
+        import org.apache.spark.sql.types._
+        import scala.jdk.CollectionConverters._
+        def local(rows: Seq[Row], fields: StructField*) =
+          totals.sparkSession.createDataFrame(rows.asJava, StructType(fields))
+        val strengths = local(
+          tRows.toSeq.flatMap(t =>
+            Option(sFinal.get(t._1)).map(v => Row(t._1, t._2, t._3, v.longValue))),
+          StructField("item", totals.schema("item").dataType),
+          StructField("wins", LongType), StructField("games", LongType),
+          StructField("strength_micro", LongType))
+        val curve = () => local(
+          deltas.toSeq.zipWithIndex.map { case (d, k) =>
+            Row(k + 1, d.map(java.lang.Long.valueOf).orNull)
+          },
+          StructField("iteration", IntegerType, nullable = false),
+          StructField("max_delta_micro", LongType))
+        (strengths, curve)
       case None =>
-        var s = btInit(totals, init)
-        for (_ <- 1 to iterations) s = btStep(directed, totals, s)
-        totals.select(col("item"), col("wins"), col("games"))
-          .join(s, Seq("item"))
+        val s = (1 to iterations).scanLeft(btInit(totals, init))(
+          (prev, _) => btStep(directed, totals, prev))
+        val strengths = totals.select(col("item"), col("wins"), col("games"))
+          .join(s.last, Seq("item"))
           .withColumnRenamed("s_micro", "strength_micro")
+        val curve = () => s.zip(s.tail).zipWithIndex.map { case ((prev, next), k) =>
+          prev.select(col("item"), col("s_micro").as("__prev"))
+            .join(next, Seq("item"))
+            .agg(max(abs(col("s_micro") - col("__prev"))).as("max_delta_micro"))
+            .select(lit(k + 1).as("iteration"), col("max_delta_micro"))
+        }.reduce(_ unionByName _)
+        (strengths, curve)
     }
 
   /** Initial strength frame: uniform 1e6, or the deduped warm init
@@ -308,41 +326,25 @@ object Preferences {
           .localCheckpoint(eager = false)
     }
 
-  /** The shared MM inputs, MATERIALIZED once: the lazy forms would
-    * re-run the corpus-sized pair/win aggregates on EVERY iteration
-    * (each step's `d` join re-evaluates its inputs — only `s` was
-    * checkpointed before r11; measured ~2x on the fixture, and at
-    * corpus scale it is the difference between one corpus scan and
-    * `iterations` of them). Both frames are summary-sized (|pairs|,
-    * |items|) so the materialization barrier is metadata-priced.
-    */
-  private def btSetup(
-      games: DataFrame, winnerCol: String, loserCol: String,
-      countDiv: Long): (DataFrame, DataFrame) = {
-    val pairs = pairStats(games, winnerCol, loserCol)
-      .withColumn("games", greatest(expr(s"games div ${countDiv}L"), lit(1L)))
-    // directed view: (i, j, n_ij) both ways — d_i sums over opponents
-    val directed = pairs.select(
-        col("item_a").as("i"), col("item_b").as("j"), col("games").as("n"))
-      .union(pairs.select(
-        col("item_b").as("i"), col("item_a").as("j"), col("games").as("n")))
-      .localCheckpoint(eager = false)
-    val totals = itemStats(
-      games.filter(col(winnerCol) =!= col(loserCol)),
-      winnerCol, loserCol)
-      .select(col("item"), col("wins"), col("games"))
-      .withColumn("w_smooth", greatest(expr(s"wins div ${countDiv}L"), lit(0L)) + lit(1L))
-      .localCheckpoint(eager = false)
-    (directed, totals)
-  }
-
-  /** [[btSetup]]'s shape from an existing pair matrix: the directed
-    * view divides counts by `countDiv` (floored at 1, identical to the
-    * games path), totals derive from the UNDIVIDED matrix — wins and
-    * games per item are exact pair-matrix marginals. Both frames
-    * materialize once (the r11 loop-inputs lesson). */
+  /** The shared MM inputs from a pair matrix, each MATERIALIZED
+    * once: the lazy forms would re-run the corpus-sized pair/win
+    * aggregates on EVERY iteration (each step's `d` join re-evaluates
+    * its inputs — only `s` was checkpointed before r11; measured ~2x
+    * on the fixture, and at corpus scale it is the difference between
+    * one corpus scan and `iterations` of them). All three frames are
+    * summary-sized (|pairs|, |items|), so each barrier is
+    * metadata-priced.
+    *
+    * Returns the matrix with long counts (the frame [[btCalibration]]
+    * bins), the directed view — (i, j, n_ij) both ways, counts divided
+    * by `countDiv` and floored at 1 — and the per-item totals, which
+    * derive from the UNDIVIDED matrix: wins and games per item are
+    * exact pair-matrix marginals, and w_smooth = wins div countDiv + 1.
+    * Over a [[pairStats]] matrix these totals equal [[itemStats]]' of
+    * the null-free, self-free games, so the games path and the matrix
+    * path fit bit-identically. */
   private def btSetupFromPairs(
-      pairs: DataFrame, countDiv: Long): (DataFrame, DataFrame) = {
+      pairs: DataFrame, countDiv: Long): (DataFrame, DataFrame, DataFrame) = {
     val p = pairs.select(col("item_a"), col("item_b"),
         col("games").cast("long").as("games"),
         col("wins_a").cast("long").as("wins_a"))
@@ -362,7 +364,7 @@ object Preferences {
       .agg(sum(col("w")).as("wins"), sum(col("g")).as("games"))
       .withColumn("w_smooth", greatest(expr(s"wins div ${countDiv}L"), lit(0L)) + lit(1L))
       .localCheckpoint(eager = false)
-    (directed, totals)
+    (p, directed, totals)
   }
 
   /** Wilson score interval on per-item win rates — the confidence
@@ -425,31 +427,41 @@ object Preferences {
       ratings: DataFrame, itemCol: String, raterCol: String, labelCol: String,
       raterA: String, raterB: String): DataFrame = {
     require(raterA != raterB, "cohenKappa: raters must differ")
-    val one = ratings
-      .select(col(itemCol).as("item"), col(raterCol).cast("string").as("rater"),
-        col(labelCol).cast("string").as("label"))
-      .filter(col("item").isNotNull && col("label").isNotNull &&
-        (col("rater") === raterA || col("rater") === raterB))
-      .groupBy(col("item"), col("rater"))
-      .agg(min(col("label")).as("label"))
-    val a = one.filter(col("rater") === raterA)
-      .select(col("item"), col("label").as("la"))
-    val b = one.filter(col("rater") === raterB)
-      .select(col("item"), col("label").as("lb"))
-    val both = a.join(b, Seq("item"))
-    val agg = both.agg(
+    kappaCore(ratings, itemCol, raterCol, labelCol, raterA, raterB, None)
+  }
+
+  /** Cohen's agreement chain, written once for [[cohenKappa]] (no key)
+    * and [[kappaDrift]] (keyed by `wave`): the two raters' collapsed
+    * labels joined on (wave, item) into the (la, lb) overlap, then per
+    * key the agreement count, the label marginals' cross term, and the
+    * po/pe/kappa micro chain. Without a key every aggregate is global,
+    * so an empty overlap still emits its one null-rated row. */
+  private def kappaCore(
+      ratings: DataFrame, itemCol: String, raterCol: String, labelCol: String,
+      raterA: String, raterB: String, waveCol: Option[String]): DataFrame = {
+    val keyNames = waveCol.map(_ => "wave").toSeq
+    val keys = keyNames.map(col)
+    val one = collapseRatings(ratings, itemCol, raterCol, labelCol, waveCol,
+      Seq(raterA, raterB))
+    def side(rater: String, label: String) = one.filter(col("rater") === rater)
+      .select(keys ++ Seq(col("item"), col("label").as(label)): _*)
+    // reused by the agreement aggregate AND both marginals — one scan
+    val both = side(raterA, "la").join(side(raterB, "lb"), keyNames :+ "item")
+      .localCheckpoint(eager = false)
+    val agg = both.groupBy(keys: _*).agg(
       count(lit(1)).as("n_items"),
       coalesce(sum(when(col("la") === col("lb"), 1L)), lit(0L)).as("n_agree"))
-    val ca = both.groupBy(col("la").as("label")).agg(count(lit(1)).as("ca"))
-    val cb = both.groupBy(col("lb").as("label")).agg(count(lit(1)).as("cb"))
-    val chance = ca.join(cb, Seq("label"))
+    def marginal(label: String, name: String) =
+      both.groupBy(keys :+ col(label).as("label"): _*).agg(count(lit(1)).as(name))
+    val chance = marginal("la", "ca").join(marginal("lb", "cb"), keyNames :+ "label")
+      .groupBy(keys: _*)
       .agg(coalesce(sum(col("ca") * col("cb")), lit(0L)).as("cross"))
-    agg.crossJoin(broadcast(chance))
-      .select(col("n_items"), col("n_agree"),
+    (if (waveCol.isEmpty) agg.crossJoin(broadcast(chance)) else agg.join(chance, keyNames))
+      .select(keys ++ Seq(col("n_items"), col("n_agree"),
         when(col("n_items") > 0L,
           expr("(n_agree * 1000000L) div n_items")).as("po_micro"),
         when(col("n_items") > 0L,
-          expr("(cross * 1000000L) div (n_items * n_items)")).as("pe_micro"))
+          expr("(cross * 1000000L) div (n_items * n_items)")).as("pe_micro")): _*)
       .withColumn("kappa_micro",
         when(col("pe_micro") < 1000000L,
           expr("((po_micro - pe_micro) * 1000000L) div (1000000L - pe_micro)")))
@@ -457,16 +469,67 @@ object Preferences {
 
   /** Collapse a (item, rater, label) stream to ONE label per (item,
     * rater) — the MIN label, the library's deterministic tie rule;
-    * null items/labels drop. Shared prefix of every panel operator. */
+    * rater and label cast to string, null items/labels drop. The one
+    * ratings prep of every agreement operator: `waveCol` adds a leading
+    * `wave` key (null waves drop) and `raters` keeps only the named
+    * raters. Names resolve through `qcol`, so dotted names work. */
   private def collapseRatings(
-      ratings: DataFrame, itemCol: String, raterCol: String,
-      labelCol: String): DataFrame =
+      ratings: DataFrame, itemCol: String, raterCol: String, labelCol: String,
+      waveCol: Option[String] = None, raters: Seq[String] = Nil): DataFrame = {
+    val wave = waveCol.map(qcol(_).as("wave")).toSeq
+    val keep = waveCol.map(_ => col("wave").isNotNull).toSeq ++
+      Seq(col("item").isNotNull, col("label").isNotNull) ++
+      raters.map(col("rater") === _).reduceOption(_ || _)
     ratings
-      .select(col(itemCol).as("item"), col(raterCol).cast("string").as("rater"),
-        col(labelCol).cast("string").as("label"))
-      .filter(col("item").isNotNull && col("label").isNotNull)
-      .groupBy(col("item"), col("rater"))
+      .select(wave ++ Seq(qcol(itemCol).as("item"),
+        qcol(raterCol).cast("string").as("rater"),
+        qcol(labelCol).cast("string").as("label")): _*)
+      .filter(keep.reduce(_ && _))
+      .groupBy((waveCol.map(_ => col("wave")).toSeq ++ Seq(col("item"), col("rater"))): _*)
       .agg(min(col("label")).as("label"))
+  }
+
+  /** Per-(item, label) rating counts over the collapsed panel, named
+    * `name`, materialized once: [[consensusLabels]]' election and the
+    * panel statistics' per-item pass each read it twice. */
+  private def labelCounts(
+      ratings: DataFrame, itemCol: String, raterCol: String, labelCol: String,
+      name: String): DataFrame =
+    collapseRatings(ratings, itemCol, raterCol, labelCol)
+      .groupBy(col("item"), col("label"))
+      .agg(count(lit(1)).as(name))
+      .localCheckpoint(eager = false)
+
+  /** The panel statistics' shared pass ([[fleissKappa]],
+    * [[krippendorffAlpha]]) over the (item, label) counts `nik`: per
+    * item n_i = Σ_k n_ik and the `itemTerm` sum, kept when n_i ≥ 2,
+    * with its floored per-item micro `itemMicro` (a `<x>_micro` name);
+    * then ONE row — (n_items, n_ratings, `__<x>sum` = Σ of the item
+    * micros) crossed with the `labelTerm` sum over the kept items'
+    * pooled label counts ck. Each statistic closes with its own
+    * formulas over that row. */
+  private def panelCore(
+      ratings: DataFrame, itemCol: String, raterCol: String, labelCol: String,
+      itemTerm: (String, Column), itemMicro: (String, String),
+      labelTerm: (String, Column)): DataFrame = {
+    val (termName, term) = itemTerm
+    val (microName, micro) = itemMicro
+    val nik = labelCounts(ratings, itemCol, raterCol, labelCol, "nik")
+    val byItem = nik.groupBy(col("item"))
+      .agg(sum(col("nik")).as("ni"), sum(term).as(termName))
+      .filter(col("ni") >= 2L)
+      .withColumn(microName, expr(micro))
+      .localCheckpoint(eager = false) // reused: the top-line aggregate + the kept-item filter
+    val top = byItem.agg(
+      count(lit(1)).as("n_items"),
+      coalesce(sum(col("ni")), lit(0L)).as("n_ratings"),
+      coalesce(sum(col(microName)), lit(0L))
+        .as("__" + microName.stripSuffix("_micro") + "sum"))
+    val marg = nik.join(byItem.select(col("item")), Seq("item"))
+      .groupBy(col("label")).agg(sum(col("nik")).as("ck"))
+      .agg(coalesce(sum(labelTerm._2), lit(0L)).as(labelTerm._1))
+    top.crossJoin(broadcast(marg))
+  }
 
   /** Fleiss' kappa over a MULTI-rater panel — [[cohenKappa]]'s
     * two-rater statistic generalized to the label streams real
@@ -495,23 +558,10 @@ object Preferences {
   def fleissKappa(
       ratings: DataFrame, itemCol: String, raterCol: String,
       labelCol: String): DataFrame = {
-    val nik = collapseRatings(ratings, itemCol, raterCol, labelCol)
-      .groupBy(col("item"), col("label"))
-      .agg(count(lit(1)).as("nik"))
-      .localCheckpoint(eager = false) // reused by the per-item pass AND the marginals
-    val byItem = nik.groupBy(col("item"))
-      .agg(sum(col("nik")).as("ni"), sum(col("nik") * col("nik")).as("sq"))
-      .filter(col("ni") >= 2L)
-      .withColumn("pi_micro", expr("((sq - ni) * 1000000L) div (ni * (ni - 1L))"))
-      .localCheckpoint(eager = false) // reused: the top-line aggregate + the kept-item filter
-    val top = byItem.agg(
-      count(lit(1)).as("n_items"),
-      coalesce(sum(col("ni")), lit(0L)).as("n_ratings"),
-      coalesce(sum(col("pi_micro")), lit(0L)).as("__pisum"))
-    val marg = nik.join(byItem.select(col("item")), Seq("item"))
-      .groupBy(col("label")).agg(sum(col("nik")).as("ck"))
-      .agg(coalesce(sum(col("ck") * col("ck")), lit(0L)).as("__cross"))
-    top.crossJoin(broadcast(marg))
+    panelCore(ratings, itemCol, raterCol, labelCol,
+        itemTerm = "sq" -> col("nik") * col("nik"),
+        itemMicro = "pi_micro" -> "((sq - ni) * 1000000L) div (ni * (ni - 1L))",
+        labelTerm = "__cross" -> col("ck") * col("ck"))
       .select(col("n_items"), col("n_ratings"),
         when(col("n_items") > 0L, expr("__pisum div n_items")).as("pbar_micro"),
         when(col("n_items") > 0L,
@@ -555,24 +605,10 @@ object Preferences {
   def krippendorffAlpha(
       ratings: DataFrame, itemCol: String, raterCol: String,
       labelCol: String): DataFrame = {
-    val nik = collapseRatings(ratings, itemCol, raterCol, labelCol)
-      .groupBy(col("item"), col("label"))
-      .agg(count(lit(1)).as("nik"))
-      .localCheckpoint(eager = false) // reused by the per-item pass AND the marginals
-    val byItem = nik.groupBy(col("item"))
-      .agg(sum(col("nik")).as("ni"),
-        sum(col("nik") * (col("nik") - 1L)).as("agr"))
-      .filter(col("ni") >= 2L)
-      .withColumn("okk_micro", expr("(agr * 1000000L) div (ni - 1L)"))
-      .localCheckpoint(eager = false) // reused: the top-line aggregate + the kept-item filter
-    val top = byItem.agg(
-      count(lit(1)).as("n_items"),
-      coalesce(sum(col("ni")), lit(0L)).as("n_ratings"),
-      coalesce(sum(col("okk_micro")), lit(0L)).as("__okksum"))
-    val marg = nik.join(byItem.select(col("item")), Seq("item"))
-      .groupBy(col("label")).agg(sum(col("nik")).as("ck"))
-      .agg(coalesce(sum(col("ck") * (col("ck") - 1L)), lit(0L)).as("__ce"))
-    top.crossJoin(broadcast(marg))
+    panelCore(ratings, itemCol, raterCol, labelCol,
+        itemTerm = "agr" -> col("nik") * (col("nik") - 1L),
+        itemMicro = "okk_micro" -> "(agr * 1000000L) div (ni - 1L)",
+        labelTerm = "__ce" -> col("ck") * (col("ck") - 1L))
       .select(col("n_items"), col("n_ratings"),
         when(col("n_items") > 0L && col("n_ratings") >= 2L,
           expr("n_ratings * 1000000L - __okksum")).as("do_micro"),
@@ -594,7 +630,8 @@ object Preferences {
     * BT's transitivity assumption fits the panel at all).
     *
     * Predictions come from the same fixed-iteration fit the pipeline
-    * ships ([[btStrengths]]); each canonical pair (a<b) contributes
+    * ships ([[btStrengths]], fit here from the pair matrix it bins);
+    * each canonical pair (a<b) contributes
     * its games to the bin of pa_micro = s_a·1e6 div (s_a+s_b), bin =
     * min(pa_micro·bins div 1e6, bins−1). Output: one row per occupied
     * bin (bin, n_pairs, n_games, pred_micro = games-weighted mean
@@ -604,15 +641,18 @@ object Preferences {
     * Scale: the pair matrix is ≤ |items|² and the strengths table
     * |items|-sized — two item-keyed joins (broadcast when items fit)
     * and one ≤ bins-row aggregate; the corpus is touched exactly once,
-    * inside [[btStrengths]]' own setup.
+    * by the one [[pairStats]] aggregate that both the fit and the bins
+    * read.
     */
   def btCalibration(
       games: DataFrame, winnerCol: String, loserCol: String,
       iterations: Int = 4, bins: Int = 10): DataFrame = {
     require(bins >= 2, s"btCalibration: need at least 2 bins, got $bins")
-    val strengths = btStrengths(games, winnerCol, loserCol, iterations)
+    require(iterations >= 1, "btCalibration: need at least one iteration")
+    val (pairs, directed, totals) =
+      btSetupFromPairs(pairStats(games, winnerCol, loserCol), 1L)
+    val strengths = btRun(directed, totals, iterations, None)._1
       .select(col("item"), col("strength_micro"))
-    val pairs = pairStats(games, winnerCol, loserCol)
     pairs
       .join(strengths.select(col("item").as("item_a"),
         col("strength_micro").as("__sa")), Seq("item_a"))
@@ -796,10 +836,7 @@ object Preferences {
   def consensusLabels(
       ratings: DataFrame, itemCol: String, raterCol: String,
       labelCol: String): DataFrame = {
-    val nik = collapseRatings(ratings, itemCol, raterCol, labelCol)
-      .groupBy(col("item"), col("label"))
-      .agg(count(lit(1)).as("votes"))
-      .localCheckpoint(eager = false) // reused: the per-item totals AND the winner filter
+    val nik = labelCounts(ratings, itemCol, raterCol, labelCol, "votes")
     val byItem = nik.groupBy(col("item"))
       .agg(sum(col("votes")).as("n_ratings"), max(col("votes")).as("__top"))
     nik.join(byItem, Seq("item"))
@@ -859,40 +896,7 @@ object Preferences {
       ratings: DataFrame, itemCol: String, raterCol: String, labelCol: String,
       raterA: String, raterB: String, waveCol: String): DataFrame = {
     require(raterA != raterB, "kappaDrift: raters must differ")
-    val one = ratings
-      .select(col(waveCol).as("wave"), col(itemCol).as("item"),
-        col(raterCol).cast("string").as("rater"),
-        col(labelCol).cast("string").as("label"))
-      .filter(col("wave").isNotNull && col("item").isNotNull &&
-        col("label").isNotNull &&
-        (col("rater") === raterA || col("rater") === raterB))
-      .groupBy(col("wave"), col("item"), col("rater"))
-      .agg(min(col("label")).as("label"))
-    val a = one.filter(col("rater") === raterA)
-      .select(col("wave"), col("item"), col("label").as("la"))
-    val b = one.filter(col("rater") === raterB)
-      .select(col("wave"), col("item"), col("label").as("lb"))
-    // reused by the agreement aggregate AND both marginals — one scan
-    val both = a.join(b, Seq("wave", "item")).localCheckpoint(eager = false)
-    val agg = both.groupBy(col("wave")).agg(
-      count(lit(1)).as("n_items"),
-      coalesce(sum(when(col("la") === col("lb"), 1L)), lit(0L)).as("n_agree"))
-    val ca = both.groupBy(col("wave"), col("la").as("label"))
-      .agg(count(lit(1)).as("ca"))
-    val cb = both.groupBy(col("wave"), col("lb").as("label"))
-      .agg(count(lit(1)).as("cb"))
-    val chance = ca.join(cb, Seq("wave", "label"))
-      .groupBy(col("wave"))
-      .agg(coalesce(sum(col("ca") * col("cb")), lit(0L)).as("cross"))
-    val k = agg.join(chance, Seq("wave"))
-      .select(col("wave"), col("n_items"), col("n_agree"),
-        when(col("n_items") > 0L,
-          expr("(n_agree * 1000000L) div n_items")).as("po_micro"),
-        when(col("n_items") > 0L,
-          expr("(cross * 1000000L) div (n_items * n_items)")).as("pe_micro"))
-      .withColumn("kappa_micro",
-        when(col("pe_micro") < 1000000L,
-          expr("((po_micro - pe_micro) * 1000000L) div (1000000L - pe_micro)")))
+    val k = kappaCore(ratings, itemCol, raterCol, labelCol, raterA, raterB, Some(waveCol))
       .localCheckpoint(eager = false) // summary frame, referenced by the self-join below
     val prevWave = k.select(col("wave")).as("c")
       .join(k.select(col("wave").as("__w2")).as("p"), col("__w2") < col("wave"))
@@ -957,35 +961,8 @@ object Preferences {
       iterations: Int = 8, countDiv: Long = 1L): DataFrame = {
     require(iterations >= 1, "btConvergence: need at least one iteration")
     require(countDiv >= 1, "btConvergence: countDiv must be >= 1")
-    val (directed, totals) = btSetup(games, winnerCol, loserCol, countDiv)
-    btDeltas(directed, totals, iterations)
+    val (_, directed, totals) =
+      btSetupFromPairs(pairStats(games, winnerCol, loserCol), countDiv)
+    btRun(directed, totals, iterations, None)._2()
   }
-
-  private def btDeltas(
-      directed: DataFrame, totals: DataFrame, iterations: Int): DataFrame =
-    btFoldLocal(directed, totals, iterations, None) match {
-      case Some((_, _, localDeltas)) =>
-        import org.apache.spark.sql.types._
-        import scala.jdk.CollectionConverters._
-        val rows: java.util.List[org.apache.spark.sql.Row] =
-          localDeltas.zipWithIndex.map { case (d, k) =>
-            org.apache.spark.sql.Row(k + 1, d.map(java.lang.Long.valueOf).orNull)
-          }.toSeq.asJava
-        val schema = StructType(Seq(
-          StructField("iteration", IntegerType, nullable = false),
-          StructField("max_delta_micro", LongType)))
-        totals.sparkSession.createDataFrame(rows, schema)
-      case None =>
-        var s = btInit(totals, None)
-        val deltas = (1 to iterations).map { i =>
-          val next = btStep(directed, totals, s)
-          val row = s.select(col("item"), col("s_micro").as("__prev"))
-            .join(next, Seq("item"))
-            .agg(max(abs(col("s_micro") - col("__prev"))).as("max_delta_micro"))
-            .select(lit(i).as("iteration"), col("max_delta_micro"))
-          s = next
-          row
-        }
-        deltas.reduce(_ unionByName _)
-    }
 }

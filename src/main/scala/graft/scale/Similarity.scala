@@ -103,8 +103,8 @@ object Similarity {
     * scale keep |queries| bounded (a recall sample) or use annTopK /
     * ivfTopK; the cross join broadcasts the query side, so the corpus
     * is never shuffled.
-    */
-  /** @param excludeSelf drop corpus rows whose id equals the query id —
+    *
+    * @param excludeSelf drop corpus rows whose id equals the query id —
     *        only meaningful when queries are drawn FROM the corpus; set
     *        false for held-out queries whose id namespace is unrelated
     *        (an accidental id collision would silently drop a neighbor)
@@ -183,13 +183,14 @@ object Similarity {
       weightCol: String = "similarity", ascending: Boolean = false): DataFrame = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     val cidType = scored.schema("__cid__").dataType
-    val orderWeight = if (ascending) asc(weightCol) else desc(weightCol)
+    val weight = graft.ops.Cleaning.qcol(weightCol)
+    val orderWeight = if (ascending) weight.asc else weight.desc
     cidType match {
       case LongType | IntegerType | ShortType | ByteType =>
         scored
           .groupBy(col("__qid__"))
           .agg(graft.functions.Aggregates.topKByDoubleWeight(
-            col("__cid__").cast("long"), col(weightCol).cast("double"), k, ascending).as("__tk__"))
+            col("__cid__").cast("long"), weight.cast("double"), k, ascending).as("__tk__"))
           .select(col("__qid__"), posexplode(col("__tk__")).as(Seq("__pos__", "__e__")))
           .select(col("__qid__").as(queryIdCol),
             col("__e__.value").cast(cidType).as(idCol),
@@ -202,11 +203,11 @@ object Similarity {
         // stealing the top-k is exactly the divergence this fallback
         // must not have ("identical result by the same total order")
         val w = Window.partitionBy(col("__qid__")).orderBy(orderWeight, asc("__cid__"))
-        scored.filter(col(weightCol).isNotNull && col("__cid__").isNotNull)
+        scored.filter(weight.isNotNull && col("__cid__").isNotNull)
           .withColumn("rank", row_number().over(w))
           .filter(col("rank") <= k)
           .select(col("__qid__").as(queryIdCol), col("__cid__").as(idCol),
-            col(weightCol), col("rank"))
+            weight, col("rank"))
     }
   }
 
@@ -232,7 +233,7 @@ object Similarity {
       Array.tabulate(tables, bits)((t, p) => hyperplane(seed, t, p, dim).toArray)
     val keys = graft.functions.Native.hyperplaneLshKeys(graft.ops.Cleaning.qcol(vecCol), planes)
     df.select(
-      (df.columns.map(col) :+ posexplode(keys).as(Seq("table", "lsh_key"))).toIndexedSeq: _*)
+      (df.columns.map(graft.ops.Cleaning.qcol) :+ posexplode(keys).as(Seq("table", "lsh_key"))).toIndexedSeq: _*)
   }
 
   /** IVF (inverted-file) approximate top-k: a KMeans coarse quantizer
@@ -382,8 +383,8 @@ object Similarity {
     * (query, candidate) — at high `tables` the carry-vectors form did
     * up to `tables`× redundant cosine work on every multi-table
     * collision before the dedup aggregate could drop it.
-    */
-  /** EXACT-COLLAPSE prepass (`collapseIdentical`, ON by default):
+    *
+    * EXACT-COLLAPSE prepass (`collapseIdentical`, ON by default):
     * corpus rows with byte-identical vectors collapse to one
     * representative (min id) before the LSH bucket join — every stage
     * (bucketing, candidate dedup, cosine) then runs once per DISTINCT
@@ -419,7 +420,8 @@ object Similarity {
       val mem = groups.select(col("__rid__").as("__r__"),
         slice(col("__mids__"), 1, k + 1).as("__mk__"))
       val scored = repTop
-        .select(col(queryIdCol).as("__qid__"), col(idCol).as("__r__"), col("similarity"))
+        .select(graft.ops.Cleaning.qcol(queryIdCol).as("__qid__"), id.as("__r__"),
+          col("similarity"))
         .join(mem, "__r__")
         .select(col("__qid__"), explode(col("__mk__")).as("__cid__"), col("similarity"))
         .filter(col("__qid__") =!= col("__cid__"))
@@ -485,8 +487,9 @@ object Similarity {
     require(kRrf >= 1, s"kRrf must be >= 1, got $kRrf")
     val q = graft.ops.Cleaning.qcol(queryIdCol)
     val id = graft.ops.Cleaning.qcol(idCol)
-    val ra = a.select(q, id, col(rankCol).cast("int").as("rank_a"))
-    val rb = b.select(q, id, col(rankCol).cast("int").as("rank_b"))
+    val rank = graft.ops.Cleaning.qcol(rankCol).cast("int")
+    val ra = a.select(q, id, rank.as("rank_a"))
+    val rb = b.select(q, id, rank.as("rank_b"))
     ra.join(rb, Seq(queryIdCol, idCol), "full_outer")
       .select(q, id, col("rank_a"), col("rank_b"),
         (coalesce(lit(1.0) / (lit(kRrf.toDouble) + col("rank_a").cast("double")), lit(0.0)) +

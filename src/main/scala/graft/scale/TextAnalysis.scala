@@ -205,11 +205,6 @@ object TextAnalysis {
       .groupBy(col("lang"), col("pred_lang"))
       .agg(count(lit(1)).as("n_docs"))
 
-  /** Quality metrics per document — length, punctuation/digit/whitespace
-    * ratios, English-stopword ratio, and a boolean keep-flag with fixed
-    * thresholds. All ratios are exact-integer divisions (deterministic
-    * across engines).
-    */
   /** The quality keep-predicate as a standalone row-local expression
     * (shared by `qualityTable` and `cleanCorpus`). */
   def qualityKeep(t: Column): Column = qualityKeepFromCount(t, tokenCount(t))
@@ -230,6 +225,11 @@ object TextAnalysis {
       ((chars - nonPunct) / when(chars > 0, chars)) < lit(0.3)
   }
 
+  /** Quality metrics per document — length, punctuation/digit/whitespace
+    * ratios, English-stopword ratio, and a boolean keep-flag with fixed
+    * thresholds. All ratios are exact-integer divisions (deterministic
+    * across engines).
+    */
   def qualityTable(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val t = graft.ops.Cleaning.qcol(textCol)
     val chars = length(t)
@@ -536,6 +536,22 @@ object TextAnalysis {
         graft.ops.Rounding.halfUp(col("lift"), 6).as("lift"))
   }
 
+  /** One term's BM25 contribution in half-up micro-units — the SINGLE
+    * definition both retrieval forms ([[bm25TopK]], [[bm25TopKMany]])
+    * and their oracles mirror; every factor must associate exactly as
+    * the oracle SQL writes it (IEEE +,*,/ are deterministic given the
+    * same association; ln() drift is absorbed by the 6-dp grid). */
+  private def bm25Contrib(
+      tf: Column, dfc: Column, dl: Column, nd: Column, tt: Column,
+      k1: Double, b: Double): Column = {
+    val idf = log(lit(1.0) +
+      (nd.cast("double") - dfc.cast("double") + lit(0.5)) / (dfc.cast("double") + lit(0.5)))
+    val tfn = (tf.cast("double") * lit(k1 + 1.0)) /
+      (tf.cast("double") + lit(k1) * (lit(1.0 - b) +
+        lit(b) * (dl.cast("double") / (tt.cast("double") / nd.cast("double")))))
+    floor(idf * tfn * lit(1000000.0) + lit(0.5))
+  }
+
   /** BM25 top-k retrieval for one query string — the lexical-search
     * ranking (Robertson/Spärck Jones; the BM25+ no-negative idf form:
     * idf = ln(1 + (N − df + ½)/(df + ½))) over the whitespace token
@@ -558,22 +574,6 @@ object TextAnalysis {
     * that long (divide by 10⁶ for the float score). Ties break by id;
     * zero-score docs (no query term present) are excluded.
     */
-  /** One term's BM25 contribution in half-up micro-units — the SINGLE
-    * definition both retrieval forms ([[bm25TopK]], [[bm25TopKMany]])
-    * and their oracles mirror; every factor must associate exactly as
-    * the oracle SQL writes it (IEEE +,*,/ are deterministic given the
-    * same association; ln() drift is absorbed by the 6-dp grid). */
-  private def bm25Contrib(
-      tf: Column, dfc: Column, dl: Column, nd: Column, tt: Column,
-      k1: Double, b: Double): Column = {
-    val idf = log(lit(1.0) +
-      (nd.cast("double") - dfc.cast("double") + lit(0.5)) / (dfc.cast("double") + lit(0.5)))
-    val tfn = (tf.cast("double") * lit(k1 + 1.0)) /
-      (tf.cast("double") + lit(k1) * (lit(1.0 - b) +
-        lit(b) * (dl.cast("double") / (tt.cast("double") / nd.cast("double")))))
-    floor(idf * tfn * lit(1000000.0) + lit(0.5))
-  }
-
   def bm25TopK(
       df: DataFrame, idCol: String, textCol: String, query: String,
       k: Int = 10, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
@@ -706,35 +706,6 @@ object TextAnalysis {
     }
   }
 
-  /** Unigram log-probability scoring — the degenerate-but-honest form
-    * of CCNet-style LM quality filtering (Wenzek et al. 2020 filter
-    * web text by LM perplexity; a unigram model is the variant whose
-    * every step a SQL oracle can replay). Each document scores the
-    * MEAN log probability of its tokens under a reference unigram
-    * model built from a trusted corpus: boilerplate/gibberish scores
-    * low, plain prose high — the standard pre-training corpus filter
-    * signal alongside [[qualityTable]].
-    *
-    * Model: top-`vocabSize` reference tokens by (count desc, token asc)
-    * with add-one smoothing — p(t) = (cnt+1)/(total+V+1) for in-vocab,
-    * 1/(total+V+1) for OOV, where `total` sums the KEPT vocabulary and
-    * V is its size.
-    *
-    * Determinism (the long-moment trick, cf. zscore/corrMatrix): log p
-    * is rounded HALF-UP to 6 dp (micro-nats — ample for a filter
-    * signal) and scaled to a LONG once per vocab token; every
-    * per-document step after that — count × logp, Σ over tokens — is
-    * exact integer arithmetic, so the result is partition/order-
-    * invariant and engine-exact (a raw double Σ log p would vary with
-    * Spark's reduction order and could never hash-gate; and 6 dp keeps
-    * the per-token rounding boundary ~10³ further from any cross-engine
-    * ln() ulp than 9 dp would).
-    *
-    * Scale: reference pass = one explode + hash agg + TakeOrdered-V
-    * (V is model-sized, broadcastable); document pass = explode, one
-    * (doc, token) hash agg, broadcast join against the V-row model,
-    * one doc-keyed agg. Nothing scales with corpus × vocab.
-    */
   /** The broadcastable add-one-smoothed unigram model behind
     * [[unigramLogProbTable]], exposed for callers that score the SAME
     * document pass against several reference models at once
@@ -771,6 +742,35 @@ object TextAnalysis {
       .groupBy(graft.ops.Cleaning.qcol(idCol), col("__tok"))
       .agg(count(lit(1)).as("__n"))
 
+  /** Unigram log-probability scoring — the degenerate-but-honest form
+    * of CCNet-style LM quality filtering (Wenzek et al. 2020 filter
+    * web text by LM perplexity; a unigram model is the variant whose
+    * every step a SQL oracle can replay). Each document scores the
+    * MEAN log probability of its tokens under a reference unigram
+    * model built from a trusted corpus: boilerplate/gibberish scores
+    * low, plain prose high — the standard pre-training corpus filter
+    * signal alongside [[qualityTable]].
+    *
+    * Model: top-`vocabSize` reference tokens by (count desc, token asc)
+    * with add-one smoothing — p(t) = (cnt+1)/(total+V+1) for in-vocab,
+    * 1/(total+V+1) for OOV, where `total` sums the KEPT vocabulary and
+    * V is its size.
+    *
+    * Determinism (the long-moment trick, cf. zscore/corrMatrix): log p
+    * is rounded HALF-UP to 6 dp (micro-nats — ample for a filter
+    * signal) and scaled to a LONG once per vocab token; every
+    * per-document step after that — count × logp, Σ over tokens — is
+    * exact integer arithmetic, so the result is partition/order-
+    * invariant and engine-exact (a raw double Σ log p would vary with
+    * Spark's reduction order and could never hash-gate; and 6 dp keeps
+    * the per-token rounding boundary ~10³ further from any cross-engine
+    * ln() ulp than 9 dp would).
+    *
+    * Scale: reference pass = one explode + hash agg + TakeOrdered-V
+    * (V is model-sized, broadcastable); document pass = explode, one
+    * (doc, token) hash agg, broadcast join against the V-row model,
+    * one doc-keyed agg. Nothing scales with corpus × vocab.
+    */
   def unigramLogProbTable(
       df: DataFrame, idCol: String, textCol: String,
       ref: DataFrame, refTextCol: String, vocabSize: Int = 65536,
@@ -1857,16 +1857,6 @@ object TextAnalysis {
     maskBySpanStarts(base, spans, dup, idCol, w)
   }
 
-  /** One-call corpus-preparation pipeline — the standard training-data
-    * recipe as a single composition:
-    *   1. quality filter (length/punctuation thresholds, `qualityTable`)
-    *   2. language filter (`langIdTable` prediction ∈ allowedLangs)
-    *   3. near-dup dedup on the survivors (n-gram Jaccard pairs →
-    *      connected components → keep the min-id representative)
-    * Returns the surviving rows with all original columns. Every stage
-    * is a narrow map or bucket-local join (SCALE.md §4/§5); nothing here
-    * caps at corpus size.
-    */
   /** One learned BPE merge: `left`+`right` → `left+right`, with the
     * pair's occurrence count at the step it was learned. */
   final case class BpeMerge(rank: Int, left: String, right: String, pairCount: Long)
@@ -2285,6 +2275,16 @@ object TextAnalysis {
       flatten(transform(reps, r => bpeUnits(r))).as("tokens"))
   }
 
+  /** One-call corpus-preparation pipeline — the standard training-data
+    * recipe as a single composition:
+    *   1. quality filter (length/punctuation thresholds, `qualityTable`)
+    *   2. language filter (`langIdTable` prediction ∈ allowedLangs)
+    *   3. near-dup dedup on the survivors (n-gram Jaccard pairs →
+    *      connected components → keep the min-id representative)
+    * Returns the surviving rows with all original columns. Every stage
+    * is a narrow map or bucket-local join (SCALE.md §4/§5); nothing here
+    * caps at corpus size.
+    */
   def cleanCorpus(
       df: DataFrame, idCol: String, textCol: String,
       allowedLangs: Seq[String],

@@ -15,7 +15,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * (`$name` / `${...}` interpolations still count), a name two objects
   * share counts as used for both, and a recursive call counts as a
   * reference. `main`, `apply` and `unapply` are called without their
-  * name appearing, so they are not checked. */
+  * name appearing, so they are not checked.
+  *
+  * The same scan of src/main also rejects a scaladoc block directly
+  * followed by another: scaladoc keeps only the last of the two, so the
+  * first drops out of the generated docs. */
 class UnreferencedSpec extends AnyFunSuite {
 
   /** Defs kept without a caller, each with its reason. */
@@ -116,5 +120,16 @@ class UnreferencedSpec extends AnyFunSuite {
         unreferenced.map { case (name, p) => s"  $name ($p)" }.mkString("\n"))
     val stale = keep.keySet -- defs.map(_._1).toSet
     assert(stale.isEmpty, s"keep-list names no longer defined: ${stale.mkString(", ")}")
+  }
+
+  test("no scaladoc block in src/main is directly followed by another") {
+    val stranded = """\*/\s*/\*\*""".r
+    val sites = scalaFiles("src/main").flatMap { p =>
+      val src = Files.readString(p)
+      stranded.findAllMatchIn(src).map(m => s"  $p:${src.take(m.start).count(_ == '\n') + 1}")
+    }
+    assert(sites.isEmpty,
+      "merge the two blocks, move the first onto its def, or delete it with its def:\n" +
+        sites.mkString("\n"))
   }
 }

@@ -65,6 +65,74 @@ class DottedNamesSpec extends AnyFunSuite {
     same("degreeAudit")((e, s, d, _) => Graph.degreeAudit(e, s, d))
   }
 
+  test("preference operators on dotted winner/loser and item/rater/label/wave names equal the plain-named run") {
+    import org.apache.spark.sql.DataFrame
+    import graft.scale.Preferences
+    val games = (for (a <- 1 to 6; b <- 1 to 6 if a < b; r <- 1 to (a + b) % 3 + 1)
+      yield if ((a * 5 + b * 3 + r) % 4 < 2) (a.toLong, b.toLong) else (b.toLong, a.toLong))
+      .toDF("winner", "loser")
+    val dottedGames = games.toDF("winner.id", "loser.id")
+    // rater c skips every 5th item, so the panel is ragged
+    val ratings = (for (i <- 1 to 12; r <- Seq("a", "b", "c") if !(r == "c" && i % 5 == 0))
+      yield (i.toLong, r, if ((i * 3 + r.head) % 4 < 2) "x" else "y", (i % 3).toLong))
+      .toDF("item", "rater", "label", "wave")
+    val dottedRatings = ratings.toDF("item.id", "rater.id", "label.v", "wave.n")
+    def sorted(df: DataFrame) = df.orderBy(df.columns.map(Cleaning.qcol): _*).collect().toSeq
+    def sameGames(name: String)(run: (DataFrame, String, String) => DataFrame): Unit =
+      assert(sorted(run(dottedGames, "winner.id", "loser.id")) ===
+        sorted(run(games, "winner", "loser")), name)
+    def sameRatings(name: String)(
+        run: (DataFrame, String, String, String, String) => DataFrame): Unit =
+      assert(sorted(run(dottedRatings, "item.id", "rater.id", "label.v", "wave.n")) ===
+        sorted(run(ratings, "item", "rater", "label", "wave")), name)
+    sameGames("itemStats")(Preferences.itemStats)
+    sameGames("pairStats")(Preferences.pairStats)
+    sameGames("btStrengths")((g, w, l) => Preferences.btStrengths(g, w, l))
+    sameGames("btConvergence")((g, w, l) => Preferences.btConvergence(g, w, l, iterations = 3))
+    sameGames("winRateWilson")((g, w, l) => Preferences.winRateWilson(g, w, l))
+    sameGames("btCalibration")((g, w, l) => Preferences.btCalibration(g, w, l))
+    sameGames("coverageAudit")((g, w, l) => Preferences.coverageAudit(g, w, l))
+    sameRatings("cohenKappa")((r, i, ra, l, _) => Preferences.cohenKappa(r, i, ra, l, "a", "b"))
+    sameRatings("fleissKappa")((r, i, ra, l, _) => Preferences.fleissKappa(r, i, ra, l))
+    sameRatings("krippendorffAlpha")((r, i, ra, l, _) => Preferences.krippendorffAlpha(r, i, ra, l))
+    sameRatings("consensusLabels")((r, i, ra, l, _) => Preferences.consensusLabels(r, i, ra, l))
+    sameRatings("raterConsensusAgreement")(
+      (r, i, ra, l, _) => Preferences.raterConsensusAgreement(r, i, ra, l))
+    sameRatings("raterAgreementMatrix")(
+      (r, i, ra, l, _) => Preferences.raterAgreementMatrix(r, i, ra, l))
+    sameRatings("kappaDrift")(
+      (r, i, ra, l, w) => Preferences.kappaDrift(r, i, ra, l, "a", "b", w))
+  }
+
+  test("annTopK on dotted id/query-id names equals the plain-named run") {
+    import org.apache.spark.sql.DataFrame
+    import graft.scale.Similarity
+    // 24 vectors, 8 distinct: the default exact-collapse path expands members
+    val corpus = (0L until 24L).map { i =>
+      (i, Array.tabulate(8)(j => (math.sin((i % 4 + i / 8) * 0.37 + j) + 2.0).toFloat))
+    }.toDF("vec", "embedding")
+    val queries = corpus.filter($"vec" < 3L).toDF("query", "embedding")
+    def run(c: DataFrame, q: DataFrame, id: String, qid: String) =
+      Similarity.annTopK(c, q, id, "embedding", qid, k = 3, bits = 4, tables = 4, dim = 8)
+        .collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq
+    val plain = run(corpus, queries, "vec", "query")
+    assert(plain.nonEmpty)
+    assert(run(corpus.toDF("vec.id", "embedding"), queries.toDF("query.id", "embedding"),
+      "vec.id", "query.id") === plain)
+  }
+
+  test("rrfFuse on a dotted rank name equals the plain-named run") {
+    import org.apache.spark.sql.DataFrame
+    import graft.scale.Similarity
+    val la = Seq((1L, 10L, 1), (1L, 11L, 2), (2L, 20L, 1)).toDF("query", "doc", "rank")
+    val lb = Seq((1L, 11L, 1), (1L, 12L, 2)).toDF("query", "doc", "rank")
+    def run(a: DataFrame, b: DataFrame, rank: String) =
+      Similarity.rrfFuse(a, b, "query", "doc", rankCol = rank)
+        .collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq
+    assert(run(la.toDF("query", "doc", "rank.r"), lb.toDF("query", "doc", "rank.r"), "rank.r") ===
+      run(la, lb, "rank"))
+  }
+
   test("fullTabulation + codebook recode on dotted names") {
     assert(Tabulation.fullTabulation(df).select("column").distinct().count() == 4)
     val r = Cleaning.applyCodebook(df, Map("Q2. Gender" -> Map("Male" -> "M")))

@@ -80,6 +80,27 @@ class PreferencesSpec extends AnyFunSuite {
     assert(curveD === curveL)
   }
 
+  test("distributed BT loop: the analyzed plan is the same size at 5 and 9 iterations") {
+    // every MM step ends in a barrier, so a deeper run adds no plan
+    // nodes: lineage stays bounded at any iteration count
+    import org.apache.spark.sql.DataFrame
+    val g = (for (a <- 1 to 9; b <- 1 to 9 if a < b; r <- 1 to (a * b) % 3 + 1)
+      yield if ((a * 5 + b * 11 + r) % 7 < 4) (a.toLong, b.toLong) else (b.toLong, a.toLong))
+      .toDF("winner", "loser")
+    def planSize(df: DataFrame): Int = df.queryExecution.analyzed.collect { case p => p }.size
+    SparkTestSession.withConf(DriverFold.Conf, "0") {
+      val pairs = Preferences.pairStats(g, "winner", "loser")
+      val prev = Preferences.btStrengths(g, "winner", "loser", iterations = 2)
+      Seq[(String, Int => DataFrame)](
+        "btStrengths" -> (n => Preferences.btStrengths(g, "winner", "loser", iterations = n)),
+        "btStrengthsFromPairs" -> (n =>
+          Preferences.btStrengthsFromPairs(pairs, iterations = n, init = Some(prev)))
+      ).foreach { case (name, run) =>
+        assert(planSize(run(5)) === planSize(run(9)), name)
+      }
+    }
+  }
+
   test("btConvergence: decaying deltas; the default 4 iterations is rank-stable vs 8") {
     // a denser deterministic tournament than `games`: 12 items, every
     // pair played 1-4 times with a hash-seeded but fixed outcome
