@@ -2,6 +2,7 @@ package graft.bht
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.config.MappingConfig
 import graft.ops.Tabulation
 
 /** BHT table builders (SURVEY.md §3.2): awareness, usage funnel, brand
@@ -9,41 +10,30 @@ import graft.ops.Tabulation
   */
 object Builders {
 
-  /** `build_awareness_tables` (app.py:385-417): TOM via value_counts (A1,
-    * renamed to brand/count), unaided + aided via selected-counts (A6).
-    * Returns only the tables whose source columns exist — same presence
-    * rules as the reference.
+  /** TOM awareness of `build_awareness_tables` (app.py:385-395): value
+    * counts (A1) renamed to (brand, count), when the column is present.
     */
-  def awarenessTables(
-      df: DataFrame,
-      tom: Option[String],
-      unaided: Seq[String],
-      aided: Seq[String]): Map[String, DataFrame] = {
-    val t = tom.filter(df.columns.contains).map { c =>
-      "tom" -> Tabulation.valueCounts(df, c).withColumnRenamed("option", "brand")
+  def awarenessTom(df: DataFrame, tom: Option[String]): Option[DataFrame] =
+    tom.filter(df.columns.contains).map { c =>
+      Tabulation.valueCounts(df, c).withColumnRenamed("option", "brand")
     }
-    val u = Option(unaided.filter(df.columns.contains)).filter(_.nonEmpty)
-      .map(cs => "unaided" -> Tabulation.selectedCounts(df, cs))
-    val a = Option(aided.filter(df.columns.contains)).filter(_.nonEmpty)
-      .map(cs => "aided" -> Tabulation.selectedCounts(df, cs))
-    (t ++ u ++ a).toMap
-  }
 
-  /** `build_usage_tables` (app.py:420-434): ever_used / bumo / consider,
-    * each a selected-count table (A6).
+  /** The selected-count tables (A6) of `build_awareness_tables` (unaided,
+    * aided; app.py:396-415) and `build_usage_tables` (ever_used, bumo,
+    * consider; app.py:420-434), under the names the reference exports. A
+    * group with no column present in `df` gets no table — the
+    * reference's presence rule.
     */
-  def usageTables(
-      df: DataFrame,
-      everUsed: Seq[String],
-      bumo: Seq[String],
-      consider: Seq[String]): Map[String, DataFrame] = {
-    Seq("ever_used" -> everUsed, "bumo" -> bumo, "consider" -> consider)
-      .flatMap { case (name, cols) =>
-        val present = cols.filter(df.columns.contains)
-        if (present.isEmpty) None
-        else Some(name -> Tabulation.selectedCounts(df, present))
-      }.toMap
-  }
+  private[graft] def selectedTables(df: DataFrame, cfg: MappingConfig): Seq[(String, Tabulation.FixedTable)] =
+    Seq(
+      "awareness_unaided" -> cfg.awareness.unaided,
+      "awareness_aided" -> cfg.awareness.aided,
+      "usage_ever_used" -> cfg.usage.ever_used,
+      "usage_bumo" -> cfg.usage.bumo,
+      "usage_consider" -> cfg.usage.consider
+    ).collect { case (name, cols) if cols.exists(df.columns.contains) =>
+      name -> Tabulation.selectedTable(df, cols)
+    }
 
   /** Brand dictionary (app.py:462-476 + 495-503): TOM brands from data
     * values (T10), all other groups from column headers (T7). Long format

@@ -2,7 +2,7 @@ package graft.bht
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.ops.Cleaning
+import graft.ops.{Cleaning, Tabulation}
 
 /** Survey KPI builders (SURVEY.md §2.3 A7/A8).
   *
@@ -25,7 +25,13 @@ object Kpis {
     * The weighted core at weight 1.0: `sum(1.0·s)/sum(1.0)` is `avg(s)`.
     */
   def csatSummary(df: DataFrame, csatCol: String): DataFrame =
-    melt(csatCore(df, csatCol, lit(1.0), Nil), array(Seq("mean", "top2_box", "n").map(kv): _*))
+    csatTable(csatCol, csatMax(df, csatCol)).of(df)
+
+  /** [[csatSummary]] as a [[Tabulation.FixedTable]] at the observed max
+    * `mx` (see [[csatMax]]): rows mean, top2_box, n. */
+  private[graft] def csatTable(csatCol: String, mx: Option[Double]): Tabulation.FixedTable =
+    Tabulation.FixedTable(csatAggs(csatCol, lit(1.0), mx),
+      ref => array(Seq("mean", "top2_box", "n").map(kv(ref)): _*), Seq("metric", "value"))
 
   /** A8 — `build_nps_table` (app.py:447-459).
     * Buckets over the numeric-coerced score: detractors 0–6, passives 7–8,
@@ -35,12 +41,16 @@ object Kpis {
     * The weighted core at weight 1.0; one lazy aggregate, no job at
     * construction.
     */
-  def npsSummary(df: DataFrame, npsCol: String): DataFrame = {
-    val head = Seq("nps", "n").map(kv)
-    val buckets = Seq("promoters", "passives", "detractors").map(kv)
-    melt(npsCore(df, npsCol, lit(1.0), Nil),
-      when(col("n") =!= 0, array(head ++ buckets: _*)).otherwise(array(head: _*)))
-  }
+  def npsSummary(df: DataFrame, npsCol: String): DataFrame = npsTable(npsCol).of(df)
+
+  /** [[npsSummary]] as a [[Tabulation.FixedTable]]. */
+  private[graft] def npsTable(npsCol: String): Tabulation.FixedTable =
+    Tabulation.FixedTable(npsAggs(npsCol, lit(1.0)), { ref =>
+      val at = (m: String) => if (m == "nps") nps(ref) else ref(m)
+      val head = Seq("nps", "n").map(kv(at))
+      val buckets = Seq("promoters", "passives", "detractors").map(kv(at))
+      when(ref("n") =!= 0, array(head ++ buckets: _*)).otherwise(array(head: _*))
+    }, Seq("metric", "value"))
 
   /** Weighted CSAT per group (beyond-reference, pairs with
     * npsSummaryWeighted): weighted mean, weighted top-2-box share (same
@@ -64,42 +74,52 @@ object Kpis {
       groupCols: Seq[String] = Nil): DataFrame =
     npsCore(df, npsCol, Cleaning.weightExpr(df, Some(weightCol)), groupCols)
 
-  private def csatCore(df: DataFrame, csatCol: String, w: Column, groupCols: Seq[String]): DataFrame = {
-    val s = Cleaning.toNumeric(Cleaning.qcol(csatCol))
-    val maxRow = df.agg(max(s)).collect()(0)
-    val top2 =
-      if (maxRow.isNullAt(0)) lit(null).cast("double")
-      else {
-        val mx = maxRow.getDouble(0)
-        coalesce(sum(when(s >= mx - 1, w)), lit(0.0)) / when(sum(w) =!= 0, sum(w))
-      }
-    df.groupBy(groupCols.map(Cleaning.qcol): _*).agg(
-      (coalesce(sum(when(s.isNotNull, w * s)), lit(0.0)) /
-        when(sum(when(s.isNotNull, w)) =!= 0, sum(when(s.isNotNull, w)))).as("mean"),
-      top2.as("top2_box"),
-      coalesce(sum(when(s.isNotNull, w)), lit(0.0)).as("n"))
+  /** The observed max of the numeric-coerced CSAT column (None when it
+    * is entirely null) — the top-2-box threshold's eager first pass. */
+  private[graft] def csatMax(df: DataFrame, csatCol: String): Option[Double] = {
+    val maxRow = df.agg(max(Cleaning.toNumeric(Cleaning.qcol(csatCol)))).collect()(0)
+    if (maxRow.isNullAt(0)) None else Some(maxRow.getDouble(0))
   }
 
-  private def npsCore(df: DataFrame, npsCol: String, w: Column, groupCols: Seq[String]): DataFrame = {
+  /** CSAT's aggregate columns (mean, top2_box, n) at weight `w`. */
+  private def csatAggs(csatCol: String, w: Column, mx: Option[Double]): Seq[(String, Column)] = {
+    val s = Cleaning.toNumeric(Cleaning.qcol(csatCol))
+    val top2 = mx.fold(lit(null).cast("double")) { m =>
+      coalesce(sum(when(s >= m - 1, w)), lit(0.0)) / when(sum(w) =!= 0, sum(w))
+    }
+    Seq(
+      "mean" -> (coalesce(sum(when(s.isNotNull, w * s)), lit(0.0)) /
+        when(sum(when(s.isNotNull, w)) =!= 0, sum(when(s.isNotNull, w)))),
+      "top2_box" -> top2,
+      "n" -> coalesce(sum(when(s.isNotNull, w)), lit(0.0)))
+  }
+
+  private def csatCore(df: DataFrame, csatCol: String, w: Column, groupCols: Seq[String]): DataFrame =
+    grouped(df, groupCols, csatAggs(csatCol, w, csatMax(df, csatCol)))
+
+  /** NPS's bucket and n aggregate columns at weight `w`. */
+  private def npsAggs(npsCol: String, w: Column): Seq[(String, Column)] = {
     val s = Cleaning.toNumeric(Cleaning.qcol(npsCol))
-    df.groupBy(groupCols.map(Cleaning.qcol): _*).agg(
-        coalesce(sum(when(s.between(0, 6), w)), lit(0.0)).as("detractors"),
-        coalesce(sum(when(s.between(7, 8), w)), lit(0.0)).as("passives"),
-        coalesce(sum(when(s.between(9, 10), w)), lit(0.0)).as("promoters"),
-        coalesce(sum(when(s.isNotNull, w)), lit(0.0)).as("n"))
-      .withColumn("nps",
-        when(col("n") =!= 0,
-          (col("promoters") / col("n") - col("detractors") / col("n")) * 100))
+    Seq(
+      "detractors" -> coalesce(sum(when(s.between(0, 6), w)), lit(0.0)),
+      "passives" -> coalesce(sum(when(s.between(7, 8), w)), lit(0.0)),
+      "promoters" -> coalesce(sum(when(s.between(9, 10), w)), lit(0.0)),
+      "n" -> coalesce(sum(when(s.isNotNull, w)), lit(0.0)))
+  }
+
+  /** nps over the aggregate columns `ref` reads; null when n is 0. */
+  private def nps(ref: String => Column): Column =
+    when(ref("n") =!= 0, (ref("promoters") / ref("n") - ref("detractors") / ref("n")) * 100)
+
+  private def npsCore(df: DataFrame, npsCol: String, w: Column, groupCols: Seq[String]): DataFrame =
+    grouped(df, groupCols, npsAggs(npsCol, w)).withColumn("nps", nps(col))
+
+  private def grouped(df: DataFrame, groupCols: Seq[String], aggs: Seq[(String, Column)]): DataFrame = {
+    val named = aggs.map { case (n, a) => a.as(n) }
+    df.groupBy(groupCols.map(Cleaning.qcol): _*).agg(named.head, named.tail: _*)
   }
 
   /** One long-format row: the metric's name and its value as a double. */
-  private def kv(metric: String): Column =
-    struct(lit(metric).as("metric"), col(metric).cast("double").as("value"))
-
-  /** 1-row aggregate → long `(metric, value)` format, one row per
-    * element of the `rows` array of [[kv]] structs. */
-  private def melt(oneRow: DataFrame, rows: Column): DataFrame =
-    oneRow
-      .select(explode(rows).as("kv"))
-      .select(col("kv.metric").as("metric"), col("kv.value").as("value"))
+  private def kv(ref: String => Column)(metric: String): Column =
+    struct(lit(metric).as("metric"), ref(metric).cast("double").as("value"))
 }

@@ -1,7 +1,17 @@
 package graft.io
 
-import org.apache.spark.sql.DataFrame
 import java.nio.file.{Files, Paths}
+import java.util.UUID
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+import org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.classic.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
 
 /** Sinks (SURVEY.md §2.1 S5–S7).
   *
@@ -13,11 +23,75 @@ import java.nio.file.{Files, Paths}
   */
 object Sinks {
 
-  /** Primary at-scale sink: one Parquet dir per table. */
+  /** Primary at-scale sink: one Parquet dir per table, overwritten.
+    *
+    * A driver-resident table — one whose optimized plan is a
+    * non-streaming `LocalRelation`, as Transform's fixed-shape tables
+    * and the crosstabs are — is written from the driver with no Spark
+    * job (Spark's `LocalTableScanExec.executeCollect` idea applied to
+    * the sink): Spark's own `ParquetFileFormat.prepareWrite` →
+    * `OutputWriterFactory` → one `OutputWriter`, through the path's
+    * Hadoop `FileSystem`, so remote paths work too. The directory is what
+    * `df.write` leaves — one `part-00000-<uuid>-c000.snappy.parquet`
+    * (an empty table still gets one file with a footer) and `_SUCCESS`
+    * — and the file is the one a Spark task would write: same schema,
+    * nullability and footer metadata. Every other frame, and a local one
+    * whose schema is not flat, named uniquely and parquet-writable,
+    * takes `df.write` unchanged.
+    */
   def writeParquet(tables: Map[String, DataFrame], outDir: String): Unit =
     tables.foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$outDir/${sheetName(name)}")
+      val path = s"$outDir/${sheetName(name)}"
+      df.queryExecution.optimizedPlan match {
+        case r: LocalRelation if !r.isStreaming && writableOnDriver(r.schema) =>
+          writeLocalParquet(df.queryExecution.sparkSession, r, path)
+        case _ => df.write.mode("overwrite").parquet(path)
+      }
     }
+
+  /** Flat, uniquely named (case-insensitively), at least one column, and
+    * every type one parquet writes: the schemas whose validation the
+    * driver write can skip. Anything else goes to `df.write`, which
+    * raises Spark's own error for what it rejects. */
+  private def writableOnDriver(schema: StructType): Boolean =
+    schema.nonEmpty &&
+      schema.map(_.name.toLowerCase(java.util.Locale.ROOT)).distinct.size == schema.size &&
+      schema.forall(f => f.dataType match {
+        case _: StructType | _: ArrayType | _: MapType => false
+        case t => new ParquetFileFormat().supportDataType(t)
+      })
+
+  /** One parquet file of `rel`'s rows, written on the driver as a Spark
+    * write task would, then `_SUCCESS`. The file is written under a
+    * hidden name and renamed, so it appears only complete. */
+  private def writeLocalParquet(session: SparkSession, rel: LocalRelation, dir: String): Unit = {
+    val conf = session.sessionState.newHadoopConf()
+    val out0 = new Path(dir)
+    val fs = out0.getFileSystem(conf)
+    val out = fs.makeQualified(out0)
+    if (fs.exists(out) && !fs.delete(out, true))
+      throw new java.io.IOException(s"writeParquet: cannot clear $out for overwrite")
+    fs.mkdirs(out)
+    val job = Job.getInstance(conf)
+    job.setOutputKeyClass(classOf[Void])
+    job.setOutputValueClass(classOf[InternalRow])
+    FileOutputFormat.setOutputPath(job, out)
+    val factory = new ParquetFileFormat().prepareWrite(session, job, Map.empty, rel.schema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID("local", 0, TaskType.MAP, 0, 0))
+    val file = s"part-00000-${UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}"
+    val staged = new Path(out, s"_temporary-$file")
+    try {
+      val writer = factory.newInstance(staged.toString, rel.schema, ctx)
+      try rel.data.foreach(writer.write) finally writer.close()
+      if (!fs.rename(staged, new Path(out, file)))
+        throw new java.io.IOException(s"writeParquet: cannot rename $staged")
+    } catch {
+      case e: Throwable => fs.delete(staged, false); throw e
+    }
+    fs.create(new Path(out, "_SUCCESS"), true).close()
+    session.sharedState.cacheManager.recacheByPath(session, out, fs)
+  }
 
   /** WET sink — emit (url, date, text) rows as WARC/1.0 "conversion"
     * records ([[Warc]] documents the format): each row renders to one

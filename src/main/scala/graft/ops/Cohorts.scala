@@ -27,10 +27,14 @@ object Cohorts {
       events: DataFrame, userCol: String = "user_id", tsCol: String = "ts",
       idCol: String = "event_id", typeCol: String = "event_type"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col(userCol)).orderBy(col(tsCol), col(idCol))
+    val u = Cleaning.qcol(userCol)
+    val ts = Cleaning.qcol(tsCol)
+    val id = Cleaning.qcol(idCol)
+    val tp = Cleaning.qcol(typeCol)
+    val w = Window.partitionBy(u).orderBy(ts, id)
     events
-      .filter(col(userCol).isNotNull && col(tsCol).isNotNull && col(typeCol).isNotNull)
-      .select(col(userCol), col(tsCol), col(idCol), col(typeCol).as("e1"))
+      .filter(u.isNotNull && ts.isNotNull && tp.isNotNull)
+      .select(u, ts, id, tp.as("e1"))
       .withColumn("e2", lead(col("e1"), 1).over(w))
       .withColumn("e3", lead(col("e1"), 2).over(w))
       .filter(col("e2").isNotNull && col("e3").isNotNull)

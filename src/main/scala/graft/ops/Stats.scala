@@ -376,7 +376,7 @@ object Stats {
     // the probe set: bounded top-N exact counts (count desc, key asc)
     val exact = nonNull.groupBy(c.as(keyCol))
       .agg(count(lit(1)).as("n_exact"))
-      .orderBy(col("n_exact").desc, col(keyCol).asc)
+      .orderBy(col("n_exact").desc, c.asc)
       .limit(probeKeys)
       .collect()
     val n = sketch.totalCount()
@@ -1561,20 +1561,24 @@ object Stats {
       .agg(count(lit(1)).as("__o"))
     // the level-cap guards ride inside the consumed margin columns, so
     // they fire BEFORE the cross join can materialize an oversized
-    // lattice (and survive optimization — the consumed-expression rule)
-    def guarded(m: DataFrame, keyCol: String, sumCol: String, side: String) = {
-      val w = Window.partitionBy()
+    // lattice (and survive optimization — the consumed-expression rule).
+    // Each margin also carries its level count (`levelsCol`), so |A| and
+    // |B| come from the margins, not from a distinct count over the
+    // lattice, which would plan an Expand.
+    def guarded(m: DataFrame, sumCol: String, levelsCol: String, side: String) = {
+      val levels = count(lit(1)).over(Window.partitionBy())
       m.withColumn(sumCol,
-        when(count(lit(1)).over(w) > MaxChiSquareLevels,
+        when(levels > MaxChiSquareLevels,
           raise_error(concat(lit(s"chiSquareIndependence: more than " +
             s"$MaxChiSquareLevels levels in '$side' — band the column first ("),
-            count(lit(1)).over(w), lit(" levels)"))).cast("long"))
+            levels, lit(" levels)"))).cast("long"))
           .otherwise(col(sumCol)))
+        .withColumn(levelsCol, levels)
     }
     val ra = guarded(cells.groupBy(col("__va")).agg(sum(col("__o")).as("__ra")),
-      "__va", "__ra", colA)
+      "__ra", "__na", colA)
     val cb = guarded(cells.groupBy(col("__vb")).agg(sum(col("__o")).as("__cb")),
-      "__vb", "__cb", colB)
+      "__cb", "__nb", colB)
     val tot = cells.agg(sum(col("__o")).as("__n"))
     val num = (col("__o") * col("__n") - col("__ra") * col("__cb")).cast("double")
     val term = num * num / (col("__ra") * col("__cb")).cast("double") /
@@ -1614,8 +1618,8 @@ object Stats {
     val lat = chiSquareLattice(df, colA, colB)
     lat.agg(
         max(col("__n")).as("n"),
-        countDistinct(col("__va")).as("n_a"),
-        countDistinct(col("__vb")).as("n_b"),
+        coalesce(max(col("__na")), lit(0L)).as("n_a"),
+        coalesce(max(col("__nb")), lit(0L)).as("n_b"),
         sum(col("__tm")).as("chi2_micro"))
       // empty/all-NULL input collapses the lattice to n_a = n_b = 0;
       // (0-1)*(0-1) = 1 would be a misleading dof — emit NULL instead

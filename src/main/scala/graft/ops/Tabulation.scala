@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Frequency / tabulation operators (SURVEY.md §2.3: A1, A2, A5, A6, A10).
@@ -97,6 +97,25 @@ object Tabulation {
       .agg(count(lit(1)).as("count"))
   }
 
+  /** A table whose shape its arguments fix, never the data: named global
+    * aggregates over the input, and `rows`, the array of row structs
+    * built from them, where `ref` reads one aggregate by its name.
+    * [[of]] is the standalone lazy frame; `Transform` evaluates several
+    * of these in one fused aggregate and keeps the rows on the driver.
+    */
+  private[graft] final case class FixedTable(
+      aggs: Seq[(String, Column)], rows: (String => Column) => Column, fields: Seq[String]) {
+
+    /** One global aggregate (no shuffle beyond the 1-row final reduce),
+      * melted to one row per struct of `rows`. No job runs here. */
+    def of(df: DataFrame): DataFrame = {
+      val named = aggs.map { case (n, a) => a.as(n) }
+      df.agg(named.head, named.tail: _*)
+        .select(explode(rows(Cleaning.qcol)).as("kv"))
+        .select(fields.map(f => col(s"kv.$f").as(f)): _*)
+    }
+  }
+
   /** A6 — selected-count per multi-select column (app.py:396-415,422-430):
     * for each column, count rows satisfying the T6 "selected" predicate;
     * one row per column, schema (brand, count). UNweighted — the reference
@@ -104,18 +123,19 @@ object Tabulation {
     *
     * Single pass: one conditional-sum aggregate per column in ONE job
     * (no shuffle at all — global agg with partial aggregation), then a
-    * driver-side melt of the 1-row result.
+    * melt of the 1-row result.
     */
-  def selectedCounts(df: DataFrame, columns: Seq[String]): DataFrame = {
+  def selectedCounts(df: DataFrame, columns: Seq[String]): DataFrame =
+    selectedTable(df, columns).of(df)
+
+  /** [[selectedCounts]] as a [[FixedTable]]: one row per present column. */
+  private[graft] def selectedTable(df: DataFrame, columns: Seq[String]): FixedTable = {
     val present = columns.filter(df.columns.contains)
     require(present.nonEmpty, s"selectedCounts: none of $columns present")
-    val aggs = present.map(c =>
-      sum(when(Cleaning.selected(Cleaning.qcol(c)), 1L).otherwise(0L)).as(c))
-    val row = df.agg(aggs.head, aggs.tail: _*)
-    val pairs = present.map(c => struct(lit(c).as("brand"), Cleaning.qcol(c).as("count")))
-    row
-      .select(explode(array(pairs: _*)).as("kv"))
-      .select(col("kv.brand").as("brand"), col("kv.count").as("count"))
+    FixedTable(
+      present.map(c => c -> sum(when(Cleaning.selected(Cleaning.qcol(c)), 1L).otherwise(0L))),
+      ref => array(present.map(c => struct(lit(c).as("brand"), ref(c).as("count"))): _*),
+      Seq("brand", "count"))
   }
 
   /** T10 — distinct trimmed non-empty values of a column, sorted

@@ -1,10 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 import graft.config.MappingConfig
 import graft.bht.{Builders, Kpis}
 import graft.ops.{Cleaning, Tabulation}
+import graft.ops.Tabulation.FixedTable
 
 /** §3.2 orchestration — the reference's "🚀 Transform Data" path
   * (app.py:462-531): mapping config → named result tables
@@ -13,7 +16,19 @@ import graft.ops.{Cleaning, Tabulation}
   *
   * Every builder rescans the input, so the input is cached once
   * (the reference's analogue: `raw_df` lives in memory, app.py:203).
-  * All outputs are lazy DataFrames; sinks trigger execution.
+  *
+  * Two kinds of table come out:
+  *  - Fixed-shape tables — awareness_unaided/aided, usage_*,
+  *    satisfaction_summary, nps_summary — have one row per configured
+  *    column or a fixed list of metric rows, so their size is bounded by
+  *    the config, never by the data. They are computed while Transform
+  *    runs, in ONE fused global aggregate over the cached input (after
+  *    CSAT's eager max pass, which top-2-box needs), and come back as
+  *    driver-resident frames (`LocalRelation`s) with the standalone
+  *    operators' schemas. A sink writes them without another Spark job.
+  *  - awareness_tom, brand_dictionary and tabulation grow with the
+  *    data's distinct values; they stay lazy, distributed frames that
+  *    the sinks trigger.
   */
 object Transform {
 
@@ -41,19 +56,15 @@ object Transform {
     val df0 = if (codebook.nonEmpty) Cleaning.applyCodebook(raw, codebook) else raw
     val df = df0.persist(StorageLevel.MEMORY_AND_DISK)
 
-    val aware = Builders
-      .awarenessTables(df, cfg.awareness.tom, cfg.awareness.unaided, cfg.awareness.aided)
-      .map { case (k, v) => s"awareness_$k" -> v }
-
-    val usage = Builders
-      .usageTables(df, cfg.usage.ever_used, cfg.usage.bumo, cfg.usage.consider)
-      .map { case (k, v) => s"usage_$k" -> v }
-
     val csat = cfg.satisfaction.csat.filter(df.columns.contains)
-      .map(c => "satisfaction_summary" -> Kpis.csatSummary(df, c))
+      .map(c => "satisfaction_summary" -> Kpis.csatTable(c, Kpis.csatMax(df, c)))
 
     val nps = cfg.nps.score.filter(df.columns.contains)
-      .map(c => "nps_summary" -> Kpis.npsSummary(df, c))
+      .map(c => "nps_summary" -> Kpis.npsTable(c))
+
+    val fixed = onDriver(df, Builders.selectedTables(df, cfg) ++ csat ++ nps)
+
+    val tom = Builders.awarenessTom(df, cfg.awareness.tom).map("awareness_tom" -> _)
 
     val groups = Map(
       "Unaided" -> cfg.awareness.unaided,
@@ -66,6 +77,30 @@ object Transform {
 
     val tab = "tabulation" -> Tabulation.fullTabulation(df)
 
-    (aware ++ usage ++ csat ++ nps ++ brandDict + tab, () => { df.unpersist(); () })
+    (fixed ++ tom ++ brandDict + tab, () => { df.unpersist(); () })
   }
+
+  /** Every fixed-shape table from ONE global aggregate over `df`: each
+    * table's aggregates under positional aliases, each table's row array
+    * beside them, one row collected. The driver only unpacks each array
+    * into the table's rows; Spark computes every value, with the same
+    * expressions as the standalone operator, whose schema (names, types,
+    * nullability) the driver-resident frame takes. No job for no table.
+    */
+  private def onDriver(df: DataFrame, tables: Seq[(String, FixedTable)]): Map[String, DataFrame] =
+    if (tables.isEmpty) Map.empty
+    else {
+      def alias(i: Int, j: Int) = s"__t${i}_$j"
+      val aggs = for {
+        ((_, t), i) <- tables.zipWithIndex
+        ((_, a), j) <- t.aggs.zipWithIndex
+      } yield a.as(alias(i, j))
+      val rows = tables.zipWithIndex.map { case ((_, t), i) =>
+        t.rows(m => col(alias(i, t.aggs.indexWhere(_._1 == m))))
+      }
+      val row = df.agg(aggs.head, aggs.tail: _*).select(rows: _*).collect()(0)
+      tables.zipWithIndex.map { case ((name, t), i) =>
+        name -> df.sparkSession.createDataFrame(row.getSeq[Row](i).asJava, t.of(df).schema)
+      }.toMap
+    }
 }

@@ -160,4 +160,106 @@ class IoSpec extends AnyFunSuite {
     java.nio.file.Files.copy(one, renamed)
     assert(Sources.readTable(spark, renamed.toString).count() > 0)
   }
+
+  // --- writeParquet: driver-resident frames are written without a job ---
+
+  private def localFrame(rows: Seq[org.apache.spark.sql.Row]) = {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("name", StringType),
+      StructField("n.id", LongType, nullable = false),
+      StructField("score", DoubleType),
+      StructField("at", TimestampType),
+      StructField("note", StringType)))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  private val sample = {
+    import org.apache.spark.sql.Row
+    Seq(
+      Row("a", 1L, 1.5, java.sql.Timestamp.valueOf("2024-01-02 03:04:05.123456"), null),
+      Row(null, 2L, null, null, null),
+      Row("c.d", -3L, Double.NaN, java.sql.Timestamp.valueOf("1999-12-31 23:59:59"), "x"))
+  }
+
+  private def partFiles(dir: String): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    Files.list(java.nio.file.Paths.get(dir)).iterator.asScala
+      .filter(_.getFileName.toString.startsWith("part-")).toSeq
+  }
+
+  /** The parquet schema (required/optional included) and Spark's row
+    * metadata in the footer of a part file of `dir`. */
+  private def footer(dir: String): (String, Option[String]) = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val in = HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(partFiles(dir).head.toString),
+      spark.sparkContext.hadoopConfiguration)
+    val r = ParquetFileReader.open(in)
+    try {
+      val meta = r.getFooter.getFileMetaData
+      (meta.getSchema.toString,
+        Option(meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata")))
+    } finally r.close()
+  }
+
+  private def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try { f; org.apache.spark.ListenerDrain(sc) } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("writeParquet of a local frame equals Spark's write: footer schema, nullability, rows") {
+    val dir = Files.createTempDirectory("graft_local_pq").toString
+    val df = localFrame(sample)
+    Sinks.writeParquet(Map("t" -> df), dir)
+    df.write.parquet(s"$dir/spark")
+    assert(partFiles(s"$dir/t").size == 1)
+    assert(partFiles(s"$dir/t").head.getFileName.toString
+      .matches("part-00000-[0-9a-f-]{36}-c000\\.snappy\\.parquet"))
+    assert(Files.exists(java.nio.file.Paths.get(s"$dir/t/_SUCCESS")))
+    val (schema, meta) = footer(s"$dir/t")
+    assert((schema, meta) == footer(s"$dir/spark"))
+    assert(schema.contains("required int64 n.id") && schema.contains("optional binary name"))
+    val (ours, theirs) = (spark.read.parquet(s"$dir/t"), spark.read.parquet(s"$dir/spark"))
+    assert(ours.schema == theirs.schema)
+    assert(ours.collect().map(_.toString).sorted.toSeq == theirs.collect().map(_.toString).sorted.toSeq)
+    assert(ours.collect().map(_.toString).sorted.toSeq == df.collect().map(_.toString).sorted.toSeq)
+  }
+
+  test("writeParquet of an empty local frame writes one footer-only file; a rewrite overwrites") {
+    val dir = Files.createTempDirectory("graft_local_pq2").toString
+    val empty = localFrame(Nil)
+    Sinks.writeParquet(Map("t" -> empty), dir)
+    empty.write.parquet(s"$dir/spark")
+    assert(partFiles(s"$dir/t").size == 1)
+    assert(footer(s"$dir/t") == footer(s"$dir/spark"))
+    assert(spark.read.parquet(s"$dir/t").schema == spark.read.parquet(s"$dir/spark").schema)
+    assert(spark.read.parquet(s"$dir/t").count() == 0)
+    // overwrite: the directory holds exactly the new table afterwards
+    Sinks.writeParquet(Map("t" -> localFrame(sample)), dir)
+    Sinks.writeParquet(Map("t" -> localFrame(sample.take(2))), dir)
+    assert(partFiles(s"$dir/t").size == 1)
+    assert(spark.read.parquet(s"$dir/t").count() == 2)
+  }
+
+  test("writeParquet runs no Spark job for a local frame and the usual jobs otherwise") {
+    val dir = Files.createTempDirectory("graft_local_pq3").toString
+    val local = localFrame(sample)
+    assert(local.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(jobsOf(Sinks.writeParquet(Map("local" -> local), dir)) == 0)
+    val distributed = spark.range(0, 10, 1, 2).toDF("id")
+    assert(jobsOf(Sinks.writeParquet(Map("range" -> distributed), dir)) > 0)
+    assert(spark.read.parquet(s"$dir/range").count() == 10)
+    assert(spark.read.parquet(s"$dir/local").count() == 3)
+  }
 }

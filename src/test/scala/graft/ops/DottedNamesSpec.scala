@@ -138,4 +138,22 @@ class DottedNamesSpec extends AnyFunSuite {
     val r = Cleaning.applyCodebook(df, Map("Q2. Gender" -> Map("Male" -> "M")))
     assert(r.filter(Cleaning.qcol("Q2. Gender") === "M").count() == 1)
   }
+
+  test("eventTrigrams on dotted user/ts/id/type names equals the plain-named run") {
+    import org.apache.spark.sql.DataFrame
+    val plain = (0L until 60L).map(i => (i % 4, (i * 7) % 23, i, s"t${i % 3}"))
+      .toDF("user_id", "ts", "event_id", "event_type")
+    def run(e: DataFrame, u: String, ts: String, id: String, tp: String) =
+      Cohorts.eventTrigrams(e, u, ts, id, tp)
+        .collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq
+    assert(run(plain.toDF("u.id", "ts.x", "e.id", "type.t"), "u.id", "ts.x", "e.id", "type.t") ===
+      run(plain, "user_id", "ts", "event_id", "event_type"))
+  }
+
+  test("countMinGate on a dotted key name equals the plain-named run") {
+    val plain = (0L until 200L).map(i => (i % 13) * (i % 3)).toDF("k")
+    def run(d: org.apache.spark.sql.DataFrame, key: String) =
+      Stats.countMinGate(d, key, probeKeys = 5).collect().map(_.toSeq).toSeq
+    assert(run(plain.toDF("k.id"), "k.id") === run(plain, "k"))
+  }
 }

@@ -64,4 +64,70 @@ class TransformSpec extends AnyFunSuite {
     assert(out((2, "A")) == (1.0, Some(-1.0))) // A lost a mention
     assert(out((2, "B")) == (3.0, Some(2.0)))  // B gained two
   }
+
+  // --- the fixed-shape tables: one fused aggregate, driver-resident ---
+
+  private val survey = "src/test/resources/survey"
+  private lazy val waveCfg = MappingConfig.load(s"$survey/mapping_config.json")
+  private lazy val codebook = graft.io.Sources.readCodebook(spark, s"$survey/codebook.csv")
+  private lazy val wave = graft.io.Sources.readCsv(spark, s"$survey/wave1.csv")
+
+  /** Query executions (actions) `f` runs, counted on the drained bus. */
+  private def executionsOf[A](f: => A): (A, Int) = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        n.incrementAndGet()
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.ListenerDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      val a = f
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      (a, n.get)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("fixed-shape tables are driver-resident with the standalone operators' schemas") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import graft.bht.Kpis
+    import graft.ops.{Cleaning, Tabulation}
+    val (out, release) = Transform.runReleasable(wave, waveCfg, codebook)
+    val df = Cleaning.applyCodebook(wave, codebook)
+    val standalone = Map(
+      "awareness_unaided" -> Tabulation.selectedCounts(df, waveCfg.awareness.unaided),
+      "awareness_aided" -> Tabulation.selectedCounts(df, waveCfg.awareness.aided),
+      "usage_ever_used" -> Tabulation.selectedCounts(df, waveCfg.usage.ever_used),
+      "usage_bumo" -> Tabulation.selectedCounts(df, waveCfg.usage.bumo),
+      "usage_consider" -> Tabulation.selectedCounts(df, waveCfg.usage.consider),
+      "satisfaction_summary" -> Kpis.csatSummary(df, waveCfg.satisfaction.csat.get),
+      "nps_summary" -> Kpis.npsSummary(df, waveCfg.nps.score.get))
+    try standalone.foreach { case (name, op) =>
+      assert(out(name).queryExecution.optimizedPlan.isInstanceOf[LocalRelation], name)
+      assert(out(name).schema == op.schema, name)
+      assert(out(name).collect().map(_.toString).sorted.toSeq ==
+        op.collect().map(_.toString).sorted.toSeq, name)
+    } finally release()
+    // the data-sized tables stay distributed
+    Seq("awareness_tom", "brand_dictionary", "tabulation").foreach { name =>
+      assert(!out(name).queryExecution.optimizedPlan.isInstanceOf[LocalRelation], name)
+    }
+  }
+
+  test("building Transform runs at most two aggregate executions; a TOM-only config none") {
+    // the CSV's schema inference and the codebook's collect are the
+    // reads' executions, not Transform's
+    wave.schema
+    codebook.size
+    val ((_, release), full) = executionsOf(Transform.runReleasable(wave, waveCfg, codebook))
+    release()
+    assert(full <= 2, s"$full executions")
+    val tomOnly = MappingConfig(awareness = AwarenessCfg(tom = Some("tom")))
+    val (_, none) = executionsOf(Transform.run(Seq("A", "A", "B").toDF("tom"), tomOnly))
+    assert(none == 0, s"$none executions")
+  }
 }
